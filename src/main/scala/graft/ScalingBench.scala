@@ -3,7 +3,6 @@ package graft
 import graft.bench.Baseline
 import graft.corpus.Corpus
 import graft.encode.TableCodec
-import org.apache.spark.sql.functions._
 
 /** N-vs-4N scaling + blosc2-baseline evidence for BENCH/BASELINE.md
   * (the sandbox stand-in for two cluster sizes, per the north rule: run
@@ -14,6 +13,7 @@ import org.apache.spark.sql.functions._
   * GC state cannot bleed between parallelism levels:
   *
   *   runMain graft.ScalingBench level <nRows> <cpus> <partitions>
+  *   runMain graft.ScalingBench dup <nRows> <partitions>
   *   runMain graft.ScalingBench baseline <nRows> <partitions>
   *
   * `partitions` is held constant across levels so both process the
@@ -32,44 +32,6 @@ object ScalingBench {
       println(f"""{"level":{"cpus":$cpus,"nRows":$nRows,"gb":$gb%.3f,""" +
         f""""encodeGBps":${r("encode_gbps")}%.4f,"decodeGBps":${r("decode_gbps")}%.4f,""" +
         f""""encodeSec":${r("encode_sec")}%.2f,"decodeSec":${r("decode_sec")}%.2f,"ratio":${r("ratio")}%.3f}}""")
-      spark.stop()
-
-    // In-JVM A/B of the decode row-emission paths (reused mutable row vs
-    // allocate-per-row), interleaved so host noise hits both arms alike.
-    case "decodeab" :: nRows :: cpus :: parts :: reps :: Nil =>
-      val spark = Bench.session(cpus)
-      val path = s"/tmp/graft-bench/corpus-$nRows-$parts.parquet"
-      if (!new java.io.File(path).exists())
-        Corpus.generate(spark, nRows.toLong, parts.toInt).toDF()
-          .write.mode("overwrite").option("compression", "none").parquet(path)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString)
-      spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
-      val corpus = spark.read.parquet(path)
-      val nBytes = corpus.select(
-        sum(length(col("content")) + length(col("repo")) + length(col("path")) +
-          length(col("commit")) + length(col("lang")))).head().getLong(0)
-      val blocksPath = s"/tmp/graft-bench/blocks-ab-$nRows-$parts"
-      if (!new java.io.File(blocksPath).exists())
-        graft.encode.StoreLayout.write(TableCodec.encode(corpus),
-          corpus.schema.fieldNames.toSeq, blocksPath)
-      val blocks = graft.encode.StoreLayout.readBlocks(spark, blocksPath)
-      def pass(): Double = Bench.time {
-        TableCodec.decode(blocks, corpus.schema)
-          .select(sum(length(col("content")))).head()
-      }._2
-      pass(); pass() // warmup both JIT profiles
-      val times = collection.mutable.Map("reuse" -> List.empty[Double], "alloc" -> List.empty[Double])
-      for (_ <- 1 to reps.toInt; arm <- Seq("reuse", "alloc")) {
-        System.setProperty("graft.decode.reuseRow", (arm == "reuse").toString)
-        System.setProperty("graft.decode.reuseBuf", (arm == "reuse").toString)
-        times(arm) ::= pass()
-      }
-      System.clearProperty("graft.decode.reuseRow")
-      System.clearProperty("graft.decode.reuseBuf")
-      def stats(l: List[Double]) = f"best=${l.min}%.3fs med=${l.sorted.apply(l.size / 2)}%.3fs gbps=${nBytes / 1e9 / l.min}%.3f"
-      println(s"""decode A/B over ${nBytes / 1e9} GB x ${reps} reps @ local[$cpus]:""")
-      println(s"  reuse-row : ${stats(times("reuse"))}")
-      println(s"  alloc-row : ${stats(times("alloc"))}")
       spark.stop()
 
     // engine-vs-baseline on the 25%-vendored-dup corpus (the LDM regime)
@@ -107,7 +69,7 @@ object ScalingBench {
       blocks.unpersist(); corpus.unpersist(); spark.stop()
 
     case other =>
-      System.err.println(s"usage: level <nRows> <cpus> <partitions> | baseline <nRows> <partitions>; got $other")
+      System.err.println(s"usage: level <nRows> <cpus> <partitions> | dup <nRows> <partitions> | baseline <nRows> <partitions>; got $other")
       sys.exit(2)
   }
 }

@@ -103,8 +103,8 @@ object Entropy {
   // window to cover the whole body (<= 2^24; zstd's DEFAULT decoder
   // window-log limit is 27, so frames stay readable by the untouched
   // decompress path — frames are self-describing, no format change) and
-  // enable LDM. Measured on 16 MiB chunk-shaped bodies
-  // (graft.bench.LdmProbe): +22% ratio at 30% dup files, but -0.1..-0.7%
+  // enable LDM. Measured on 16 MiB chunk-shaped bodies (BENCH/BASELINE.md,
+  // "Round-5 late session"): +22% ratio at 30% dup files, but -0.1..-0.7%
   // size and -10..-30% speed on dup-FREE bodies — hence hint-gated, not
   // blanket. Deterministic in (srcLen, hint) → task retries emit
   // identical bytes. A separate ctx keeps the plain-ZSTD ctx's
@@ -278,7 +278,7 @@ object ChunkCodec {
   val LDM_DUP_MIN_VALUE = 1024
   /** Duplicate mass (bytes in values whose fingerprint was already
     * seen / total value bytes) at which LDM pays for itself — measured
-    * break-even is ~1-2% (LdmProbe).
+    * break-even is ~1-2% (BENCH/BASELINE.md, "Round-5 late session").
     */
   val LDM_DUP_FRAC = 0.02
 
@@ -444,9 +444,8 @@ object ChunkCodec {
     // reader's buffer past this call)
     val body =
       if (entropy == Entropy.NONE) new Bytes.Reader(block, r.pos)
-      else if (reuseBuf) new Bytes.Reader(
+      else new Bytes.Reader(
         Entropy.decompressScratch(entropy, block, r.pos, block.length - r.pos, rawLen))
-      else new Bytes.Reader(Entropy.decompress(entropy, r.getBytes(block.length - r.pos), rawLen))
     val validity = if (nulls > 0) readValidity(body, n) else null
     colType match {
       case ColType.LONG => LongVec(LongKernels.decode(method, body, n, validity), validity)
@@ -455,12 +454,6 @@ object ChunkCodec {
       case t => throw new IllegalArgumentException(s"colType $t")
     }
   }
-
-  /** Measurement hook only (-Dgraft.decode.reuseBuf=false re-times the
-    * allocate-per-chunk body path); scratch reuse is the product path.
-    */
-  private def reuseBuf: Boolean =
-    java.lang.Boolean.parseBoolean(System.getProperty("graft.decode.reuseBuf", "true"))
 
   /** (method, entropy) of an encoded block without decoding it. */
   def peekPlan(block: Array[Byte]): Plan = Plan(block(3), block(4), block(5) & 0xff)

@@ -92,10 +92,10 @@ object Selector {
   }
 
   /** Cost model: size + priced CPU time, with DETERMINISTIC per-plan
-    * time constants (ns per input byte, measured single-core by
-    * graft.bench.MicroBench on this container) instead of wall-clock,
-    * so task retries choose identical plans. Same pattern as the
-    * reference's measured planner constants
+    * time constants (ns per input byte, measured single-core; perfbench's
+    * traced run reports them as `codecs.encode_ns_per_b.<plan>`) instead
+    * of wall-clock, so task retries choose identical plans. Same pattern
+    * as the reference's measured planner constants
     * (python-blosc2 ctable_indexing.py:238-242).
     */
   def nsPerByte(p: Plan): Double = {

@@ -4,7 +4,7 @@ import graft.codecs._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.graftshim.InternalRowShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -252,7 +252,6 @@ object TableCodec {
     }
     val extra = shardColName.size
     val outTypes = outSchema.fields.map(_.dataType).toIndexedSeq
-    val reuse = reuseRows
     val rdd = blocks.rdd.mapPartitions { it =>
       // one mutable row per task, reused across every emitted row: the
       // planner's scan node (RDDScanExec) copies each row through an
@@ -260,73 +259,47 @@ object TableCodec {
       // producer contract Spark's own Row-based sources rely on. This
       // removes the per-row Array[Any] + per-value box churn that made
       // decode GC-bound at the default heap.
-      val row = if (reuse) new SpecificInternalRow(outTypes) else null
+      val row = new SpecificInternalRow(outTypes)
       it.flatMap(block => rowsOfBlock(block, names, dts, withShard = extra == 1, reuseRow = row))
     }
     InternalRowShim.createDataFrame(spark, rdd, outSchema)
   }
 
-  /** Measurement hook only (-Dgraft.decode.reuseRow=false re-times the
-    * allocate-per-row path); the reused-row path is the product path.
-    * Read per decode() call so an in-JVM A/B can flip it between passes.
-    */
-  private def reuseRows: Boolean =
-    java.lang.Boolean.parseBoolean(System.getProperty("graft.decode.reuseRow", "true"))
-
   /** Decode one block into InternalRows. `positions` (if non-null)
     * gathers only those row indexes, in the given order — the
     * index-gather fast path (cf. reference positional gather,
     * python-blosc2 ctable_indexing.py gather constants).
-    */
-  /** @param reuseRow when non-null, every emitted row IS this instance,
-    *                  mutated in place (valid only until the next
-    *                  `next()`). Callers must sit behind a copying
-    *                  consumer — `InternalRowShim.createDataFrame` is
-    *                  one: its scan node projects each row to unsafe
-    *                  before anything buffers it. When `withShard`, the
-    *                  row needs `names.length + 1` fields.
+    *
+    * @param reuseRow every emitted row IS this instance, mutated in
+    *                 place (valid only until the next `next()`).
+    *                 Callers must sit behind a copying consumer —
+    *                 `InternalRowShim.createDataFrame` is one: its scan
+    *                 node projects each row to unsafe before anything
+    *                 buffers it. When `withShard`, the row needs
+    *                 `names.length + 1` fields.
     */
   def rowsOfBlock(block: EncodedBlock, names: Array[String], dts: Array[DataType],
-                  withShard: Boolean, positions: Array[Int] = null,
-                  reuseRow: SpecificInternalRow = null): Iterator[InternalRow] = {
+                  withShard: Boolean, reuseRow: SpecificInternalRow,
+                  positions: Array[Int] = null): Iterator[InternalRow] = {
     val byName = block.cols.map(c => c.name -> c).toMap
     val vecs = names.map(n => decodeColumn(byName(n)))
-    if (reuseRow != null) {
-      val writers = new Array[ColWriter](names.length)
-      var c = 0
-      while (c < names.length) { writers(c) = internalWriter(vecs(c), dts(c), c); c += 1 }
-      if (withShard) reuseRow.setInt(names.length, block.shard)
-      def fill(r: Int): InternalRow = {
-        var i = 0
-        while (i < writers.length) {
-          if (vecs(i).isValid(r)) writers(i).write(reuseRow, r) else reuseRow.setNullAt(i)
-          i += 1
-        }
-        reuseRow
+    val writers = new Array[ColWriter](names.length)
+    var c = 0
+    while (c < names.length) { writers(c) = internalWriter(vecs(c), dts(c), c); c += 1 }
+    if (withShard) reuseRow.setInt(names.length, block.shard)
+    def fill(r: Int): InternalRow = {
+      var i = 0
+      while (i < writers.length) {
+        if (vecs(i).isValid(r)) writers(i).write(reuseRow, r) else reuseRow.setNullAt(i)
+        i += 1
       }
-      if (positions == null) new Iterator[InternalRow] {
-        private var r = 0
-        def hasNext: Boolean = r < block.nRows
-        def next(): InternalRow = { val row = fill(r); r += 1; row }
-      } else positions.iterator.map(fill)
-    } else {
-      val getters = new Array[Int => Any](names.length)
-      var c = 0
-      while (c < names.length) { getters(c) = internalGetter(vecs(c), dts(c)); c += 1 }
-      val extra = if (withShard) 1 else 0
-      def mk(r: Int): InternalRow = {
-        val vals = new Array[Any](names.length + extra)
-        var i = 0
-        while (i < names.length) {
-          vals(i) = if (vecs(i).isValid(r)) getters(i)(r) else null
-          i += 1
-        }
-        if (extra == 1) vals(names.length) = block.shard
-        new GenericInternalRow(vals)
-      }
-      if (positions == null) Iterator.tabulate(block.nRows)(mk)
-      else positions.iterator.map(mk)
+      reuseRow
     }
+    if (positions == null) new Iterator[InternalRow] {
+      private var r = 0
+      def hasNext: Boolean = r < block.nRows
+      def next(): InternalRow = { val row = fill(r); r += 1; row }
+    } else positions.iterator.map(fill)
   }
 
   /** Unboxed per-column writer into a reused mutable row (an interface,

@@ -1847,8 +1847,19 @@ object Queries {
       true
     })
 
+  /** Build the store under `nm` once per (JVM, sf dir); the stderr
+    * `[build]` line reports the wall of each build that actually ran.
+    */
+  private def built(nm: String, dir: String)(build: => String): String =
+    builtStores.getOrElseUpdate(s"$nm:$dir", {
+      val t0 = System.nanoTime()
+      val r = build
+      System.err.println(f"[build] $nm ${(System.nanoTime() - t0) / 1e9}%.2fs")
+      r
+    })
+
   private def docStore(s: SparkSession, dir: String): String =
-    builtStores.getOrElseUpdate(dir, {
+    built("doc", dir) {
       val docs = t(s, dir, "documents")
       val store = stagePath(s, "zstore", dir)
       graft.encode.StoreLayout.write(
@@ -1864,9 +1875,9 @@ object Queries {
           () => graft.index.IndexStore.createBucket(s, store, docs.schema, "lang"),
           () => graft.index.IndexStore.refreshOffsets(s, store))
         steps.map(pool.submit(_)).foreach(_.get())
-      } finally pool.shutdown()
+      } finally pool.shutdownNow() // after a failure, queued steps never start
       store
-    })
+    }
 
   /** Build the persistent stores/indexes the store/index/ANN queries
     * probe, WITHOUT running a probe — Bench calls this in setup so the
@@ -1882,12 +1893,9 @@ object Queries {
     * interference.
     */
   def prebuildStores(s: SparkSession, dir: String): Unit = {
-    val builds: Seq[(String, () => String)] = Seq(
-      "doc" -> (() => docStore(s, dir)),
-      "ann" -> (() => annStore(s, dir)),
-      "annaxis" -> (() => axisAnnStore(s, dir)),
-      "ivfseed" -> (() => ivfSeedStore(s, dir)),
-      "ivf" -> (() => ivfStore(s, dir)))
+    val builds: Seq[java.util.concurrent.Callable[String]] = Seq(
+      () => docStore(s, dir), () => annStore(s, dir), () => axisAnnStore(s, dir),
+      () => ivfSeedStore(s, dir), () => ivfStore(s, dir))
     // one thread per build: the five builds are independent and mostly
     // LATENCY-bound chains of small sequential jobs (the trained-IVF
     // Lloyd/k-center init is ~20 driver-blocking jobs), so the wall for
@@ -1897,34 +1905,25 @@ object Queries {
     // 3-thread pool). Stage concurrency stays small: each build issues
     // tiny jobs one at a time, so this overlaps waiting, not shuffles.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.length)
-    try {
-      val futures = builds.map { case (nm, b) => pool.submit(new java.util.concurrent.Callable[String] {
-        override def call(): String = {
-          val t0 = System.nanoTime()
-          val r = b()
-          System.err.println(f"[build] $nm ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          r
-        }
-      }) }
-      futures.foreach(_.get()) // propagate the first failure
-    } finally pool.shutdown()
+    try builds.map(pool.submit(_)).foreach(_.get()) // propagate the first failure
+    finally pool.shutdownNow() // after a failure, queued builds never start
     ()
   }
 
   private def annStore(s: SparkSession, dir: String): String =
-    builtStores.getOrElseUpdate(s"ann:$dir", {
+    built("ann", dir) {
       val p = stagePath(s, "annstore", dir)
       Similarity.writeBucketedStore(t(s, dir, "embeddings"), "vec_id", "embedding", p, nPlanes = 6)
       p
-    })
+    }
 
   private def axisAnnStore(s: SparkSession, dir: String): String =
-    builtStores.getOrElseUpdate(s"annaxis:$dir", {
+    built("annaxis", dir) {
       val p = stagePath(s, "annaxis", dir)
       Similarity.writeBucketedStore(t(s, dir, "embeddings"), "vec_id", "embedding", p,
         nPlanes = 6, axis = true)
       p
-    })
+    }
 
   /** IVF store with SEEDED centroids — the embeddings with vec_id 0..7
     * in id order, zero Lloyd iterations — so cell index == centroid
@@ -1932,7 +1931,7 @@ object Queries {
     * oracle re-derives it from the same 8 rows).
     */
   private def ivfSeedStore(s: SparkSession, dir: String): String =
-    builtStores.getOrElseUpdate(s"ivfseed:$dir", {
+    built("ivfseed", dir) {
       val p = stagePath(s, "ivfseed", dir)
       val emb = t(s, dir, "embeddings")
       val cents = emb.filter(col("vec_id") < 8).orderBy("vec_id")
@@ -1940,19 +1939,19 @@ object Queries {
       require(cents.length == 8, s"expected 8 seed centroids, got ${cents.length}")
       Ivf.writeIvfStore(emb, "vec_id", "embedding", p, cents)
       p
-    })
+    }
 
   /** Production IVF store: Lloyd-trained centroids (c=16, 3 iters) over
     * the deterministic hash sample.
     */
   private def ivfStore(s: SparkSession, dir: String): String =
-    builtStores.getOrElseUpdate(s"ivf:$dir", {
+    built("ivf", dir) {
       val p = stagePath(s, "ivfstore", dir)
       val emb = t(s, dir, "embeddings")
       val cents = Ivf.train(emb, "vec_id", "embedding", c = 16, iters = 3)
       Ivf.writeIvfStore(emb, "vec_id", "embedding", p, cents)
       p
-    })
+    }
 
   private def docsSchema(s: SparkSession, dir: String) = t(s, dir, "documents").schema
 

@@ -338,4 +338,36 @@ class CodecSpec extends AnyFunSuite {
       i += 1
     }
   }
+
+  test("a decoded vector survives later decodes on the same thread (no scratch aliasing)") {
+    // every compressed body decompresses into one per-thread scratch
+    // buffer; a kernel that kept a view of it would see A's values
+    // overwritten when B decodes into the same buffer
+    val n = 2000
+    val prices = Array.tabulate(50)(i => (i * 7919 % 91000 + 900) / 100.0)
+    val smalls: Seq[(ColVec, Byte)] = Seq(
+      BinVec(keywordText(n)) -> Method.PLAIN,
+      BinVec(keywordText(n)) -> Method.FSST,
+      BinVec(lowCardStrings(n)) -> Method.DICT,
+      LongVec(Array.tabulate(n)(i => 1000000L + i * 37 % 1000)) -> Method.FOR_PACK,
+      LongVec(Array.tabulate(n)(i => 1600000000000L + i * 1000L + i % 7)) -> Method.DELTA_PACK,
+      DoubleVec(Array.tabulate(n)(i => prices(i % prices.length))) -> Method.ALP,
+      DoubleVec(Array.tabulate(n)(_ * 0.25)) -> Method.SHUFFLE)
+    val bigText = BinVec(keywordText(4 * n))
+    val sha = graft.encode.ColBuilder.digestOf _
+    for (e <- Seq(Entropy.ZSTD, Entropy.LZ4); (vecA, mA) <- smalls) {
+      val blockA = ChunkCodec.encode(vecA, Plan(mA, e))
+      // B: a larger body under a different plan
+      val blockB = ChunkCodec.encode(bigText, Plan(if (mA == Method.FSST) Method.PLAIN else Method.FSST, e))
+      for (blk <- Seq(blockA, blockB))
+        assert(ChunkCodec.peekPlan(blk).entropy == e, s"m=$mA e=$e: body must be compressed")
+      // decode B first so the scratch is already big enough: A and the
+      // second B then land in the same buffer
+      ChunkCodec.decode(blockB)
+      val outA = ChunkCodec.decode(blockA)
+      val outB = ChunkCodec.decode(blockB)
+      assert(java.util.Arrays.equals(sha(outA), sha(vecA)), s"A m=$mA e=$e")
+      assert(java.util.Arrays.equals(sha(outB), sha(bigText)), s"B m=$mA e=$e")
+    }
+  }
 }

@@ -292,6 +292,21 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("prebuildStores fails loudly on a missing input; a retry after the fix succeeds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-prebuild")
+    def copyIn(name: String): Unit =
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, name), dir.resolve(name))
+    copyIn("documents.parquet")
+    // the four embedding-backed builds fail; the first failure propagates
+    val e = intercept[java.util.concurrent.ExecutionException](
+      Queries.prebuildStores(spark, dir.toString))
+    assert(e.getCause.getMessage.contains("embeddings"), e.getCause.getMessage)
+    copyIn("embeddings.parquet")
+    Queries.prebuildStores(spark, dir.toString)
+    val q = SparkEntry.queries("store_point_lookup")
+    assert(q(spark, dir.toString).collect().toSeq == q(spark, sf).collect().toSeq)
+  }
+
   test("entry() returns the roundtrip proof with rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
