@@ -91,18 +91,29 @@ object TableCodec {
       chunkBytes: Long = CHUNK_BYTES,
       shardCol: Option[String] = None,
       truncPrec: Map[String, Int] = Map.empty
-  ): Dataset[EncodedBlock] = {
+  ): Dataset[EncodedBlock] =
+    df.sparkSession.createDataset(encodeRdd(df, chunkRows, chunkBytes, shardCol, truncPrec))
+
+  /** The block RDD `encode` wraps: callers that tally blocks on their
+    * way to the writer map over it without a typed Dataset.map, which
+    * would deserialize and re-serialize every payload.
+    */
+  private[graft] def encodeRdd(
+      df: DataFrame,
+      chunkRows: Int = CHUNK_ROWS,
+      chunkBytes: Long = CHUNK_BYTES,
+      shardCol: Option[String] = None,
+      truncPrec: Map[String, Int] = Map.empty
+  ): org.apache.spark.rdd.RDD[EncodedBlock] = {
     val work = if (Nested.hasNested(df.schema)) Nested.flatten(df) else df
-    val spark = work.sparkSession
     val schema = work.schema
     truncPrec.keys.foreach(n => require(schema.fieldNames.contains(n),
       s"truncPrec names unknown column $n"))
     val shardIdx = shardCol.map(schema.fieldIndex)
     val dataFields = schema.fields.zipWithIndex.filter { case (_, i) => !shardIdx.contains(i) }
-    val rdd = work.queryExecution.toRdd.mapPartitions { rows =>
+    work.queryExecution.toRdd.mapPartitions { rows =>
       encodePartition(rows, dataFields, shardIdx, chunkRows, chunkBytes, truncPrec)
     }
-    spark.createDataset(rdd)
   }
 
   private def encodePartition(

@@ -3,6 +3,8 @@ package graft.lineage
 import graft.encode.{EncodedBlock, StoreLayout, TableCodec}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.AccumulatorV2
 
 /** Resumable encode DAG with per-shard lineage — the north rule's
   * checkpoint/resume requirement. The reference has no restart story
@@ -16,7 +18,10 @@ import org.apache.spark.sql.functions._
   *  - shards are processed in batches; each batch is one atomic Spark
   *    parquet append (FileOutputCommitter commits at job granularity);
   *  - after a batch commits, one manifest row per shard (rows, bytes,
-  *    cbytes, wall) is appended to `<out>/_manifest`;
+  *    cbytes, wall) is appended to `<out>/_manifest`; the sizes are
+  *    tallied from the blocks the write job itself emits, through one
+  *    named accumulator per batch ([[ShardTally]]), not re-read from
+  *    the store;
   *  - on restart, shards already in the manifest are skipped.
   *
   * Scale: the manifest is O(nShards) tiny rows. The source is read
@@ -82,11 +87,23 @@ object Lineage {
 
   def manifestPath(outDir: String): String = s"$outDir/_manifest"
 
+  /** Shards with a manifest row. Empty only when no manifest was ever
+    * committed: the directory is absent, or holds nothing but the
+    * hidden leftovers of a first manifest append that crashed before
+    * its commit. Any other read failure (a corrupt or unreadable
+    * manifest) propagates — treating it as empty would make
+    * encodeResumable delete and re-encode every shard.
+    */
   def completedShards(spark: SparkSession, outDir: String): Set[Int] = {
-    try {
-      spark.read.parquet(manifestPath(outDir))
-        .select("shard").distinct().collect().map(_.getInt(0)).toSet
-    } catch { case _: Throwable => Set.empty }
+    val p = new org.apache.hadoop.fs.Path(manifestPath(outDir))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val committed = fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    if (!committed) Set.empty
+    else spark.read.schema(Encoders.product[ShardManifest].schema).parquet(p.toString)
+      .select("shard").collect().map(_.getInt(0)).toSet
   }
 
   /** The store's lineage shard count, from the manifest (one row per
@@ -165,7 +182,7 @@ object Lineage {
     // source format). The stage survives a crash: a resumed run reuses
     // it and reads ZERO source bytes for the remaining batches.
     val stageDir = stagePath(outDir)
-    val staged = stageValid(spark, outDir, nShards, nBatches, pending)
+    val staged = stageValid(spark, outDir, nShards, nBatches, pending, sharded.schema)
     val useStage = staged || batchGroups.size > 1
     if (useStage && !staged) {
       require(!input.columns.contains(BATCH_COL),
@@ -175,7 +192,7 @@ object Lineage {
         .withColumn(BATCH_COL,
           floor(col(SHARD_COL).cast("long") * nBatches / nShards).cast("int"))
         .write.partitionBy(BATCH_COL).parquet(stageDir)
-      writeStageMeta(fs, stageDir, nShards, nBatches, pending)
+      writeStageMeta(fs, stageDir, nShards, nBatches, pending, sharded.schema)
     }
 
     var rows = 0L; var nb = 0L; var cb = 0L; var wall = 0L
@@ -187,11 +204,12 @@ object Lineage {
       // the stage root starts with '_' (hidden from the store's own
       // parquet discovery), so address the batch's partition directory
       // EXPLICITLY — its own name is not hidden, and the read touches
-      // only this batch's files
+      // only this batch's files. The staged schema is known (stageValid
+      // checked it against the meta), so no footer-inference job runs.
       val src =
         if (useStage) {
           val bp = new org.apache.hadoop.fs.Path(s"$stageDir/$BATCH_COL=$bId")
-          if (fs.exists(bp)) spark.read.parquet(bp.toString)
+          if (fs.exists(bp)) spark.read.schema(sharded.schema).parquet(bp.toString)
           // absent dir = the batch's shards staged zero rows (still need
           // their empty-shard manifest rows; limit(0) folds to an empty
           // relation, no scan)
@@ -201,8 +219,18 @@ object Lineage {
         // cluster rows of a shard together so blocks are shard-pure
         .repartition(math.max(shardBatch.size, spark.sparkContext.defaultParallelism), col(SHARD_COL))
         .sortWithinPartitions(SHARD_COL)
-      val blocks = TableCodec.encode(batchDf, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
-      StoreLayout.write(blocks, names, outDir, SaveMode.Append)
+      // The encode runs in the write job's result stage, so the tally
+      // counts each committed block exactly once: Spark merges a result
+      // task's accumulator update once per partition (a retried or
+      // speculative duplicate adds nothing), and a failed attempt's
+      // updates are dropped. An RDD-level map keeps the payloads
+      // serialized as the encoder emitted them.
+      val tally = new ShardTally
+      spark.sparkContext.register(tally, s"graft.lineage.tally.batch$bId")
+      val blocks = TableCodec.encodeRdd(batchDf, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
+        .map { b => tally.add(b); b }
+      StoreLayout.write(spark.createDataset(blocks)(Encoders.product[EncodedBlock]),
+        names, outDir, SaveMode.Append)
       // snapshot-enabled stores (a CoW mutation ran before this append
       // run): publish the batch's files PER BATCH, before its manifest
       // row. A crash in between leaves listed-but-unmanifested files,
@@ -222,20 +250,17 @@ object Lineage {
       }
       val wallMs = (System.nanoTime() - t0) / 1000000L
 
-      // metrics from what was just committed (metadata leaves only:
-      // payloads are never touched)
-      val stats = StoreLayout.chunkStats(spark, outDir)
-        .filter(col("shard").isin(shardBatch.map(Integer.valueOf): _*))
-        .groupBy("shard")
-        .agg(sum("nRows").as("nRows"), sum("nBytes").as("nBytes"), sum("cBytes").as("cBytes"))
-        .collect()
+      // metrics of what was just committed, tallied by the write job
+      // itself (no store re-read); shards with zero rows still need a
+      // manifest row (done ≠ has data)
+      val found = tally.value
       val now = System.currentTimeMillis()
-      val found = stats.map(r => r.getInt(0) ->
-        ShardManifest(r.getInt(0), bId, r.getLong(1), r.getLong(2), r.getLong(3), wallMs, now)).toMap
-      // shards with zero rows still need a manifest row (done ≠ has data)
-      val manifest = shardBatch.map(s => found.getOrElse(s, ShardManifest(s, bId, 0L, 0L, 0L, wallMs, now)))
+      val manifest = shardBatch.map { s =>
+        val (r, n, c) = found.getOrElse(s, (0L, 0L, 0L))
+        ShardManifest(s, bId, r, n, c, wallMs, now)
+      }
       spark.createDataset(manifest)(Encoders.product[ShardManifest])
-        .repartition(1).write.mode(SaveMode.Append).parquet(manifestPath(outDir))
+        .coalesce(1).write.mode(SaveMode.Append).parquet(manifestPath(outDir))
 
       rows += manifest.map(_.nRows).sum
       nb += manifest.map(_.nBytes).sum
@@ -251,40 +276,76 @@ object Lineage {
   }
 
   private val STAGE_META = "_graft_stage.json"
+  /** The staged schema's JSON is the meta's LAST field, so the fields
+    * before it hold only numbers and the regexes below cannot match
+    * inside a column's name or metadata.
+    */
+  private val STAGE_SCHEMA_KEY = ",\"schema\":"
 
   /** The stage is reusable iff its commit marker exists with the same
-    * geometry and its staged shard set covers every currently-pending
-    * shard (a crashed run staged a superset of what remains).
+    * geometry and the same schema (the batches read it schema-on-read),
+    * and its staged shard set covers every currently-pending shard (a
+    * crashed run staged a superset of what remains).
     */
-  private def stageValid(spark: SparkSession, outDir: String,
-                         nShards: Int, nBatches: Int, pending: Seq[Int]): Boolean = {
+  private def stageValid(spark: SparkSession, outDir: String, nShards: Int, nBatches: Int,
+                         pending: Seq[Int], schema: StructType): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"${stagePath(outDir)}/$STAGE_META")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return false
     val in = fs.open(p)
     val text = new String(in.readAllBytes(), "UTF-8")
     in.close()
+    val cut = text.indexOf(STAGE_SCHEMA_KEY)
+    if (cut < 0) return false
+    val head = text.substring(0, cut)
+    val stagedSchema = text.substring(cut + STAGE_SCHEMA_KEY.length, text.length - 1)
     def num(k: String): Option[Long] =
-      (k + """\s*:\s*(\d+)""").r.findFirstMatchIn(text).map(_.group(1).toLong)
+      (k + """\s*:\s*(\d+)""").r.findFirstMatchIn(head).map(_.group(1).toLong)
     val shardsOk = num("\"nShards\"").contains(nShards.toLong) &&
       num("\"nBatches\"").contains(nBatches.toLong)
-    val stagedSet = """"pending"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(text)
+    val stagedSet = """"pending"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(head)
       .map(_.group(1).split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSet)
       .getOrElse(Set.empty[Int])
-    shardsOk && pending.forall(stagedSet.contains)
+    shardsOk && stagedSchema == schema.json && pending.forall(stagedSet.contains)
   }
 
   /** Written AFTER the stage parquet commit — its existence marks the
     * stage complete (a crash mid-stage leaves no marker, so resume
     * re-stages).
     */
-  private def writeStageMeta(fs: org.apache.hadoop.fs.FileSystem, stageDir: String,
-                             nShards: Int, nBatches: Int, pending: Seq[Int]): Unit = {
+  private def writeStageMeta(fs: org.apache.hadoop.fs.FileSystem, stageDir: String, nShards: Int,
+                             nBatches: Int, pending: Seq[Int], schema: StructType): Unit = {
     val out = fs.create(new org.apache.hadoop.fs.Path(s"$stageDir/$STAGE_META"), true)
     out.write(
-      s"""{"nShards":$nShards,"nBatches":$nBatches,"pending":[${pending.mkString(",")}]}"""
-        .getBytes("UTF-8"))
+      (s"""{"nShards":$nShards,"nBatches":$nBatches,"pending":[${pending.mkString(",")}]""" +
+        s"$STAGE_SCHEMA_KEY${schema.json}}").getBytes("UTF-8"))
     out.close()
+  }
+
+  /** Per-shard (nRows, nBytes, cBytes) sums of the blocks a batch's
+    * write job emits. Merges by shard, so its value holds one entry per
+    * shard of the batch whatever the block count.
+    */
+  private[lineage] final class ShardTally
+      extends AccumulatorV2[EncodedBlock, Map[Int, (Long, Long, Long)]] {
+    private val sums = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+
+    private def addSums(shard: Int, nRows: Long, nBytes: Long, cBytes: Long): Unit = {
+      val a = sums.getOrElseUpdate(shard, new Array[Long](3))
+      a(0) += nRows; a(1) += nBytes; a(2) += cBytes
+    }
+
+    override def isZero: Boolean = sums.isEmpty
+    override def copy(): ShardTally = { val t = new ShardTally; t.merge(this); t }
+    override def reset(): Unit = sums.clear()
+    override def add(b: EncodedBlock): Unit = addSums(b.shard, b.nRows.toLong, b.nBytes, b.cBytes)
+    override def merge(other: AccumulatorV2[EncodedBlock, Map[Int, (Long, Long, Long)]]): Unit =
+      other match {
+        case o: ShardTally => o.sums.foreach { case (s, a) => addSums(s, a(0), a(1), a(2)) }
+        case _ => throw new UnsupportedOperationException(s"cannot merge ${other.getClass.getName}")
+      }
+    override def value: Map[Int, (Long, Long, Long)] =
+      sums.iterator.map { case (s, a) => s -> ((a(0), a(1), a(2))) }.toMap
   }
 
   /** Copy-on-write delete over the encoded store (the Spark-native
@@ -527,7 +588,7 @@ object Lineage {
     val stats = universe.toSeq.sorted.map(sh =>
       byShard.getOrElse(sh, ShardManifest(sh, -1, 0L, 0L, 0L, 0L, now)))
     spark.createDataset(stats)(Encoders.product[ShardManifest])
-      .repartition(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(outDir))
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(outDir))
   }
 
   /** Secondary indexes and the offsets table address rows by

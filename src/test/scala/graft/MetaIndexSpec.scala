@@ -205,22 +205,6 @@ class MetaIndexSpec extends SparkTestBase {
   test("MetaAgg batched: multi-column min/max + sums run as ONE metadata pass") {
     import graft.encode.MetaAgg
 
-    // job-group bookkeeping: count the Spark jobs each batched call
-    // launches (statusTracker lags the listener bus slightly — the
-    // action has returned, so poll until the count stabilizes)
-    def jobsIn(group: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
-      try body finally spark.sparkContext.clearJobGroup()
-      var ids = Array.empty[Int]
-      val deadline = System.nanoTime() + 2000000000L
-      while (ids.isEmpty && System.nanoTime() < deadline) {
-        ids = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
-        if (ids.isEmpty) Thread.sleep(50)
-      }
-      Thread.sleep(200) // settle so a hypothetical SECOND job is visible
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    }
-
     // bounded columns only (repo/row_id/lang have exact zone keys) → no
     // decode fallback → the whole batched min/max is a single job
     var mm: MetaAgg.MinMaxAll = null

@@ -37,6 +37,16 @@ trait SparkTestBase extends AnyFunSuite {
     }
     acc.get()
   }
+
+  /** Number of Spark jobs `body` launches, counted by job group (the
+    * status tracker is fed by the listener bus, so flush it first).
+    */
+  protected def jobsIn(group: String)(body: => Unit): Int = {
+    spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
+    try body finally spark.sparkContext.clearJobGroup()
+    org.apache.spark.sql.graftshim.TestListenerShim.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
 }
 
 object SparkTestBase {
