@@ -303,38 +303,55 @@ object Fsst {
   private val SAMPLE_BYTES = 1 << 15
   private val ROUNDS = 3
 
-  /** table: symbols(code) = bytes. Match dispatch follows the FSST
-    * paper's structure: a 2-byte-prefix slab for symbols of length >= 3
-    * (few candidates per prefix) plus a 64Ki shortCodes table (first2)
-    * that decides length <= 2 matches with a single load — so the
-    * per-input-byte work is a couple of loads, not a scan over all
-    * symbols sharing the first byte.
-    *
-    * The candidate slabs are FLAT primitive arrays and each candidate
-    * carries its bytes packed big-endian into one Long, so a match test
-    * is a single `(word ^ symWord) & lenMask == 0` against ONE unaligned
-    * 8-byte load of the input (the paper's trick) — no Array[Array[_]]
-    * pointer chase, no per-byte compare loop. Match semantics are
-    * unchanged (the longest matching symbol wins; two distinct symbols
-    * of equal length can never match the same position), so the encoded
-    * bytes are bit-identical to the scalar dispatch this replaces.
+  /** table: symbols(code) = bytes. The encode-side matcher is built
+    * lazily: decode-side tables (readTable/decompress) only touch
+    * `symbols` and never build it. Callers fetch it ONCE per value (not
+    * per byte), so the lazy-init check stays off the per-byte path.
     */
   final class Table(val symbols: Array[Array[Byte]]) {
-    /** Encode-side match structures, built on first compress/train use:
-      * decode-side tables (readTable/decompress) only touch `symbols`
-      * and never pay the 256 KiB shortCodes build. Callers fetch this
-      * ONCE per value (not per byte), so the lazy-init check stays off
-      * the per-byte path.
-      */
     lazy val dispatch: Dispatch = new Dispatch(symbols)
   }
 
-  /** See [[Table]] — the flat-slab + shortCodes matcher. */
+  /** big-endian 8-byte window of data at pos, zero-padded past the end;
+    * one unaligned load on the common path. Platform.getLong is Spark's
+    * own unsafe accessor (an intrinsified static — the same primitive
+    * UnsafeRow reads ride on).
+    */
+  @inline private def wordAt(data: Array[Byte], pos: Int): Long = {
+    val avail = data.length - pos
+    if (avail >= 8)
+      java.lang.Long.reverseBytes(org.apache.spark.unsafe.Platform.getLong(
+        data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos))
+    else {
+      var w = 0L
+      var j = 0
+      while (j < avail) { w |= (data(pos + j) & 0xffL) << (56 - 8 * j); j += 1 }
+      w
+    }
+  }
+
+  /** the high `len` bytes of a big-endian word (len in 1..8) */
+  @inline private def lenMask(len: Int): Long = -1L << ((8 - len) << 3)
+
+  /** Longest-match dispatch following the FSST paper's structure: every
+    * 2-byte prefix that starts a symbol of length >= 2 gets one entry in
+    * a small open-addressing table (at most 1,024 slots for 255 symbols),
+    * holding the best match of length <= 2 at that prefix (the exact
+    * 2-byte symbol, else b0's 1-byte symbol, else escape) and the
+    * bounds of a flat slab of the prefix's >= 3-byte symbols, longest
+    * first. A prefix with no entry decides by b0's 1-byte symbol alone.
+    * Build cost and footprint are O(symbols), so the per-training-round
+    * and per-compress builds stay small next to the work they serve.
+    *
+    * Each slab candidate carries its bytes packed big-endian into one
+    * Long, so a match test is a single `(word ^ symWord) & lenMask == 0`
+    * against ONE unaligned 8-byte load of the input (the paper's
+    * trick). The longest matching symbol wins (two distinct symbols of
+    * equal length never match the same position; among byte-identical
+    * symbols the highest code wins).
+    */
   final class Dispatch(symbols: Array[Array[Byte]]) {
-    /** packed (code<<8 | 1) for 1-byte symbols, -1 otherwise — the
-      * avail==1 tail path only; positions with 2+ bytes left go through
-      * [[first2]], which embeds this as its fallback.
-      */
+    /** packed (code<<8 | 1) for 1-byte symbols, -1 otherwise */
     private val oneByte: Array[Int] = {
       val a = Array.fill(256)(-1)
       var c = 0
@@ -345,95 +362,98 @@ object Fsst {
       a
     }
 
-    /** first2(b0b1): packed (code<<8 | len) of the best symbol of
-      * length <= 2 at a position whose next two bytes are b0,b1 — the
-      * exact 2-byte symbol if one exists, else b0's 1-byte symbol,
-      * else -1 (escape). The paper's shortCodes table: after the
-      * (usually empty) >=3 slab check, ONE load fully decides the
-      * position, replacing the 2-byte slab scan + separate 1-byte
-      * fallback. 256 KiB per table, LLC-resident for the whole chunk.
-      */
-    private val first2: Array[Int] = {
-      val a = new Array[Int](65536)
-      var k = 0
-      while (k < 65536) { a(k) = oneByte(k >>> 8); k += 1 }
+    // Prefix table: slot s is slots(4s .. 4s+3) = [prefix (-1 = empty),
+    // best packed match of length <= 2 (or -1), slab start, slab end].
+    // Slab: candPacked = (code << 8) | len, candWord = the symbol's bytes
+    // big-endian zero-padded.
+    private val (shift, wrap, slots, candPacked, candWord) = {
+      var nPref = 0
+      var nLong = 0
       var c = 0
       while (c < symbols.length) {
-        val s = symbols(c)
-        if (s.length == 2) a(((s(0) & 0xff) << 8) | (s(1) & 0xff)) = (c << 8) | 2
+        val len = symbols(c).length
+        if (len >= 2) nPref += 1
+        if (len >= 3) nLong += 1
         c += 1
       }
-      a
-    }
-
-    // symbols of length >= 3, grouped by first-two-bytes into contiguous
-    // slabs [prefStart(k), prefStart(k+1)), longest first within a slab:
-    // candPacked = (code << 8) | len, candWord = the symbol's bytes
-    // big-endian zero-padded, candMask = the word's high `len` bytes
-    private val (prefStart, candPacked, candWord) = {
-      val starts = new Array[Int](65537)
-      val byPref = new mutable.HashMap[Int, List[Int]]()
-      var c = 0
-      var total = 0
+      // at most a quarter full: at half load the linear-probe chains of
+      // text prefixes cost ~20% of compress throughput (corpus content
+      // chunks, 4-core VM)
+      var bits = 1
+      while ((1 << bits) < 4 * nPref) bits += 1
+      val mask = (1 << bits) - 1
+      val slots = new Array[Int](4 << bits)
+      var s = 0
+      while (s <= mask) { slots(4 * s) = -1; slots(4 * s + 1) = -1; s += 1 }
+      def slotOf(k: Int): Int = {
+        var s = (k * 0x9e3779b1) >>> (32 - bits)
+        while (slots(4 * s) != -1 && slots(4 * s) != k) s = (s + 1) & mask
+        slots(4 * s) = k
+        4 * s
+      }
+      @inline def prefixOf(sym: Array[Byte]): Int = ((sym(0) & 0xff) << 8) | (sym(1) & 0xff)
+      c = 0
       while (c < symbols.length) {
-        val s = symbols(c)
-        if (s.length >= 3) {
-          val k = ((s(0) & 0xff) << 8) | (s(1) & 0xff)
-          byPref.update(k, c :: byPref.getOrElse(k, Nil))
-          total += 1
-        }
+        val sym = symbols(c)
+        if (sym.length == 2) slots(slotOf(prefixOf(sym)) + 1) = (c << 8) | 2
         c += 1
       }
-      val packed = new Array[Int](total)
-      val words = new Array[Long](total)
-      // counts → exclusive prefix sums → fill
-      byPref.foreach { case (k, cs) => starts(k + 1) = cs.size }
-      var k = 0
-      while (k < 65536) { starts(k + 1) += starts(k); k += 1 }
-      byPref.foreach { case (pk, cs) =>
-        var i = starts(pk)
-        cs.sortBy(code => -symbols(code).length).foreach { code =>
-          val s = symbols(code)
-          var w = 0L
-          var j = 0
-          while (j < s.length) { w |= (s(j) & 0xffL) << (56 - 8 * j); j += 1 }
-          packed(i) = (code << 8) | s.length
-          words(i) = w
+      // >= 3-byte symbols sorted by (prefix, longest first, highest
+      // code first) — each prefix's slab is then one contiguous run
+      val order = new Array[Long](nLong)
+      var i = 0
+      c = 0
+      while (c < symbols.length) {
+        val sym = symbols(c)
+        if (sym.length >= 3) {
+          order(i) = (prefixOf(sym).toLong << 40) | ((0xffL - sym.length) << 32) | (Int.MaxValue - c)
           i += 1
         }
+        c += 1
       }
-      (starts, packed, words)
-    }
-
-    /** big-endian 8-byte window of data at pos (zero-padded past the
-      * end); one unaligned load on the common path. Platform.getLong is
-      * Spark's own unsafe accessor (an intrinsified static — the same
-      * primitive UnsafeRow reads ride on).
-      */
-    @inline private def wordAt(data: Array[Byte], pos: Int, avail: Int): Long =
-      if (avail >= 8)
-        java.lang.Long.reverseBytes(org.apache.spark.unsafe.Platform.getLong(
-          data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pos))
-      else {
+      java.util.Arrays.sort(order)
+      val packed = new Array[Int](nLong)
+      val words = new Array[Long](nLong)
+      i = 0
+      while (i < nLong) {
+        val code = Int.MaxValue - (order(i) & 0xffffffffL).toInt
+        val sym = symbols(code)
         var w = 0L
         var j = 0
-        while (j < avail) { w |= (data(pos + j) & 0xffL) << (56 - 8 * j); j += 1 }
-        w
+        while (j < sym.length) { w |= (sym(j) & 0xffL) << (56 - 8 * j); j += 1 }
+        packed(i) = (code << 8) | sym.length
+        words(i) = w
+        val b = slotOf(prefixOf(sym))
+        if (slots(b + 3) == 0) slots(b + 2) = i
+        slots(b + 3) = i + 1
+        i += 1
       }
+      s = 0
+      while (s <= mask) {
+        if (slots(4 * s) != -1 && slots(4 * s + 1) == -1) slots(4 * s + 1) = oneByte(slots(4 * s) >>> 8)
+        s += 1
+      }
+      (32 - bits, slots.length - 1, slots, packed, words)
+    }
 
     /** Longest symbol matching data at pos, packed as (code << 8) | len;
       * -1 if none. Allocation-free — this runs once per input byte.
-      * b0 and the 2-byte prefix come out of the single loaded word, so
-      * the common path is one unaligned load + two table loads.
       */
     def longestMatch(data: Array[Byte], pos: Int): Int = {
       val avail = data.length - pos
       if (avail >= 2) {
         val k = ((data(pos) & 0xff) << 8) | (data(pos + 1) & 0xff)
-        var i = prefStart(k)
-        val end = prefStart(k + 1)
+        var b = ((k * 0x9e3779b1) >>> shift) << 2
+        var key = slots(b)
+        while (key != k) {
+          if (key == -1) return oneByte(k >>> 8)
+          b = (b + 4) & wrap
+          key = slots(b)
+        }
+        var i = slots(b + 2)
+        val end = slots(b + 3)
         if (i < end) {
-          val w = wordAt(data, pos, avail)
+          val w = wordAt(data, pos)
           while (i < end) {
             // candidates are longest-first: first hit IS the longest.
             // len > avail can't hit: the zero-padded window would need
@@ -441,11 +461,11 @@ object Fsst {
             // only within `len`, so require len <= avail explicitly.
             val p = candPacked(i)
             val len = p & 0xff
-            if (len <= avail && ((w ^ candWord(i)) & (-1L << ((8 - len) << 3))) == 0L) return p
+            if (len <= avail && ((w ^ candWord(i)) & lenMask(len)) == 0L) return p
             i += 1
           }
         }
-        first2(k)
+        slots(b + 1)
       } else oneByte(data(pos) & 0xff)
     }
   }
@@ -465,75 +485,166 @@ object Fsst {
     w.result()
   }
 
+  /** Candidate-symbol occurrence counts for training: open addressing
+    * over (big-endian zero-padded word, length), one probe per bump.
+    * Keys go through murmur3's fmix64 — symbol bytes sit in the word's
+    * HIGH bytes, so a multiply-only hash would cluster short symbols.
+    */
+  private final class GainCounter(expected: Int) {
+    private var bits = 6
+    while ((1 << bits) < expected) bits += 1
+    private var words = new Array[Long](1 << bits)
+    private var lens = new Array[Byte](1 << bits) // 0 = empty slot
+    private var counts = new Array[Int](1 << bits)
+    private var size = 0
+
+    @inline private def home(w: Long, len: Int): Int = {
+      var h = w ^ len
+      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+      h ^= h >>> 33
+      (h >>> (64 - bits)).toInt
+    }
+
+    def clear(): Unit = { java.util.Arrays.fill(lens, 0.toByte); size = 0 }
+
+    def bump(w: Long, len: Int): Unit = {
+      val mask = lens.length - 1
+      var s = home(w, len)
+      while (lens(s) != 0 && (words(s) != w || lens(s) != len)) s = (s + 1) & mask
+      if (lens(s) != 0) counts(s) += 1
+      else {
+        words(s) = w; lens(s) = len.toByte; counts(s) = 1
+        size += 1
+        if (2 * size > lens.length) grow()
+      }
+    }
+
+    private def grow(): Unit = {
+      val (ow, ol, oc) = (words, lens, counts)
+      bits += 1
+      words = new Array[Long](1 << bits)
+      lens = new Array[Byte](1 << bits)
+      counts = new Array[Int](1 << bits)
+      val mask = lens.length - 1
+      var i = 0
+      while (i < ol.length) {
+        if (ol(i) != 0) {
+          var s = home(ow(i), ol(i))
+          while (lens(s) != 0) s = (s + 1) & mask
+          words(s) = ow(i); lens(s) = ol(i); counts(s) = oc(i)
+        }
+        i += 1
+      }
+    }
+
+    /** bytes saved by a symbol: a len-L symbol used f times saves
+      * f*(L-1) bytes (L>=2) or f bytes (L==1: code replaces
+      * escape+literal)
+      */
+    @inline private def saved(s: Int): Long =
+      if (lens(s) >= 2) counts(s).toLong * (lens(s) - 1) else counts(s).toLong
+
+    /** total rank order: bytes saved descending, then symbol bytes
+      * ascending — (unsigned padded word, len) ascending IS that
+      * byte-lexicographic order (a proper prefix has zeros, or smaller
+      * bytes, where the longer symbol differs, and equal words mean one
+      * is the other's zero-extended prefix)
+      */
+    @inline private def before(a: Int, b: Int): Boolean = {
+      val sa = saved(a)
+      val sb = saved(b)
+      if (sa != sb) sa > sb
+      else {
+        val c = java.lang.Long.compareUnsigned(words(a), words(b))
+        if (c != 0) c < 0 else lens(a) < lens(b)
+      }
+    }
+
+    /** The first `k` candidates of the rank order, best first. A
+      * bounded heap keeps the k best seen so far with the WORST at the
+      * root; the order is total, so the result is exactly the head of
+      * a full sort.
+      */
+    def top(k: Int): Array[Array[Byte]] = {
+      val heap = new Array[Int](k)
+      var n = 0
+      def siftDown(from: Int): Unit = {
+        var i = from
+        var done = false
+        while (!done) {
+          val l = 2 * i + 1
+          if (l >= n) done = true
+          else {
+            val c = if (l + 1 < n && before(heap(l), heap(l + 1))) l + 1 else l
+            if (before(heap(i), heap(c))) {
+              val t = heap(i); heap(i) = heap(c); heap(c) = t
+              i = c
+            } else done = true
+          }
+        }
+      }
+      var s = 0
+      while (s < lens.length) {
+        if (lens(s) != 0) {
+          if (n < k) {
+            var i = n
+            heap(i) = s
+            n += 1
+            while (i > 0 && before(heap((i - 1) / 2), heap(i))) {
+              val p = (i - 1) / 2
+              val t = heap(i); heap(i) = heap(p); heap(p) = t
+              i = p
+            }
+          } else if (k > 0 && before(s, heap(0))) {
+            heap(0) = s
+            siftDown(0)
+          }
+        }
+        s += 1
+      }
+      val out = new Array[Array[Byte]](n)
+      while (n > 0) {
+        val slot = heap(0)
+        n -= 1
+        heap(0) = heap(n)
+        siftDown(0)
+        val len = lens(slot)
+        val b = new Array[Byte](len)
+        var j = 0
+        while (j < len) { b(j) = ((words(slot) >>> (56 - 8 * j)) & 0xff).toByte; j += 1 }
+        out(n) = b
+      }
+      out
+    }
+  }
+
   def train(vec: BinVec): Table = {
     val s = sample(vec)
+    // <= 2 candidates per unit; sized for the common case, grows if needed
+    val gains = new GainCounter(s.length)
     var symbols = Array.empty[Array[Byte]]
     var round = 0
     while (round < ROUNDS) {
-      val matcher = new Table(symbols).dispatch
-      // Gains keyed by the candidate's zero-padded big-endian word:
-      // len <= 7 leaves the word's low byte zero, so the length packs
-      // into the low 3 bits collision-free; len == 8 (full word) gets
-      // its own map. Primitive LongMaps replace the previous
-      // String-keyed HashMap, which allocated + hashed a String per
-      // input byte — the dominant train cost. Ranking below reproduces
-      // the String order exactly, so trained tables are bit-identical.
-      val gain7 = new mutable.LongMap[Long]() // key = word | len (1..7)
-      val gain8 = new mutable.LongMap[Long]() // key = word (len == 8)
-      @inline def wordOf(start: Int, len: Int): Long = {
-        var w = 0L
-        var j = 0
-        while (j < len) { w |= (s(start + j) & 0xffL) << (56 - 8 * j); j += 1 }
-        w
-      }
-      @inline def bump(start: Int, len: Int): Unit =
-        if (len == 8) {
-          val k = wordOf(start, 8)
-          gain8.update(k, gain8.getOrElse(k, 0L) + len)
-        } else {
-          val k = wordOf(start, len) | len
-          gain7.update(k, gain7.getOrElse(k, 0L) + len)
-        }
+      val matcher = new Dispatch(symbols)
+      gains.clear()
       var pos = 0
-      var prevStart = -1
-      var prevLen = 0
+      var prevWord = 0L // input window at the previous unit's start
+      var prevLen = 0 // 0 = no previous unit
       while (pos < s.length) {
         val m = matcher.longestMatch(s, pos)
         val curLen = if (m >= 0) m & 0xff else 1
+        val w = wordAt(s, pos)
         // candidate: this unit alone
-        bump(pos, curLen)
+        gains.bump(w & lenMask(curLen), curLen)
         // candidate: previous unit + this unit (BPE merge), capped at MAX_LEN
-        if (prevStart >= 0 && prevLen + curLen <= MAX_LEN) bump(prevStart, prevLen + curLen)
-        prevStart = pos
+        if (prevLen > 0 && prevLen + curLen <= MAX_LEN)
+          gains.bump(prevWord & lenMask(prevLen + curLen), prevLen + curLen)
+        prevWord = w
         prevLen = curLen
         pos += curLen
       }
-      // rank candidates by bytes saved: a len-L symbol with f uses saves
-      // f*(L-1) bytes (L>=2) or f bytes (L==1: code replaces escape+literal).
-      // Ties break by symbol bytes ascending; (unsigned padded word, len)
-      // ascending IS that byte-lexicographic order (a proper prefix has
-      // zeros — or smaller bytes — where the longer symbol differs, and
-      // equal words mean one is the other's zero-extended prefix).
-      val ranked = (gain7.iterator.map { case (k, covered) => (k & ~7L, (k & 7L).toInt, covered) } ++
-        gain8.iterator.map { case (w, covered) => (w, 8, covered) })
-        .map { case (w, len, covered) =>
-          val saved = if (len >= 2) covered * (len - 1) / len else covered
-          (w, len, saved)
-        }
-        .filter(_._3 > 0)
-        .toArray
-      scala.util.Sorting.stableSort(ranked, (a: (Long, Int, Long), b: (Long, Int, Long)) =>
-        if (a._3 != b._3) a._3 > b._3
-        else {
-          val c = java.lang.Long.compareUnsigned(a._1, b._1)
-          if (c != 0) c < 0 else a._2 < b._2
-        })
-      symbols = ranked.take(MAX_SYMBOLS).map { case (w, len, _) =>
-        val b = new Array[Byte](len)
-        var j = 0
-        while (j < len) { b(j) = ((w >>> (56 - 8 * j)) & 0xff).toByte; j += 1 }
-        b
-      }
+      symbols = gains.top(MAX_SYMBOLS)
       round += 1
     }
     new Table(symbols)

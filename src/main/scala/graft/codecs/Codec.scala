@@ -334,7 +334,19 @@ object ChunkCodec {
   // 8→32 CPU-inflation term. Payload bytes are bit-identical.
   private val bodyTl = new ThreadLocal[Bytes.Writer]()
 
-  def encode(vec: ColVec, plan: Plan): Array[Byte] = {
+  def encode(vec: ColVec, plan: Plan): Array[Byte] = encodeEach(vec, Seq(plan)).head
+
+  /** `encode(vec, p)` for each of `plans`, which must share ONE method:
+    * the method stage — the expensive half for FSST/DICT — runs once,
+    * the entropy stage and header once per plan. The Selector's trials
+    * go through this, so fsst+zstd5 and fsst+zstd3 train one FSST table
+    * between them, and a trial whose input is the whole chunk yields the
+    * chunk's real encode.
+    */
+  def encodeEach(vec: ColVec, plans: Seq[Plan]): Seq[Array[Byte]] = {
+    require(plans.nonEmpty && plans.forall(_.method == plans.head.method),
+      "encodeEach requires a single shared method")
+    val method = plans.head.method
     // pre-size to the raw payload estimate: a 16 MB chunk body would
     // otherwise be copied ~10x by doubling growth
     val sizeHint = vec match {
@@ -352,30 +364,32 @@ object ChunkCodec {
       val nulls = vec.nullCount
       if (nulls > 0) writeValidity(vec.validity, body)
       val colType = vec match {
-        case v: LongVec => LongKernels.encode(plan.method, v, body); ColType.LONG
-        case v: DoubleVec => DoubleKernels.encode(plan.method, v, body); ColType.DOUBLE
-        case v: BinVec => BinKernels.encode(plan.method, v, body); ColType.BIN
+        case v: LongVec => LongKernels.encode(method, v, body); ColType.LONG
+        case v: DoubleVec => DoubleKernels.encode(method, v, body); ColType.DOUBLE
+        case v: BinVec => BinKernels.encode(method, v, body); ColType.BIN
       }
       val rawLen = body.size
       // dup-gated LDM: only bother fingerprinting when the body is big
       // enough for the wide window to exist at all
-      val ldm = plan.entropy == Entropy.ZSTD && rawLen >= Entropy.LDM_MIN_BYTES &&
-        ldmHint(vec)
-      val comp =
-        if (plan.entropy == Entropy.NONE) null
-        else Entropy.compressRange(plan.entropy, plan.level, body.rawBuffer, rawLen, ldm)
-      // entropy made it bigger? store uncompressed (blosc2 does the same fallback)
-      val (ent, payload, payloadLen) =
-        if (comp != null && comp.length < rawLen) (plan.entropy, comp, comp.length)
-        else (Entropy.NONE, body.rawBuffer, rawLen)
-      val h = new Bytes.Writer(32)
-      h.putByte(MAGIC); h.putByte(VERSION)
-      h.putByte(colType); h.putByte(plan.method); h.putByte(ent); h.putByte(plan.level)
-      h.putVarInt(vec.n); h.putVarInt(nulls); h.putVarInt(rawLen)
-      val out = new Array[Byte](h.size + payloadLen)
-      System.arraycopy(h.rawBuffer, 0, out, 0, h.size)
-      System.arraycopy(payload, 0, out, h.size, payloadLen)
-      out
+      lazy val dupHint = ldmHint(vec)
+      plans.toVector.map { plan =>
+        val ldm = plan.entropy == Entropy.ZSTD && rawLen >= Entropy.LDM_MIN_BYTES && dupHint
+        val comp =
+          if (plan.entropy == Entropy.NONE) null
+          else Entropy.compressRange(plan.entropy, plan.level, body.rawBuffer, rawLen, ldm)
+        // entropy made it bigger? store uncompressed (blosc2 does the same fallback)
+        val (ent, payload, payloadLen) =
+          if (comp != null && comp.length < rawLen) (plan.entropy, comp, comp.length)
+          else (Entropy.NONE, body.rawBuffer, rawLen)
+        val h = new Bytes.Writer(32)
+        h.putByte(MAGIC); h.putByte(VERSION)
+        h.putByte(colType); h.putByte(method); h.putByte(ent); h.putByte(plan.level)
+        h.putVarInt(vec.n); h.putVarInt(nulls); h.putVarInt(rawLen)
+        val out = new Array[Byte](h.size + payloadLen)
+        System.arraycopy(h.rawBuffer, 0, out, 0, h.size)
+        System.arraycopy(payload, 0, out, h.size, payloadLen)
+        out
+      }
     } finally {
       // cap retained capacity: 32 threads × ≤128 MiB bounds the pool at
       // a predictable slice of the pinned heap (chunk bodies are ~48 MiB)
@@ -383,48 +397,13 @@ object ChunkCodec {
     }
   }
 
-  /** Payload sizes the `plans` (all sharing ONE method) would produce
-    * on `vec`: the method stage — the expensive half for FSST/DICT —
-    * runs once, the entropy stage per plan. Selector's escalation uses
-    * this so a same-method near-tie (fsst+zstd5 vs fsst+zstd3) does not
-    * pay the method encode twice on the large sample. Sizes omit the
-    * constant block header, which is identical across the plans (same
-    * method → same rawLen/n/nulls), so cost RANKING matches what
-    * full `encode(...).length` would give exactly.
+  /** Bytes of an encoded block after its header (the entropy-stage
+    * output, or the raw method body when stored uncompressed).
     */
-  def trialSizes(vec: ColVec, plans: Seq[Plan]): Seq[Int] = {
-    require(plans.nonEmpty && plans.forall(_.method == plans.head.method),
-      "trialSizes requires a single shared method")
-    // same raw-payload size hint as encode(): the ~1.5 MiB large-sample
-    // body would otherwise pay ~5 doubling grow-and-copy rounds
-    val sizeHint = vec match {
-      case v: BinVec =>
-        var t = 64L; var i = 0
-        while (i < v.n) { val x = v.values(i); if (x != null) t += x.length + 3; i += 1 }
-        math.min(t, Int.MaxValue / 2L).toInt
-      case v => v.n * 8 + 64
-    }
-    val body = new Bytes.Writer(math.max(1 << 10, sizeHint))
-    val nulls = vec.nullCount
-    if (nulls > 0) writeValidity(vec.validity, body)
-    vec match {
-      case v: LongVec => LongKernels.encode(plans.head.method, v, body)
-      case v: DoubleVec => DoubleKernels.encode(plans.head.method, v, body)
-      case v: BinVec => BinKernels.encode(plans.head.method, v, body)
-    }
-    val rawLen = body.size
-    // mirror encode()'s short-circuit order: the fingerprint scan only
-    // runs when some plan could actually use the wide window (samples
-    // are usually below LDM_MIN_BYTES, so this is almost always free)
-    lazy val dupHint = ldmHint(vec)
-    plans.map { p =>
-      if (p.entropy == Entropy.NONE) rawLen
-      else {
-        val ldm = p.entropy == Entropy.ZSTD && rawLen >= Entropy.LDM_MIN_BYTES && dupHint
-        val comp = Entropy.compressRange(p.entropy, p.level, body.rawBuffer, rawLen, ldm)
-        if (comp.length < rawLen) comp.length else rawLen
-      }
-    }
+  def payloadLen(block: Array[Byte]): Int = {
+    val r = new Bytes.Reader(block, 6)
+    r.getVarInt(); r.getVarInt(); r.getVarInt()
+    block.length - r.pos
   }
 
   def decode(block: Array[Byte]): ColVec = {

@@ -1,6 +1,7 @@
 package graft.encode
 
 import graft.codecs._
+import scala.util.control.NonFatal
 
 /** Sampling-based codec auto-selector — the role blosc2's tuners play
   * (STUNE/BTUNE, python-blosc2 `__init__.py:188-198`: "can select
@@ -97,6 +98,11 @@ object Selector {
     * of wall-clock, so task retries choose identical plans. Same pattern
     * as the reference's measured planner constants
     * (python-blosc2 ctable_indexing.py:238-242).
+    *
+    * The constants are FROZEN: they decide plans, and plans decide the
+    * stored bytes, so a codec speed-up must not move them (that would
+    * change output the byte pins guard). Recalibrating them from
+    * measured rates is ROADMAP direction 1's job.
     */
   def nsPerByte(p: Plan): Double = {
     val m: Double = p.method match {
@@ -141,41 +147,83 @@ object Selector {
     case v => v.n * 8L
   }
 
-  private def trialCost(s: ColVec, sBytes: Long, p: Plan): Double =
-    try ChunkCodec.encode(s, p).length.toDouble + nsPerByte(p) * sBytes * TIME_PRICE
-    catch { case _: Throwable => Double.MaxValue }
+  /** Trial-encode every plan on `s`, handing `f` each plan's index and
+    * `ChunkCodec.encode(s, plan)` (None when that encode failed). Each
+    * same-method group shares ONE method stage (ChunkCodec.encodeEach);
+    * a group whose shared encode fails is retried plan by plan, so a
+    * failure demotes only the plans it belongs to. Fatal errors
+    * (OutOfMemoryError, a killed task's InterruptedException) propagate.
+    */
+  private def trialEncodes(s: ColVec, plans: IndexedSeq[Plan])(f: (Int, Option[Array[Byte]]) => Unit): Unit =
+    plans.map(_.method).distinct.foreach { m =>
+      val group = plans.indices.filter(i => plans(i).method == m)
+      val shared = try Some(ChunkCodec.encodeEach(s, group.map(plans))) catch { case NonFatal(_) => None }
+      group.indices.foreach { j =>
+        val bytes = shared match {
+          case Some(all) => Some(all(j))
+          case None if group.length == 1 => None
+          case None => try Some(ChunkCodec.encode(s, plans(group(j)))) catch { case NonFatal(_) => None }
+        }
+        f(group(j), bytes)
+      }
+    }
+
+  /** A chosen plan, plus the chunk's encode under it when a trial
+    * already produced one — its input was the whole chunk — so the
+    * caller can skip the real encode.
+    */
+  final case class Choice(plan: Plan, encoded: Option[Array[Byte]])
 
   /** Pick the best plan for this chunk: trial-encode a small sample,
     * escalating near-ties to a large sample (two-stage STUNE).
     */
-  def choose(vec: ColVec): Plan = {
-    val cands = candidatesFor(vec)
-    if (cands.length == 1) return cands.head
+  def choose(vec: ColVec): Plan = chooseEncoded(vec).plan
+
+  /** [[choose]], keeping the winning trial's bytes when they are the
+    * chunk's encode.
+    */
+  def chooseEncoded(vec: ColVec): Choice = {
+    val cands = candidatesFor(vec).toIndexedSeq
+    if (cands.length == 1) return Choice(cands.head, None)
     val s = sampleVec(vec)
     val sBytes = vecBytes(s)
-    val scored = cands.map(p => p -> trialCost(s, sBytes, p)).sortBy(_._2)
-    val (best, bestCost) = scored.head
-    if (scored.length >= 2 && scored(1)._2 <= bestCost * ESCALATE_MARGIN && vec.n > s.n) {
+    val costs = new Array[Double](cands.length)
+    // only the best-so-far bytes are kept (ties go to the earlier
+    // candidate, as the stable sort below ranks them)
+    var kept = -1
+    var keptBytes: Option[Array[Byte]] = None
+    trialEncodes(s, cands) { (i, bytes) =>
+      costs(i) = bytes.fold(Double.MaxValue)(_.length.toDouble + nsPerByte(cands(i)) * sBytes * TIME_PRICE)
+      if (kept < 0 || costs(i) < costs(kept) || (costs(i) == costs(kept) && i < kept)) {
+        kept = i
+        keptBytes = if (s eq vec) bytes else None
+      }
+    }
+    val order = cands.indices.sortBy(i => costs(i))
+    if (order.length >= 2 && costs(order(1)) <= costs(order(0)) * ESCALATE_MARGIN && vec.n > s.n) {
       val big = largeSample(vec)
       if (big.n > s.n) {
         val bBytes = vecBytes(big)
-        val (a, b) = (scored.head._1, scored(1)._1)
+        val finalists = IndexedSeq(cands(order(0)), cands(order(1)))
         // same-method finalists (the common fsst+zstd5 vs fsst+zstd3
-        // tie): run the method stage once on the large sample, trial
-        // only the entropy stages — identical ranking, half the cost
-        def perPlan = (trialCost(big, bBytes, a), trialCost(big, bBytes, b))
-        val (ca, cb) =
-          if (a.method == b.method)
-            try {
-              val sz = ChunkCodec.trialSizes(big, Seq(a, b))
-              (sz(0) + nsPerByte(a) * bBytes * TIME_PRICE,
-                sz(1) + nsPerByte(b) * bBytes * TIME_PRICE)
-            } catch { case _: Throwable => perPlan }
-          else perPlan
-        return if (ca <= cb) a else b
+        // tie) rank on payload bytes: their headers are equal length
+        val same = finalists(0).method == finalists(1).method
+        // largeSample keeps every row, in order, when it covers them all
+        val whole = big.n == vec.n
+        val bigBytes = Array.fill[Option[Array[Byte]]](2)(None)
+        val bigCosts = new Array[Double](2)
+        trialEncodes(big, finalists) { (i, bytes) =>
+          if (whole) bigBytes(i) = bytes
+          bigCosts(i) = bytes.fold(Double.MaxValue) { b =>
+            (if (same) ChunkCodec.payloadLen(b) else b.length).toDouble +
+              nsPerByte(finalists(i)) * bBytes * TIME_PRICE
+          }
+        }
+        val w = if (bigCosts(0) <= bigCosts(1)) 0 else 1
+        return Choice(finalists(w), bigBytes(w))
       }
     }
-    if (best == null) Plan(Method.PLAIN, Entropy.ZSTD, ZSTD_LEVEL) else best
+    Choice(cands(order(0)), keptBytes)
   }
 
   /** Large sample: 8 evenly spaced CONTIGUOUS runs totaling up to

@@ -129,11 +129,15 @@ object TableCodec {
     // Sticky plan memo: once a column chooses the SAME plan for
     // STICKY_AFTER consecutive chunks, skip the trial encodes and reuse
     // it, re-running the trials every REVALIDATE_EVERY chunks (a
-    // disagreement resets the streak). Trial encodes cost ~10% of
-    // encode CPU and their buffer traffic competes with the real
-    // codecs for DRAM at 32 threads; real columns are overwhelmingly
-    // plan-stable chunk to chunk. Deterministic per task (the chunk
-    // sequence within a partition is fixed), so retries re-derive
+    // disagreement resets the streak). Trials are most of the encode
+    // CPU on small chunks: on perfbench's ingest op (~94-row chunks,
+    // 4-core VM) the traced replay's `encode.selector_share` is ~0.6,
+    // and FSST compress + training are ~35% of executor CPU samples
+    // (it was 0.73, with FSST training at 38% and matcher builds at
+    // 30% of samples, while every FSST plan trained its own table and
+    // every matcher filled two 64Ki-entry tables). Real columns are
+    // overwhelmingly plan-stable chunk to chunk. Deterministic per task
+    // (the chunk sequence within a partition is fixed), so retries re-derive
     // identical plans. Methods whose validity is PER-CHUNK-validated
     // (BYTEPACK's alphabet bound, CONST, plugin kernels) are never
     // stuck — their trials always run.
@@ -146,16 +150,17 @@ object TableCodec {
       p.method != graft.codecs.Method.BYTEPACK &&
         p.method != graft.codecs.Method.CONST &&
         !graft.codecs.CodecRegistry.isPluginId(p.method)
-    def choosePlan(i: Int, vec: graft.codecs.ColVec): graft.codecs.Plan =
+    def choosePlan(i: Int, vec: graft.codecs.ColVec): Selector.Choice =
       if (agree(i) >= STICKY_AFTER && sinceTrial(i) < REVALIDATE_EVERY) {
         sinceTrial(i) += 1
-        lastPlan(i)
+        Selector.Choice(lastPlan(i), None)
       } else {
-        val p = Selector.choose(vec)
+        val c = Selector.chooseEncoded(vec)
+        val p = c.plan
         if (p == lastPlan(i) && stickable(p)) agree(i) += 1
         else { agree(i) = 1; lastPlan(i) = if (stickable(p)) p else null }
         sinceTrial(i) = 0
-        p
+        c
       }
     val planPrefix = fields.map { case (f, _) =>
       truncPrec.get(f.name).map(k => s"trunc$k+").getOrElse("")
@@ -173,8 +178,9 @@ object TableCodec {
         val cols = fields.indices.map { i =>
           val (f, _) = fields(i)
           val vec = builders(i).result()
-          val plan = choosePlan(i, vec)
-          val payload = ChunkCodec.encode(vec, plan)
+          val Selector.Choice(plan, trialBytes) = choosePlan(i, vec)
+          // a trial over the whole chunk already produced its encode
+          val payload = trialBytes.getOrElse(ChunkCodec.encode(vec, plan))
           EncodedCol(
             name = f.name,
             dt = f.dataType.catalogString,

@@ -64,6 +64,30 @@ class CodecRegistrySpec extends AnyFunSuite {
     (0 until vec.n).foreach(i => assert(java.util.Arrays.equals(back.values(i), vec.values(i))))
   }
 
+  test("selector trials demote a failing plugin but never swallow a fatal error") {
+    // offered only on chunks led by the probe marker, so these kernels
+    // stay out of every other suite's selections in this JVM
+    val marker = "throwing-kernel-probe"
+    def throwing(err: () => Throwable): CodecRegistry.BinKernel = new CodecRegistry.BinKernel {
+      val name = "throws"
+      def encode(vec: BinVec, w: Bytes.Writer): Unit = throw err()
+      def decode(r: Bytes.Reader, n: Int, validity: Array[Boolean]): Array[Array[Byte]] =
+        throw new UnsupportedOperationException
+      override def offer(vec: BinVec): Boolean =
+        vec.n > 0 && vec.values(0) != null && new String(vec.values(0), "UTF-8").startsWith(marker)
+    }
+    val vec = BinVec(Array.tabulate(300)(i => s"$marker doc $i contents with words $i".getBytes("UTF-8")))
+    CodecRegistry.registerBin(42, throwing(() => new IllegalStateException("broken plugin")))
+    assert(graft.encode.Selector.candidatesFor(vec).exists(_.method == 42))
+    val plan = graft.encode.Selector.choose(vec)
+    assert(plan.method != 42, plan.label)
+    val back = ChunkCodec.decode(ChunkCodec.encode(vec, plan)).asInstanceOf[BinVec]
+    (0 until vec.n).foreach(i => assert(java.util.Arrays.equals(back.values(i), vec.values(i))))
+    // a killed task's interrupt must reach the task, not demote a plan
+    CodecRegistry.registerBin(43, throwing(() => new InterruptedException("task killed")))
+    intercept[InterruptedException](graft.encode.Selector.choose(vec))
+  }
+
   test("plugin id range is enforced and unregistered decode fails loudly") {
     intercept[IllegalArgumentException] {
       CodecRegistry.registerBin(10, XorKernel) // built-in range

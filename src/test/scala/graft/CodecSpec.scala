@@ -2,14 +2,16 @@ package graft
 
 import graft.codecs._
 import graft.core.{BitPack, Bytes}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.corpus.Corpus
+import graft.encode.{CodeFile, Selector, TableCodec}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 
 /** Roundtrip unit tests for every codec kernel — the reference's core
   * oracle pattern (python-blosc2 tests/test_compress2.py:58-76: compress
   * then decompress, assert byte equality), crossed over the FIXTURES.md
   * §2 micro fixtures.
   */
-class CodecSpec extends AnyFunSuite {
+class CodecSpec extends SparkTestBase {
 
   private val rnd = new java.util.Random(42)
 
@@ -277,6 +279,142 @@ class CodecSpec extends AnyFunSuite {
         assert(disp.longestMatch(data, pos) == naive(pos), s"trial $trial pos $pos")
         pos += 1
       }
+    }
+  }
+
+  /** Plain reference FSST trainer: naive longest match, String-keyed
+    * gains, one full stable sort per round — the ranking Fsst.train
+    * must reproduce (bytes saved descending, then symbol bytes
+    * ascending). Samples like Fsst.train: every max(1, n/64)-th value
+    * until 32 KiB. Returns the symbols and the last round's number of
+    * distinct candidates.
+    */
+  private def referenceTrain(vec: BinVec): (Seq[Seq[Byte]], Int) = {
+    val sb = new java.io.ByteArrayOutputStream()
+    val step = math.max(1, vec.n / 64)
+    var i = 0
+    while (i < vec.n && sb.size < (1 << 15)) {
+      val v = vec.values(i)
+      if (v != null) sb.write(v, 0, math.min(v.length, (1 << 15) - sb.size))
+      i += step
+    }
+    val s = sb.toByteArray
+    var symbols = Vector.empty[Array[Byte]]
+    var candidates = 0
+    for (_ <- 1 to 3) {
+      def unitLen(pos: Int): Int = {
+        var best = 1 // no symbol: escape + literal consumes one byte
+        for (sym <- symbols if sym.length > best && pos + sym.length <= s.length) {
+          var j = 0
+          while (j < sym.length && s(pos + j) == sym(j)) j += 1
+          if (j == sym.length) best = sym.length
+        }
+        best
+      }
+      val covered = scala.collection.mutable.HashMap[String, Long]()
+      def bump(start: Int, len: Int): Unit = {
+        val k = new String(s, start, len, ISO_8859_1)
+        covered(k) = covered.getOrElse(k, 0L) + len
+      }
+      var pos = 0
+      var prevStart = -1
+      var prevLen = 0
+      while (pos < s.length) {
+        val len = unitLen(pos)
+        bump(pos, len)
+        if (prevStart >= 0 && prevLen + len <= Fsst.MAX_LEN) bump(prevStart, prevLen + len)
+        prevStart = pos
+        prevLen = len
+        pos += len
+      }
+      candidates = covered.size
+      val saved = covered.toSeq.map { case (k, c) => (k, if (k.length >= 2) c * (k.length - 1) / k.length else c) }
+      symbols = saved.filter(_._2 > 0)
+        .sortWith((a, b) => if (a._2 != b._2) a._2 > b._2 else a._1 < b._1)
+        .take(Fsst.MAX_SYMBOLS)
+        .map(_._1.getBytes(ISO_8859_1))
+        .toVector
+    }
+    (symbols.map(_.toSeq), candidates)
+  }
+
+  test("FSST training matches a plain reference trainer (corpus and adversarial tie-dense chunks)") {
+    def bin(vs: Seq[String]) = BinVec(vs.map(_.getBytes(UTF_8)).toArray)
+    val corpus = for (seed <- Seq(3L, 101L); n <- Seq(40, 400)) yield {
+      val files = (0 until n).map(i => Corpus.file(seed, i.toLong))
+      Seq(bin(files.map(_.content)), bin(files.map(_.path)))
+    }
+    val g = new java.util.Random(5)
+    // 3-letter alphabets: thousands of candidates, heavy saved-bytes ties
+    val adversarial = Seq(20, 400, 3000).map { n =>
+      bin(Seq.fill(n)(Seq.fill(1 + g.nextInt(40))(('a' + g.nextInt(3)).toChar).mkString))
+    }
+    val withNulls = BinVec(Array.tabulate(300)(i =>
+      if (i % 4 == 0) null else s"k${i % 17}-${"xyz" * (i % 5)}".getBytes(UTF_8)),
+      Array.tabulate(300)(_ % 4 != 0))
+    // random bytes: more distinct candidates than the counter's initial
+    // capacity, so its growth path runs
+    val randomBytes = BinVec(Array.fill(3000)(Array.fill(30)(g.nextInt(256).toByte)))
+    val edge = Seq(BinVec(Array.empty[Array[Byte]]), bin(Seq("a")), bin(Seq("", "ab", "")), withNulls, randomBytes)
+    for ((vec, k) <- (corpus.flatten ++ adversarial ++ edge).zipWithIndex) {
+      val (want, _) = referenceTrain(vec)
+      assert(Fsst.train(vec).symbols.map(_.toSeq).toSeq == want, s"chunk $k")
+    }
+    adversarial.drop(1).foreach(v => assert(referenceTrain(v)._2 > Fsst.MAX_SYMBOLS))
+  }
+
+  /** Seeded Long, Double and Bin chunks, with and without nulls: n from
+    * 1 through SAMPLE_MIN (the selector's sample IS the chunk) up to
+    * wide-value text whose byte-bounded sample is a strict subset.
+    */
+  private def trialChunks(seed: Long): Seq[ColVec] = {
+    val g = new java.util.Random(seed)
+    for (n <- Seq(1, 17, Selector.SAMPLE_MIN, 150, 600); vl <- Seq(null, Array.fill(n)(g.nextInt(6) != 0))) yield {
+      val files = Array.tabulate(n)(i => Corpus.file(seed, i.toLong))
+      def bin(f: CodeFile => String) =
+        BinVec(Array.tabulate(n)(i => if (vl != null && !vl(i)) null else f(files(i)).getBytes(UTF_8)), vl)
+      Seq(
+        LongVec(Array.fill(n)(g.nextInt(1 << g.nextInt(30)).toLong), vl),
+        LongVec(Array.tabulate(n)(i => 1600000000000L + i * 1000L + g.nextInt(7)), vl),
+        DoubleVec(Array.fill(n)((g.nextInt(910000) + 90000) / 100.0), vl),
+        DoubleVec(Array.fill(n)(g.nextGaussian()), vl),
+        bin(_.repo), bin(_.path), bin(_.commit), bin(_.lang)) ++
+        (if (n <= 150) Seq(bin(_.content)) else Nil)
+    }
+  }.flatten
+
+  test("selector trial bytes equal the real encode (property)") {
+    var whole = 0
+    var escalated = 0
+    for (seed <- 1L to 3L; vec <- trialChunks(seed)) {
+      // the shared method stage reproduces encode() plan by plan
+      for ((_, group) <- Selector.candidatesFor(vec).groupBy(_.method)) {
+        val shared = ChunkCodec.encodeEach(vec, group)
+        group.zip(shared).foreach { case (p, b) =>
+          assert(b.sameElements(ChunkCodec.encode(vec, p)), s"${p.label} n=${vec.n}")
+        }
+      }
+      // trial bytes handed back with the plan ARE the chunk's encode
+      val c = Selector.chooseEncoded(vec)
+      assert(c.plan == Selector.choose(vec))
+      c.encoded.foreach { b =>
+        assert(b.sameElements(ChunkCodec.encode(vec, c.plan)), s"${c.plan.label} n=${vec.n}")
+        if (Selector.sampleVec(vec) eq vec) whole += 1 else escalated += 1
+      }
+    }
+    assert(whole > 0 && escalated > 0, s"whole=$whole escalated=$escalated")
+  }
+
+  test("every stored payload re-encodes byte for byte from its decoded vector and header plan") {
+    val df = Corpus.generate(spark, nRows = 600, nParts = 3).toDF().selectExpr(
+      "path", "lang", "IF(length(repo) % 5 = 0, NULL, content) AS content",
+      "CAST(length(content) AS BIGINT) AS len",
+      "IF(length(path) % 3 = 0, NULL, length(content) / 7.0D) AS ratio")
+    val cols = TableCodec.encode(df, chunkRows = 64).collect().flatMap(_.cols)
+    assert(cols.map(_.name).distinct.length == 5 && cols.length > 5 * 8)
+    cols.foreach { c =>
+      val again = ChunkCodec.encode(ChunkCodec.decode(c.payload), ChunkCodec.peekPlan(c.payload))
+      assert(again.sameElements(c.payload), s"${c.name} ${c.plan}")
     }
   }
 
