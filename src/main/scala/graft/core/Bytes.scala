@@ -56,13 +56,6 @@ object Bytes {
       len += 8
     }
 
-    def putIntLE(v: Int): Unit = {
-      ensure(4)
-      buf(len) = v.toByte; buf(len + 1) = (v >>> 8).toByte
-      buf(len + 2) = (v >>> 16).toByte; buf(len + 3) = (v >>> 24).toByte
-      len += 4
-    }
-
     def result(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
 
     /** The backing array (valid bytes are [0, size)). For zero-copy
@@ -107,12 +100,6 @@ object Bytes {
       var v = 0L; var i = 0
       while (i < 8) { v |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
       pos += 8; v
-    }
-
-    def getIntLE(): Int = {
-      val v = (buf(pos) & 0xff) | ((buf(pos + 1) & 0xff) << 8) |
-        ((buf(pos + 2) & 0xff) << 16) | ((buf(pos + 3) & 0xff) << 24)
-      pos += 4; v
     }
   }
 }

@@ -72,26 +72,16 @@ object MetaAgg {
   private def sumFallbackE(c: String): Column =
     col(s"${fld(c)}.sumKey") === "" && col(s"${fld(c)}.nNulls") < col("nRows")
 
-  /** Decode ONLY the chunks named by `keys`, reading just `colName`'s
-    * column with the key predicate pushed into the parquet scan.
+  /** Decode ONLY `colName`'s column of the fallback chunks
+    * (StoreLayout.readChunks: `keys` pushed into the parquet scan, or a
+    * left-semi join on the lazy key frame `cand` when they were too
+    * many to push).
     */
-  private def decodeByKeys(spark: SparkSession, storeDir: String, schema: StructType,
-                           colName: String, keys: Seq[(Int, Int, Long)]): DataFrame =
-    TableCodec.decode(
-      StoreLayout.readBlocksByKeys(spark, storeDir, keys, Seq(colName)),
+  private def decodeChunks(spark: SparkSession, storeDir: String, schema: StructType,
+                           colName: String, cand: => DataFrame,
+                           keys: Option[Seq[(Int, Int, Long)]]): DataFrame =
+    TableCodec.decode(StoreLayout.readChunks(spark, storeDir, cand, keys, Seq(colName)),
       StructType(Seq(MetaIndex.flatOf(schema)(colName))))
-
-  /** Decode the chunks named by a LAZY key frame via left-semi join —
-    * the not-pushable path for huge fallback sets.
-    */
-  private def decodeBySemiJoin(spark: SparkSession, storeDir: String, schema: StructType,
-                               colName: String, keysDf: DataFrame): DataFrame = {
-    val blocks = StoreLayout.assemble(
-      Snapshots.storeDf(spark, storeDir)
-        .join(keysDf.select("shard", "partId", "chunkId"), Seq("shard", "partId", "chunkId"), "left_semi"),
-      Seq(StoreLayout.fieldName(colName)))
-    TableCodec.decode(blocks, StructType(Seq(MetaIndex.flatOf(schema)(colName))))
-  }
 
   /** Fallback-chunk keys per column, each bounded INDEPENDENTLY.
     * Common case: the union of every column's flagged chunks fits
@@ -111,8 +101,8 @@ object MetaAgg {
       .filter(conds.map(_._2).reduce(_ || _))
       .select(Seq(col("shard"), col("partId"), col("chunkId")) ++
         conds.zipWithIndex.map { case ((_, e), i) => e.as(s"_f$i") }: _*)
-      .limit(MetaIndex.MAX_PUSHDOWN_KEYS + 1).collect()
-    if (flagged.length <= MetaIndex.MAX_PUSHDOWN_KEYS)
+      .limit(StoreLayout.MAX_PUSHDOWN_KEYS + 1).collect()
+    if (flagged.length <= StoreLayout.MAX_PUSHDOWN_KEYS)
       conds.zipWithIndex.map { case ((c, _), i) =>
         c -> Some(flagged.filter(_.getBoolean(3 + i))
           .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
@@ -123,9 +113,9 @@ object MetaAgg {
       conds.zipWithIndex.map { case ((c, e), i) =>
         val n = if (cnts.isNullAt(i)) 0L else cnts.getLong(i)
         if (n == 0L) c -> Some(Nil)
-        else if (n <= MetaIndex.MAX_PUSHDOWN_KEYS)
+        else if (n <= StoreLayout.MAX_PUSHDOWN_KEYS)
           c -> Some(meta.filter(e).select("shard", "partId", "chunkId")
-            .limit(MetaIndex.MAX_PUSHDOWN_KEYS).collect()
+            .limit(StoreLayout.MAX_PUSHDOWN_KEYS).collect()
             .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
         else c -> None
       }.toMap
@@ -196,10 +186,7 @@ object MetaAgg {
           else BigInt(row.getDecimal(1 + i * 3).toBigIntegerExact) // decimal(38,0) — no fraction
         val nFb = if (row.isNullAt(1 + i * 3 + 2)) 0L else row.getLong(1 + i * 3 + 2)
         if (nFb > 0L) {
-          val decoded = fbKeys(c) match {
-            case Some(keys) => decodeByKeys(spark, storeDir, schema, c, keys)
-            case None => decodeBySemiJoin(spark, storeDir, schema, c, meta.filter(sumFallbackE(c)))
-          }
+          val decoded = decodeChunks(spark, storeDir, schema, c, meta.filter(sumFallbackE(c)), fbKeys(c))
           val dt = MetaIndex.flatOf(schema)(c).dataType
           val v = dt match {
             case BooleanType => when(col(c), 1L).otherwise(0L).cast(DecimalType(38, 0))
@@ -282,11 +269,9 @@ object MetaAgg {
     val deadKeys = fallbackKeys(meta, cols.map(c => c -> !aliveE(c)))
 
     val decodedParts = cols.flatMap { c =>
-      val decoded = deadKeys(c) match {
-        case Some(Nil) => None
-        case Some(keys) => Some(decodeByKeys(spark, storeDir, schema, c, keys))
-        case None => Some(decodeBySemiJoin(spark, storeDir, schema, c, meta.filter(!aliveE(c))))
-      }
+      val decoded =
+        if (deadKeys(c).exists(_.isEmpty)) None
+        else Some(decodeChunks(spark, storeDir, schema, c, meta.filter(!aliveE(c)), deadKeys(c)))
       decoded.map { df =>
         val domain = MetaIndex.flatOf(schema)(c).dataType match {
           case BooleanType => when(col(c), "1").otherwise("0")
@@ -366,10 +351,7 @@ object MetaAgg {
       val nUnb = if (row.isNullAt(1 + i * 3 + 2)) 0L else row.getLong(1 + i * 3 + 2)
       if (nUnb == 0L) c -> (boundedMin, boundedMax)
       else {
-        val decoded = fbKeys(c) match {
-          case Some(keys) => decodeByKeys(spark, storeDir, schema, c, keys)
-          case None => decodeBySemiJoin(spark, storeDir, schema, c, meta.filter(unboundedE(c)))
-        }
+        val decoded = decodeChunks(spark, storeDir, schema, c, meta.filter(unboundedE(c)), fbKeys(c))
         c -> foldDecoded(decoded, c, dts(c), boundedMin, boundedMax)
       }
     }.toMap

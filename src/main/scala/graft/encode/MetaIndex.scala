@@ -30,12 +30,6 @@ import org.apache.spark.sql.types._
   */
 object MetaIndex {
 
-  /** How many surviving chunk keys we are willing to push down as an
-    * OR-of-ANDs scan predicate. Above this the query is not selective,
-    * and the honest plan is a full scan + semi-join.
-    */
-  val MAX_PUSHDOWN_KEYS = 1024
-
   /** One row per (chunk, column) with zone bounds — payload/sha leaves
     * are never in the scan's ReadSchema (asserted in MetaIndexSpec).
     */
@@ -81,54 +75,35 @@ object MetaIndex {
     "bigint", "int", "smallint", "tinyint", "boolean",
     "double", "float", "date", "timestamp", "timestamp_ntz")
 
-  /** zone [minKey,maxKey] intersects [lo,hi]? (Catalyst expression over
-    * the zoneMeta columns; dt-aware compare.) Long keys are compared as
-    * doubles: rounding is monotonic, so drift can only ADMIT extra
-    * chunks near 2^53 boundaries (the exact post-decode filter removes
-    * them), never wrongly prune.
+  /** Does zone [minKey, maxKey] intersect the range [lo, hi]? A `None`
+    * side is unbounded (one-sided predicates `x >= lo` / `x <= hi`;
+    * strict inequalities use the closed form — conservative, may admit
+    * a boundary-only chunk that the exact filter removes). An empty key
+    * is an unbounded zone side. Compare is dt-aware: numeric/temporal
+    * zones compare as doubles — rounding is monotonic, so drift near
+    * 2^53 can only ADMIT extra chunks, never wrongly prune — and
+    * string zones in UTF-8 byte order.
     */
-  def intersectsExpr(lo: String, hi: String): Column =
-    intersectsExprOn(col("minKey"), col("maxKey"), col("dt"), lo, hi)
-
-  /** Parameterized variant over arbitrary zone-leaf columns — lets a
-    * MULTI-column candidate intersection run as one conjunctive filter
-    * over a single store scan (each chunk row carries every column's
-    * zone struct) instead of per-column scans joined back together.
-    */
-  def intersectsExprOn(minKey: Column, maxKey: Column, dt: Column,
-                       lo: String, hi: String): Column = {
+  def zoneHit(minKey: Column, maxKey: Column, dt: Column,
+              lo: Option[String], hi: Option[String]): Column = {
+    def all(cs: Seq[Column]): Column = cs.reduceOption(_ && _).getOrElse(lit(true))
     val unbounded = minKey === "" && maxKey === ""
     val isNum = dt.isin(numericDts: _*) || dt.startsWith("decimal")
     val minD = when(minKey === "", lit(Double.NegativeInfinity)).otherwise(minKey.cast("double"))
     val maxD = when(maxKey === "", lit(Double.PositiveInfinity)).otherwise(maxKey.cast("double"))
-    val numHit = !(maxD < lit(lo).cast("double") || minD > lit(hi).cast("double"))
-    val strHit = (maxKey === "" || maxKey >= lit(lo)) &&
-      (minKey === "" || minKey <= lit(hi))
+    val numHit = all(lo.map(l => maxD >= lit(l).cast("double")).toSeq ++
+      hi.map(h => minD <= lit(h).cast("double")))
+    val strHit = all(lo.map(l => maxKey === "" || maxKey >= lit(l)).toSeq ++
+      hi.map(h => minKey === "" || minKey <= lit(h)))
     unbounded || when(isNum, numHit).otherwise(strHit)
   }
 
-  /** One-sided variants for predicates with a single bound (x >= lo /
-    * x <= hi): same dt-aware compare, the missing side unbounded.
-    * Strict inequalities use the closed form — conservative (may admit
-    * a boundary-only chunk; the exact filter removes it), never prunes
-    * wrongly.
+  /** [[zoneHit]] over column `colName`'s chunk-struct leaves in the
+    * store schema.
     */
-  def intersectsLoExpr(lo: String): Column = {
-    val unbounded = col("minKey") === "" && col("maxKey") === ""
-    val isNum = col("dt").isin(numericDts: _*) || col("dt").startsWith("decimal")
-    val maxD = when(col("maxKey") === "", lit(Double.PositiveInfinity)).otherwise(col("maxKey").cast("double"))
-    val numHit = maxD >= lit(lo).cast("double")
-    val strHit = col("maxKey") === "" || col("maxKey") >= lit(lo)
-    unbounded || when(isNum, numHit).otherwise(strHit)
-  }
-
-  def intersectsHiExpr(hi: String): Column = {
-    val unbounded = col("minKey") === "" && col("maxKey") === ""
-    val isNum = col("dt").isin(numericDts: _*) || col("dt").startsWith("decimal")
-    val minD = when(col("minKey") === "", lit(Double.NegativeInfinity)).otherwise(col("minKey").cast("double"))
-    val numHit = minD <= lit(hi).cast("double")
-    val strHit = col("minKey") === "" || col("minKey") <= lit(hi)
-    unbounded || when(isNum, numHit).otherwise(strHit)
+  def zoneHitOn(colName: String, lo: Option[String], hi: Option[String]): Column = {
+    val f = StoreLayout.fieldName(colName)
+    zoneHit(col(s"$f.minKey"), col(s"$f.maxKey"), col(s"$f.dt"), lo, hi)
   }
 
   /** Chunk keys whose zone on `colName` intersects [lo, hi] — a
@@ -136,71 +111,31 @@ object MetaIndex {
     */
   def candidateKeys(spark: SparkSession, storeDir: String, colName: String,
                     lo: String, hi: String): DataFrame =
-    zoneMetaFor(spark, storeDir, colName)
-      .filter(intersectsExpr(lo, hi))
-      .select("shard", "partId", "chunkId")
+    candidateKeysAnd(spark, storeDir, Seq(zoneHitOn(colName, Some(lo), Some(hi))))
 
-  /** Chunk keys whose zones intersect EVERY (colName, lo, hi)
-    * predicate — the multi-column candidate intersection as ONE scan
-    * with a conjunctive filter. Row-identical to intersecting the
-    * per-column [[candidateKeys]] sets (each chunk row holds all
-    * columns' zone structs), but with no join and no extra scans —
-    * at 100 TB this reads the chunk metadata once instead of once per
-    * predicate column.
+  /** Chunk keys (shard, partId, chunkId) passing EVERY zone hit — the
+    * multi-column candidate intersection as ONE metadata scan with a
+    * conjunctive filter (each chunk row holds all columns' zone
+    * structs): no join, no extra scan per predicate column.
     */
-  def candidateKeysAnd(spark: SparkSession, storeDir: String,
-                       preds: Seq[(String, String, String)]): DataFrame = {
-    val df = Snapshots.storeDf(spark, storeDir)
-    val cond = preds.map { case (c, lo, hi) =>
-      val f = StoreLayout.fieldName(c)
-      intersectsExprOn(col(s"$f.minKey"), col(s"$f.maxKey"), col(s"$f.dt"), lo, hi)
-    }.reduce(_ && _)
-    df.filter(cond).select("shard", "partId", "chunkId")
-  }
+  def candidateKeysAnd(spark: SparkSession, storeDir: String, hits: Seq[Column]): DataFrame =
+    Snapshots.storeDf(spark, storeDir).filter(hits.reduce(_ && _)).select("shard", "partId", "chunkId")
 
-  /** Read only the surviving blocks. Few survivors → OR-of-ANDs pushed
-    * into the parquet scan (shard prunes partition dirs, partId/chunkId
-    * prune row groups, so pruned payload pages are never read);
-    * many survivors → left-semi join (the query reads most of the store
-    * anyway). `names` restricts the columns read (null = all).
+  /** Read only the surviving blocks (StoreLayout.readChunks: pushed
+    * keys, or a left-semi join when too many survive). `names`
+    * restricts the columns read (null = all).
     */
   def readCandidates(spark: SparkSession, storeDir: String, colName: String,
                      lo: String, hi: String, names: Seq[String] = null): Dataset[EncodedBlock] = {
     // repeated probes with the same predicate skip the metadata scan:
     // candidate coordinates come from the store-version-keyed LRU
     // (QueryCache — the reference's result-coordinate cache analog)
-    val ck = QueryCache.key(spark, storeDir, "zone", colName, lo, hi)
-    val coords = QueryCache.getOrCompute(ck) {
-      val collected = candidateKeys(spark, storeDir, colName, lo, hi)
-        .limit(MAX_PUSHDOWN_KEYS + 1).collect()
-      if (collected.length <= MAX_PUSHDOWN_KEYS)
-        collected.map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      else null // too many survivors to push or cache — semi-join path
-    }
-    if (coords != null)
-      StoreLayout.readBlocksByKeys(spark, storeDir, coords.toSeq, names)
-    else {
-      val keys = candidateKeys(spark, storeDir, colName, lo, hi)
-      val df = Snapshots.storeDf(spark, storeDir)
-      val fields = Option(names).map(_.map(StoreLayout.fieldName))
-        .getOrElse(StoreLayout.storeColFields(df.schema))
-      StoreLayout.assemble(
-        df.join(keys, Seq("shard", "partId", "chunkId"), "left_semi"), fields)
-    }
+    lazy val cand = candidateKeys(spark, storeDir, colName, lo, hi)
+    val keys = QueryCache.coordinates(QueryCache.key(spark, storeDir, "zone", colName, lo, hi))(
+      StoreLayout.pushableKeys(cand))
+    StoreLayout.readChunks(spark, storeDir, cand, keys, names)
   }
 
-  /** Read exactly these chunks, with the key predicate pushed into the
-    * parquet scan. Kept as the historical entry point; delegates to
-    * StoreLayout.
-    */
-  def readBlocksByKeys(spark: SparkSession, storeDir: String,
-                       keys: Seq[(Int, Int, Long)], names: Seq[String] = null): Dataset[EncodedBlock] =
-    StoreLayout.readBlocksByKeys(spark, storeDir, keys, names)
-
-  /** Exact range predicate on the ORIGINAL column for bounds given in
-    * the zone-key domain (values for long/string columns, micros for
-    * timestamps, days for dates, unscaled for decimals).
-    */
   /** The encoded (flat) view of `schema`: struct columns become dotted
     * leaves — the namespace predicates, indexes, and store reads
     * actually address.
@@ -208,6 +143,10 @@ object MetaIndex {
   def flatOf(schema: StructType): StructType =
     if (Nested.hasNested(schema)) Nested.flatSchema(schema) else schema
 
+  /** Exact range predicate on the ORIGINAL column for bounds given in
+    * the zone-key domain (values for long/string columns, micros for
+    * timestamps, days for dates, unscaled for decimals).
+    */
   def exactRange(schema: StructType, colName: String, lo: String, hi: String): Column = {
     def bound(v: String): Column = domainLit(flatOf(schema)(colName).dataType, v)
     col(colName) >= bound(lo) && col(colName) <= bound(hi)
@@ -247,9 +186,9 @@ object MetaIndex {
                    lo: String, hi: String): (Long, Long) = {
     // both counts in ONE aggregate job — a planner probe should not pay
     // two driver round-trips for one metadata scan
-    val row = zoneMetaFor(spark, storeDir, colName)
+    val row = Snapshots.storeDf(spark, storeDir)
       .agg(count(lit(1)).as("total"),
-        coalesce(sum(intersectsExpr(lo, hi).cast("long")), lit(0L)).as("cand"))
+        coalesce(sum(zoneHitOn(colName, Some(lo), Some(hi)).cast("long")), lit(0L)).as("cand"))
       .head()
     (row.getLong(1), row.getLong(0))
   }

@@ -115,57 +115,54 @@ object PredicatePrune {
     }
   }
 
-  private final case class ZonePred(colName: String, hit: Column)
-
-  /** One conjunct → a zone filter over `zoneMetaFor(colName)` rows. */
-  private def zonePred(e: Expression, flat: StructType): Option[ZonePred] = {
-    def mk(attr: Expression, l: Literal)(f: String => Column): Option[ZonePred] =
+  /** One conjunct → a zone hit over its column's chunk-struct leaves. */
+  private def zoneHit(e: Expression, flat: StructType): Option[Column] = {
+    def mk(attr: Expression, l: Literal)(lo: String => Option[String],
+                                         hi: String => Option[String]): Option[Column] =
       for {
         n <- stripAttr(attr)
         field <- flat.fields.find(_.name == n)
         d <- domainValue(l, field.dataType)
-      } yield ZonePred(n, f(d))
+      } yield MetaIndex.zoneHitOn(n, lo(d), hi(d))
+    def eq(a: Expression, l: Literal) = mk(a, l)(Some(_), Some(_))
+    def atLeast(a: Expression, l: Literal) = mk(a, l)(Some(_), _ => None)
+    def atMost(a: Expression, l: Literal) = mk(a, l)(_ => None, Some(_))
     e match {
-      case EqualTo(a, l: Literal) => mk(a, l)(d => MetaIndex.intersectsExpr(d, d))
-      case EqualTo(l: Literal, a) => mk(a, l)(d => MetaIndex.intersectsExpr(d, d))
+      case EqualTo(a, l: Literal) => eq(a, l)
+      case EqualTo(l: Literal, a) => eq(a, l)
       // null-safe equality with a non-null literal prunes like equality
       // (NULL rows cannot equal a value); a null literal is not
       // extractable (zones don't track null presence)
-      case EqualNullSafe(a, l: Literal) => mk(a, l)(d => MetaIndex.intersectsExpr(d, d))
-      case EqualNullSafe(l: Literal, a) => mk(a, l)(d => MetaIndex.intersectsExpr(d, d))
-      case GreaterThan(a, l: Literal) => mk(a, l)(MetaIndex.intersectsLoExpr)
-      case GreaterThanOrEqual(a, l: Literal) => mk(a, l)(MetaIndex.intersectsLoExpr)
-      case LessThan(l: Literal, a) => mk(a, l)(MetaIndex.intersectsLoExpr)
-      case LessThanOrEqual(l: Literal, a) => mk(a, l)(MetaIndex.intersectsLoExpr)
-      case LessThan(a, l: Literal) => mk(a, l)(MetaIndex.intersectsHiExpr)
-      case LessThanOrEqual(a, l: Literal) => mk(a, l)(MetaIndex.intersectsHiExpr)
-      case GreaterThan(l: Literal, a) => mk(a, l)(MetaIndex.intersectsHiExpr)
-      case GreaterThanOrEqual(l: Literal, a) => mk(a, l)(MetaIndex.intersectsHiExpr)
+      case EqualNullSafe(a, l: Literal) => eq(a, l)
+      case EqualNullSafe(l: Literal, a) => eq(a, l)
+      case GreaterThan(a, l: Literal) => atLeast(a, l)
+      case GreaterThanOrEqual(a, l: Literal) => atLeast(a, l)
+      case LessThan(l: Literal, a) => atLeast(a, l)
+      case LessThanOrEqual(l: Literal, a) => atLeast(a, l)
+      case LessThan(a, l: Literal) => atMost(a, l)
+      case LessThanOrEqual(a, l: Literal) => atMost(a, l)
+      case GreaterThan(l: Literal, a) => atMost(a, l)
+      case GreaterThanOrEqual(l: Literal, a) => atMost(a, l)
       case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val hits = vs.map(v => mk(a, v.asInstanceOf[Literal])(d => MetaIndex.intersectsExpr(d, d)))
+        val hits = vs.map(v => eq(a, v.asInstanceOf[Literal]))
         // every IN value must be extractable, else the list is only
         // partially covered and pruning on it would be unsound
-        if (hits.forall(_.isDefined)) Some(ZonePred(hits.head.get.colName,
-          hits.map(_.get.hit).reduce(_ || _)))
-        else None
+        if (hits.forall(_.isDefined)) Some(hits.flatten.reduce(_ || _)) else None
       case _ => None
     }
   }
 
   /** Chunk keys (shard, partId, chunkId) that may contain a row
-    * matching `predicate` — metadata-only (zone leaves, no payloads).
-    * None when nothing in the predicate is zone-extractable (caller
-    * falls back to a full pass).
+    * matching `predicate` — metadata-only (zone leaves, no payloads),
+    * one scan with every extractable conjunct's zone hit ANDed. None
+    * when nothing in the predicate is zone-extractable (caller falls
+    * back to a full pass).
     */
   def candidateChunks(spark: SparkSession, storeDir: String,
                       schema: StructType, predicate: Column): Option[DataFrame] = {
     val flat = MetaIndex.flatOf(schema)
-    val preds = conjuncts(resolve(spark, schema, predicate)).flatMap(zonePred(_, flat))
-    if (preds.isEmpty) None
-    else Some(preds.map(p =>
-        MetaIndex.zoneMetaFor(spark, storeDir, p.colName)
-          .filter(p.hit).select("shard", "partId", "chunkId"))
-      .reduce((a, b) => a.join(b, Seq("shard", "partId", "chunkId"))))
+    val hits = conjuncts(resolve(spark, schema, predicate)).flatMap(zoneHit(_, flat))
+    if (hits.isEmpty) None else Some(MetaIndex.candidateKeysAnd(spark, storeDir, hits))
   }
 
   /** Top-level column names the predicate references, iff ALL of them
@@ -181,25 +178,14 @@ object PredicatePrune {
   }
 
   /** Blocks that may contain a predicate-matching row: candidate chunks
-    * when the predicate is zone-extractable (few → pushed chunk keys,
-    * many → left-semi join, mirroring MetaIndex.readCandidates), the
-    * whole store otherwise. `names` restricts the columns read.
+    * when the predicate is zone-extractable (StoreLayout.readChunks:
+    * few → pushed chunk keys, many → left-semi join), the whole store
+    * otherwise. `names` restricts the columns read.
     */
   def candidateBlocks(spark: SparkSession, storeDir: String, schema: StructType,
                       predicate: Column, names: Seq[String]): Dataset[EncodedBlock] =
     candidateChunks(spark, storeDir, schema, predicate) match {
       case None => StoreLayout.readBlocks(spark, storeDir, names)
-      case Some(cand) =>
-        val keys = cand.limit(MetaIndex.MAX_PUSHDOWN_KEYS + 1).collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        if (keys.length <= MetaIndex.MAX_PUSHDOWN_KEYS)
-          StoreLayout.readBlocksByKeys(spark, storeDir, keys.toSeq, names)
-        else {
-          val df = Snapshots.storeDf(spark, storeDir)
-          val fields = Option(names).map(_.map(StoreLayout.fieldName))
-            .getOrElse(StoreLayout.storeColFields(df.schema))
-          StoreLayout.assemble(
-            df.join(cand, Seq("shard", "partId", "chunkId"), "left_semi"), fields)
-        }
+      case Some(cand) => StoreLayout.readChunks(spark, storeDir, cand, StoreLayout.pushableKeys(cand), names)
     }
 }

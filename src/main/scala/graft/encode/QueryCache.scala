@@ -1,16 +1,32 @@
 package graft.encode
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver-side LRU of zone-candidate coordinates per (store version,
-  * predicate) — the analog of the reference's compressed result-
-  * coordinate cache (python-blosc2 indexing.py:86-110). A repeated
-  * probe with the same predicate skips the metadata scan entirely.
+/** Driver-side caches of store read state, keyed by (directory, store
+  * version):
+  *  - COORDINATES: zone-candidate chunk keys per predicate — the analog
+  *    of the reference's compressed result-coordinate cache
+  *    (python-blosc2 indexing.py:86-110). A repeated probe with the same
+  *    predicate skips the metadata scan entirely. Only candidate sets
+  *    small enough for the pushed-keys path are kept
+  *    (≤ StoreLayout.MAX_PUSHDOWN_KEYS coordinates, ≈16 bytes each); a
+  *    too-large verdict is cached as a NEGATIVE entry (`None`), so
+  *    repeated non-selective probes do not re-pay the limit-collect scan
+  *    just to re-learn it.
+  *  - RELATIONS: analyzed parquet relations (file listing + schema,
+  *    never a computed result) of stores, indexes and offsets tables —
+  *    the path-read analog of Spark's catalog FileIndex caching. Every
+  *    `spark.read.parquet(path)` pays a driver listing plus a footer read
+  *    (often a Spark job of its own), and probe pipelines re-open the
+  *    same relations several times per query. A DataFrame is bound to
+  *    its session: an entry of another or a stopped SparkSession is
+  *    evicted, never served.
   *
   * Invalidation is belt-and-braces:
   *  - EXPLICIT: every in-process mutation path (CoW rewrites via
-  *    Lineage.dropDerived, resumable encode) calls `invalidate` — the
-  *    authoritative signal for the driver that performed the mutation;
+  *    Lineage.dropDerived, resumable encode, index builds) calls
+  *    `invalidate` — the authoritative signal for the driver that
+  *    performed the mutation;
   *  - VERSIONED: for snapshot-enabled stores the cache key embeds the
   *    COMMITTED `Snapshots` listing version — bumped by every CoW
   *    mutation in any process, so an out-of-process commit can never
@@ -22,20 +38,24 @@ import org.apache.spark.sql.SparkSession
   *    fallback, where cross-process writers should call
   *    `invalidate`/`clear` or enable snapshots.
   *
-  * Only candidate sets small enough for the pushed-keys path are cached
-  * (≤ MAX_PUSHDOWN_KEYS coordinates, ≈16 bytes each) — the cache is
-  * bounded by MAX_ENTRIES × that, a few MB of driver heap.
+  * Both caches are bounded LRUs (256 coordinate sets, 128 relations):
+  * a few MB of driver heap.
   */
 object QueryCache {
 
-  private val MAX_ENTRIES = 256
+  /** Cache key: the directory, its store version, and the lookup's own
+    * parts (none for a relation).
+    */
+  final case class Key(dir: String, version: Long, parts: Seq[String])
 
-  private val lru = new java.util.LinkedHashMap[String, Array[(Int, Int, Long)]](64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Array[(Int, Int, Long)]]): Boolean =
-      size() > MAX_ENTRIES
+  private final class Lru[V](max: Int) extends java.util.LinkedHashMap[Key, V](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, V]): Boolean = size() > max
   }
 
-  // observability for specs + tuning
+  private val coords = new Lru[Option[Seq[(Int, Int, Long)]]](256)
+  private val rels = new Lru[DataFrame](128)
+
+  // coordinate lookups — observability for specs + tuning
   val hits = new java.util.concurrent.atomic.AtomicLong
   val misses = new java.util.concurrent.atomic.AtomicLong
 
@@ -57,44 +77,54 @@ object QueryCache {
     else children.map(_.getModificationTime).max
   }
 
-  def key(spark: SparkSession, storeDir: String, parts: String*): String =
-    s"$storeDir@${version(spark, storeDir)}|${parts.mkString("|")}"
+  def key(spark: SparkSession, dir: String, parts: String*): Key =
+    Key(dir, version(spark, dir), parts)
 
-  /** Sentinel for a NEGATIVE entry: "this predicate's candidate set is
-    * too large to push/cache" — cached so repeated non-selective probes
-    * do not re-pay the limit-collect metadata scan just to re-learn it.
+  /** Cached candidate coordinates for `k`, or compute-and-cache —
+    * `None` (too large to push) is cached too.
     */
-  private val TOO_LARGE = new Array[(Int, Int, Long)](0)
-
-  /** Cached coordinates for `k`, or compute-and-cache. `compute`
-    * returns null to signal "too large" — the verdict itself is cached
-    * (as a sentinel) and null is returned to this and future callers.
-    */
-  def getOrCompute(k: String)(compute: => Array[(Int, Int, Long)]): Array[(Int, Int, Long)] = {
-    val cached = lru.synchronized(lru.get(k))
+  def coordinates(k: Key)(compute: => Option[Seq[(Int, Int, Long)]]): Option[Seq[(Int, Int, Long)]] = {
+    val cached = coords.synchronized(coords.get(k))
     if (cached != null) {
       hits.incrementAndGet()
-      return if (cached eq TOO_LARGE) null else cached
+      return cached
     }
     misses.incrementAndGet()
     val v = compute
-    lru.synchronized { lru.put(k, if (v == null) TOO_LARGE else v); () }
+    coords.synchronized { coords.put(k, v); () }
     v
   }
 
-  /** Drop every entry of `storeDir` (any version) — called by
-    * in-process mutation paths.
+  /** Cached analyzed relation for `path` at its current version, or
+    * open-and-cache via `open` (which must read exactly `path`'s
+    * current content).
     */
-  def invalidate(storeDir: String): Unit = {
-    lru.synchronized {
-      val it = lru.keySet().iterator()
-      while (it.hasNext) if (it.next().startsWith(storeDir + "@")) it.remove()
+  def relation(spark: SparkSession, path: String)(open: => DataFrame): DataFrame = {
+    val k = key(spark, path)
+    rels.synchronized {
+      val hit = rels.get(k)
+      if (hit != null) {
+        if ((hit.sparkSession eq spark) && !spark.sparkContext.isStopped) return hit
+        rels.remove(k); ()
+      }
     }
-    RelCache.invalidate(storeDir)
+    val df = open
+    rels.synchronized { rels.put(k, df); () }
+    df
   }
 
-  def clear(): Unit = {
-    lru.synchronized(lru.clear())
-    RelCache.clear()
+  private def both: Seq[java.util.Map[Key, _]] = Seq(coords, rels)
+
+  /** Drop every entry (any version) of `dir` itself and of paths under
+    * `dir/` (a store's `_index`/`_offsets` relations) — never of a
+    * sibling that merely shares the name prefix (`dir2`).
+    */
+  def invalidate(dir: String): Unit = {
+    val d = dir.stripSuffix("/")
+    both.foreach(m => m.synchronized {
+      m.keySet().removeIf(k => k.dir == d || k.dir.startsWith(d + "/")); ()
+    })
   }
+
+  def clear(): Unit = both.foreach(m => m.synchronized(m.clear()))
 }

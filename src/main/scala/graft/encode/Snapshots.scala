@@ -120,12 +120,12 @@ object Snapshots {
 
   /** The store as a DataFrame at the CURRENT version (plain directory
     * read when versioning is not enabled). The analyzed relation (file
-    * listing + schema) is served from the version-keyed RelCache —
+    * listing + schema) is served from the version-keyed QueryCache —
     * probe pipelines re-open the same store several times per query,
     * and every fresh open pays a driver listing + footer read.
     */
   def storeDf(spark: SparkSession, storeDir: String): DataFrame =
-    RelCache.parquet(spark, storeDir) {
+    QueryCache.relation(spark, storeDir) {
       currentVersion(spark, storeDir) match {
         case None => spark.read.parquet(storeDir)
         case Some(v) => storeDfAt(spark, storeDir, v)

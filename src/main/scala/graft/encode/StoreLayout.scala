@@ -1,6 +1,6 @@
 package graft.encode
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -80,15 +80,11 @@ object StoreLayout {
     QueryCache.invalidate(outDir)
   }
 
-  /** Store rows with only `names`' struct columns in the scan schema —
-    * parquet never reads sibling columns' payload pages. `names = null`
-    * selects every chunk-struct column found in the store schema.
+  /** Store fields carrying `names`' chunk structs; `names = null`
+    * selects every chunk-struct field of `schema`.
     */
-  def readStoreRows(spark: SparkSession, storeDir: String, names: Seq[String] = null): DataFrame = {
-    val df = Snapshots.storeDf(spark, storeDir)
-    val sel = Option(names).map(_.map(fieldName)).getOrElse(storeColFields(df.schema))
-    df.select(KEY_COLS.map(col) ++ sel.map(col): _*)
-  }
+  private def fieldsOf(schema: StructType, names: Seq[String]): Seq[String] =
+    Option(names).map(_.map(fieldName)).getOrElse(storeColFields(schema))
 
   /** Reassemble `EncodedBlock`s from v2 store rows (narrow projection,
     * no shuffle). `fieldCols` are store field names (g_*).
@@ -105,12 +101,11 @@ object StoreLayout {
   def readBlocks(spark: SparkSession, storeDir: String, names: Seq[String] = null,
                  shards: Option[Seq[Int]] = None): Dataset[EncodedBlock] = {
     val df = Snapshots.storeDf(spark, storeDir)
-    val fields = Option(names).map(_.map(fieldName)).getOrElse(storeColFields(df.schema))
     val filtered = shards match {
       case Some(s) => df.filter(col("shard").isin(s.map(Integer.valueOf): _*))
       case None => df
     }
-    assemble(filtered, fields)
+    assemble(filtered, fieldsOf(df.schema, names))
   }
 
   /** Blocks of a PINNED snapshot version — a reader holding this
@@ -122,21 +117,57 @@ object StoreLayout {
     assemble(df, storeColFields(df.schema))
   }
 
+  /** How many candidate chunk keys a read pushes into the parquet scan
+    * as an OR-of-ANDs predicate. Above this the read is not selective,
+    * and the honest plan is a store scan + left-semi join.
+    */
+  val MAX_PUSHDOWN_KEYS = 1024
+
+  /** The (shard, partId, chunkId) keys of candidate frame `cand` iff
+    * there are at most MAX_PUSHDOWN_KEYS of them — one bounded collect.
+    */
+  def pushableKeys(cand: DataFrame): Option[Seq[(Int, Int, Long)]] = {
+    val rows = cand.select("shard", "partId", "chunkId").limit(MAX_PUSHDOWN_KEYS + 1).collect()
+    if (rows.length > MAX_PUSHDOWN_KEYS) None
+    else Some(rows.map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
+  }
+
+  /** Read the chunks candidate frame `cand` names, carrying only
+    * `names`' columns (null = all): `keys` (from [[pushableKeys]])
+    * pushed into the parquet scan, or — when there were too many to
+    * push — a left-semi join of the store on `cand` (the read touches
+    * most of the store anyway). `cand` is only built for the join.
+    */
+  def readChunks(spark: SparkSession, storeDir: String, cand: => DataFrame,
+                 keys: Option[Seq[(Int, Int, Long)]], names: Seq[String]): Dataset[EncodedBlock] =
+    keys match {
+      case Some(ks) => readBlocksByKeys(spark, storeDir, ks, names)
+      case None =>
+        val df = Snapshots.storeDf(spark, storeDir)
+        val keyCols = Seq("shard", "partId", "chunkId")
+        assemble(df.join(cand.select(keyCols.map(col): _*), keyCols, "left_semi"), fieldsOf(df.schema, names))
+    }
+
   /** Read exactly these chunks with the key predicate pushed into the
     * parquet scan (shard → partition-dir pruning, partId/chunkId →
-    * row-group stats), carrying only `names`' columns.
+    * row-group stats), carrying only `names`' columns. The OR is built
+    * as a balanced tree: a left-deep chain of MAX_PUSHDOWN_KEYS terms
+    * overflowed the thread stack in Catalyst's recursive expression
+    * conversion (StoreReadSpec pushes exactly that many).
     */
   def readBlocksByKeys(spark: SparkSession, storeDir: String, keys: Seq[(Int, Int, Long)],
                        names: Seq[String] = null): Dataset[EncodedBlock] = {
     val df = Snapshots.storeDf(spark, storeDir)
     requireNoBatch(df.schema, "readBlocksByKeys")
-    val fields = Option(names).map(_.map(fieldName)).getOrElse(storeColFields(df.schema))
+    def anyOf(terms: IndexedSeq[Column]): Column =
+      if (terms.size == 1) terms.head
+      else { val (a, b) = terms.splitAt(terms.size / 2); anyOf(a) || anyOf(b) }
     val filtered =
       if (keys.isEmpty) df.filter(lit(false))
-      else df.filter(keys.map { case (s, p, c) =>
+      else df.filter(anyOf(keys.toIndexedSeq.map { case (s, p, c) =>
         col("shard") === s && col("partId") === p && col("chunkId") === c
-      }.reduce(_ || _))
-    assemble(filtered, fields)
+      }))
+    assemble(filtered, fieldsOf(df.schema, names))
   }
 
   /** Decode-free physical recluster — the reference's `reorder_offsets`

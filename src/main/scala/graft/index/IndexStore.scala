@@ -49,8 +49,6 @@ object IndexStore {
   }
   def hasFull(spark: SparkSession, storeDir: String, colName: String): Boolean =
     exists(spark, fullPath(storeDir, colName))
-  def hasBucket(spark: SparkSession, storeDir: String, colName: String): Boolean =
-    exists(spark, bucketPath(storeDir, colName))
 
   /** Build (or rebuild) the FULL index for `colName`. One pass over the
     * store reading ONLY the indexed column (v2 layout → sibling
@@ -154,19 +152,19 @@ object IndexStore {
   def bucketOfLong(v: Long, nBuckets: Int): Int =
     math.floorMod(graft.corpus.Corpus.mix(v).toInt, nBuckets)
 
-  /** Read the FULL index for a key range with the predicate pushed into
-    * the parquet scan. `lo`/`hi` in the index key domain (long for
-    * long-backed columns, raw string, double).
-    */
-  /** The FULL index relation, served from the version-keyed RelCache
+  /** The FULL index relation, served from the version-keyed QueryCache
     * (repeated probes re-opened the index parquet — and re-paid its
     * listing/footer jobs — on every call).
     */
   private def fullIndexDf(spark: SparkSession, storeDir: String, colName: String): DataFrame = {
     val p = fullPath(storeDir, colName)
-    graft.encode.RelCache.parquet(spark, p)(spark.read.parquet(p))
+    graft.encode.QueryCache.relation(spark, p)(spark.read.parquet(p))
   }
 
+  /** Read the FULL index for a key range with the predicate pushed into
+    * the parquet scan. `lo`/`hi` in the index key domain (long for
+    * long-backed columns, raw string, double).
+    */
   def readFullRange(spark: SparkSession, storeDir: String, schema: StructType,
                     colName: String, lo: String, hi: String): DataFrame = {
     val idx = fullIndexDf(spark, storeDir, colName)
@@ -209,11 +207,10 @@ object IndexStore {
       case _ => bucketOfLong(value.toLong, nBuckets)
     }
     val bp = bucketPath(storeDir, colName)
-    val chunks = graft.encode.RelCache.parquet(spark, bp)(spark.read.parquet(bp))
+    val cand = graft.encode.QueryCache.relation(spark, bp)(spark.read.parquet(bp))
       .filter(col("bucket") === bk) // pushed → row-group skip
-      .select("shard", "partId", "chunkId").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-    val blocks = StoreLayout.readBlocksByKeys(spark, storeDir, chunks, TableCodec.encodedNames(schema))
+    val blocks = StoreLayout.readChunks(spark, storeDir, cand, StoreLayout.pushableKeys(cand),
+      TableCodec.encodedNames(schema))
     TableCodec.decode(blocks, schema).filter(MetaIndex.exactEq(schema, colName, value))
   }
 
@@ -283,7 +280,7 @@ object IndexStore {
                     start: Long, count: Long): Array[(Int, Int, Long, Int, Long)] = {
     if (!exists(spark, offsetsPath(storeDir))) refreshOffsets(spark, storeDir)
     val op = offsetsPath(storeDir)
-    graft.encode.RelCache.parquet(spark, op)(spark.read.parquet(op))
+    graft.encode.QueryCache.relation(spark, op)(spark.read.parquet(op))
       .filter(col("startOff") < start + count && col("startOff") + col("nRows") > start)
       .select("shard", "partId", "chunkId", "nRows", "startOff")
       .collect()
@@ -498,7 +495,8 @@ object Planner {
     * joins never touch a payload leaf).
     */
   def candidatesAnd(spark: SparkSession, storeDir: String, preds: Seq[Pred]): DataFrame =
-    MetaIndex.candidateKeysAnd(spark, storeDir, preds.map(p => (p.colName, p.lo, p.hi)))
+    MetaIndex.candidateKeysAnd(spark, storeDir,
+      preds.map(p => MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))))
 
   /** Plan an AND-of-range-predicates query: intersected zone chunk
     * count plus, per predicate, the single-column candidate count —
@@ -523,14 +521,14 @@ object Planner {
     require(preds.nonEmpty, "queryAnd needs at least one predicate")
     val exactAll = preds.map(p => MetaIndex.exactRange(schema, p.colName, p.lo, p.hi)).reduce(_ && _)
     val cand = candidatesAnd(spark, storeDir, preds)
-    val keys = cand.limit(MetaIndex.MAX_PUSHDOWN_KEYS + 1).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    val pushable = keys.length <= MetaIndex.MAX_PUSHDOWN_KEYS
+    val keys = StoreLayout.pushableKeys(cand)
+    def scanCandidates = TableCodec.decode(
+      StoreLayout.readChunks(spark, storeDir, cand, keys, TableCodec.encodedNames(schema)),
+      schema).filter(exactAll)
 
-    val indexed = preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName))
-    indexed match {
-      case Some(ip) if pushable =>
-        val keySet = keys.toSet
+    preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName)) match {
+      case Some(ip) if keys.isDefined =>
+        val keySet = keys.get.toSet
         // bound the gather with ONE limited collect (not count + collect)
         val hits = IndexStore.readFullRange(spark, storeDir, schema, ip.colName, ip.lo, ip.hi)
           .select("shard", "partId", "chunkId", "pos")
@@ -541,21 +539,8 @@ object Planner {
             .groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
             .map { case (k, rs) => k -> rs.map(_.getInt(3)).sorted }
           IndexStore.gather(spark, storeDir, schema, byChunk).filter(exactAll)
-        } else
-          TableCodec.decode(
-            StoreLayout.readBlocksByKeys(spark, storeDir, keys.toSeq, TableCodec.encodedNames(schema)),
-            schema).filter(exactAll)
-      case _ =>
-        val blocks =
-          if (pushable)
-            StoreLayout.readBlocksByKeys(spark, storeDir, keys.toSeq, TableCodec.encodedNames(schema))
-          else {
-            val df = graft.encode.Snapshots.storeDf(spark, storeDir)
-            StoreLayout.assemble(
-              df.join(cand, Seq("shard", "partId", "chunkId"), "left_semi"),
-              TableCodec.encodedNames(schema).map(StoreLayout.fieldName))
-          }
-        TableCodec.decode(blocks, schema).filter(exactAll)
+        } else scanCandidates
+      case _ => scanCandidates
     }
   }
 }

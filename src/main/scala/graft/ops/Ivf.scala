@@ -178,7 +178,7 @@ object Ivf {
     val meta = readIvfMeta(spark, storeDir)
     require(query.length == meta.dim, s"query dim ${query.length} != store dim ${meta.dim}")
     val probes = probeCells(query, meta.cents, math.min(nProbe, meta.c))
-    graft.encode.RelCache.parquet(spark, storeDir)(spark.read.parquet(storeDir))
+    graft.encode.QueryCache.relation(spark, storeDir)(spark.read.parquet(storeDir))
       .filter(col("cell").isin(probes.map(Integer.valueOf): _*))
       .select(col(idCol), Similarity.cosineLit(col(vecCol), query).as("cosine"))
       .orderBy(desc("cosine"), col(idCol))

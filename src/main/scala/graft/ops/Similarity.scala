@@ -332,7 +332,7 @@ object Similarity {
     require(query.length == meta.dim,
       s"query dim ${query.length} != store dim ${meta.dim}")
     val probes = probeBucketsWith(query, meta.planesOf)
-    graft.encode.RelCache.parquet(spark, storeDir)(spark.read.parquet(storeDir))
+    graft.encode.QueryCache.relation(spark, storeDir)(spark.read.parquet(storeDir))
       .filter(col("bucket").isin(probes.map(java.lang.Long.valueOf): _*))
       .select(col(idCol), cosineLit(col(vecCol), query).as("cosine"))
       .orderBy(desc("cosine"), col(idCol))

@@ -50,10 +50,6 @@ object TextOps {
     (length(textCol) - length(regexp_replace(textCol, "[.,;:!?'\"()]", ""))).cast("double") /
       greatest(length(textCol), lit(1)).cast("double")
 
-  def digitRatio(textCol: Column): Column =
-    (length(textCol) - length(regexp_replace(textCol, "[0-9]", ""))).cast("double") /
-      greatest(length(textCol), lit(1)).cast("double")
-
   def stopwordRatio(textCol: Column): Column = {
     val t = concat(lit(" "), lower(textCol), lit(" "))
     val sw = hits(t, "the") + hits(t, "and") + hits(t, "of") + hits(t, "is") + hits(t, "to") +

@@ -145,7 +145,7 @@ class IndexSpec extends SparkTestBase {
     // store order == encode input order; row_id is monotonic per input
     // partition, so validate against a full-decode slice of the store
     val all = graft.encode.TableCodec.decode(
-      graft.encode.MetaIndex.readBlocksByKeys(
+      graft.encode.StoreLayout.readBlocksByKeys(
         spark, storeDir,
         spark.read.parquet(storeDir).select("shard", "partId", "chunkId")
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq),
