@@ -97,28 +97,26 @@ object MetaAgg {
   private def fallbackKeys(meta: DataFrame, conds: Seq[(String, Column)]):
       Map[String, Option[Seq[(Int, Int, Long)]]] = {
     if (conds.isEmpty) return Map.empty
-    val flagged = meta
+    val nc = conds.size
+    val flagged = StoreLayout.collectAtMost(meta
       .filter(conds.map(_._2).reduce(_ || _))
       .select(Seq(col("shard"), col("partId"), col("chunkId")) ++
-        conds.zipWithIndex.map { case ((_, e), i) => e.as(s"_f$i") }: _*)
-      .limit(StoreLayout.MAX_PUSHDOWN_KEYS + 1).collect()
-    if (flagged.length <= StoreLayout.MAX_PUSHDOWN_KEYS)
-      conds.zipWithIndex.map { case ((c, _), i) =>
-        c -> Some(flagged.filter(_.getBoolean(3 + i))
-          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
-      }.toMap
-    else {
-      val cntAggs = conds.map { case (_, e) => sum(when(e, 1L).otherwise(0L)) }
-      val cnts = meta.agg(cntAggs.head, cntAggs.tail: _*).head()
-      conds.zipWithIndex.map { case ((c, e), i) =>
-        val n = if (cnts.isNullAt(i)) 0L else cnts.getLong(i)
-        if (n == 0L) c -> Some(Nil)
-        else if (n <= StoreLayout.MAX_PUSHDOWN_KEYS)
-          c -> Some(meta.filter(e).select("shard", "partId", "chunkId")
-            .limit(StoreLayout.MAX_PUSHDOWN_KEYS).collect()
-            .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
-        else c -> None
-      }.toMap
+        conds.zipWithIndex.map { case ((_, e), i) => e.as(s"_f$i") }: _*),
+      StoreLayout.MAX_PUSHDOWN_KEYS)(_.map(r =>
+        (StoreLayout.keyOf(r), Array.tabulate(nc)(i => !r.isNullAt(3 + i) && r.getBoolean(3 + i)))))
+    flagged match {
+      case Some(rows) =>
+        conds.zipWithIndex.map { case ((c, _), i) => c -> Some(rows.filter(_._2(i)).map(_._1).toSeq) }.toMap
+      case None =>
+        val cntAggs = conds.map { case (_, e) => sum(when(e, 1L).otherwise(0L)) }
+        val cnts = meta.agg(cntAggs.head, cntAggs.tail: _*).head()
+        conds.zipWithIndex.map { case ((c, e), i) =>
+          val n = if (cnts.isNullAt(i)) 0L else cnts.getLong(i)
+          if (n == 0L) c -> Some(Nil)
+          else if (n <= StoreLayout.MAX_PUSHDOWN_KEYS)
+            c -> StoreLayout.pushableKeys(meta.filter(e))
+          else c -> None
+        }.toMap
     }
   }
 

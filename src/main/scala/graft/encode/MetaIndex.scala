@@ -121,20 +121,42 @@ object MetaIndex {
   def candidateKeysAnd(spark: SparkSession, storeDir: String, hits: Seq[Column]): DataFrame =
     Snapshots.storeDf(spark, storeDir).filter(hits.reduce(_ && _)).select("shard", "partId", "chunkId")
 
+  /** Every chunk's key and its [[zoneHit]] on `colName` for [lo, hi]
+    * (`hit`; NULL counts as a miss, as in a filter) — the metadata
+    * scan behind a planned probe's candidate count and keys.
+    */
+  private[graft] def zoneHits(spark: SparkSession, storeDir: String, colName: String,
+                               lo: String, hi: String): DataFrame =
+    Snapshots.storeDf(spark, storeDir).select(col("shard"), col("partId"), col("chunkId"),
+      zoneHitOn(colName, Some(lo), Some(hi)).as("hit"))
+
+  /** The QueryCache key of [lo, hi] on `colName`'s candidate chunk keys
+    * at the store's current version. Take it BEFORE the scan whose keys
+    * it stores: a commit during the scan then files them under the old
+    * version, which no later probe asks for.
+    */
+  private[graft] def candidatesKey(spark: SparkSession, storeDir: String, colName: String,
+                                    lo: String, hi: String): QueryCache.Key =
+    QueryCache.key(spark, storeDir, "zone", colName, lo, hi)
+
+  /** Candidate chunk keys of [lo, hi] on `colName` (pushable, else
+    * None). Repeated probes with the same predicate skip the metadata
+    * scan: the keys come from the store-version-keyed LRU (QueryCache —
+    * the reference's result-coordinate cache analog).
+    */
+  private def cachedCandidates(spark: SparkSession, storeDir: String, colName: String,
+                               lo: String, hi: String): Option[Seq[(Int, Int, Long)]] =
+    QueryCache.coordinates(candidatesKey(spark, storeDir, colName, lo, hi))(
+      StoreLayout.pushableKeys(candidateKeys(spark, storeDir, colName, lo, hi)))
+
   /** Read only the surviving blocks (StoreLayout.readChunks: pushed
     * keys, or a left-semi join when too many survive). `names`
     * restricts the columns read (null = all).
     */
   def readCandidates(spark: SparkSession, storeDir: String, colName: String,
-                     lo: String, hi: String, names: Seq[String] = null): Dataset[EncodedBlock] = {
-    // repeated probes with the same predicate skip the metadata scan:
-    // candidate coordinates come from the store-version-keyed LRU
-    // (QueryCache — the reference's result-coordinate cache analog)
-    lazy val cand = candidateKeys(spark, storeDir, colName, lo, hi)
-    val keys = QueryCache.coordinates(QueryCache.key(spark, storeDir, "zone", colName, lo, hi))(
-      StoreLayout.pushableKeys(cand))
-    StoreLayout.readChunks(spark, storeDir, cand, keys, names)
-  }
+                     lo: String, hi: String, names: Seq[String] = null): Dataset[EncodedBlock] =
+    StoreLayout.readChunks(spark, storeDir, candidateKeys(spark, storeDir, colName, lo, hi),
+      cachedCandidates(spark, storeDir, colName, lo, hi), names)
 
   /** The encoded (flat) view of `schema`: struct columns become dotted
     * leaves — the namespace predicates, indexes, and store reads
@@ -175,8 +197,16 @@ object MetaIndex {
     */
   def lookup(spark: SparkSession, storeDir: String, schema: StructType,
              colName: String, lo: String, hi: String): DataFrame =
+    lookupKeys(spark, storeDir, schema, colName, lo, hi, cachedCandidates(spark, storeDir, colName, lo, hi))
+
+  /** [[lookup]] over candidate keys the caller already holds (`None`:
+    * too many to push, read by left-semi join on the candidate scan).
+    */
+  private[graft] def lookupKeys(spark: SparkSession, storeDir: String, schema: StructType, colName: String,
+                                 lo: String, hi: String, keys: Option[Seq[(Int, Int, Long)]]): DataFrame =
     TableCodec.decode(
-      readCandidates(spark, storeDir, colName, lo, hi, TableCodec.encodedNames(schema)), schema)
+      StoreLayout.readChunks(spark, storeDir, candidateKeys(spark, storeDir, colName, lo, hi),
+        keys, TableCodec.encodedNames(schema)), schema)
       .filter(exactRange(schema, colName, lo, hi))
 
   /** Pruning stats for a predicate: (candidate chunks, total chunks) —

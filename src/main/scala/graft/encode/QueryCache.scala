@@ -91,9 +91,15 @@ object QueryCache {
     }
     misses.incrementAndGet()
     val v = compute
-    coords.synchronized { coords.put(k, v); () }
+    putCoordinates(k, v)
     v
   }
+
+  /** Store coordinates a caller computed itself (a planned probe's own
+    * candidate scan) — not a lookup, so neither counter moves.
+    */
+  def putCoordinates(k: Key, v: Option[Seq[(Int, Int, Long)]]): Unit =
+    coords.synchronized { coords.put(k, v); () }
 
   /** Cached analyzed relation for `path` at its current version, or
     * open-and-cache via `open` (which must read exactly `path`'s

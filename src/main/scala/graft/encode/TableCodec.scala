@@ -269,7 +269,7 @@ object TableCodec {
     }
     val extra = shardColName.size
     val outTypes = outSchema.fields.map(_.dataType).toIndexedSeq
-    val rdd = blocks.rdd.mapPartitions { it =>
+    val rdd = StoreLayout.blockRdd(blocks).mapPartitions { it =>
       // one mutable row per task, reused across every emitted row: the
       // planner's scan node (RDDScanExec) copies each row through an
       // UnsafeProjection before anything downstream sees it — the same

@@ -60,7 +60,7 @@ object DictFilter {
     implicit val posEnc: org.apache.spark.sql.Encoder[PosChunk] =
       org.apache.spark.sql.Encoders.product[PosChunk]
     val posDs = spark.createDataset(
-      StoreLayout.readBlocks(spark, storeDir, Seq(colName)).rdd.flatMap { b =>
+      StoreLayout.blockRdd(StoreLayout.readBlocks(spark, storeDir, Seq(colName))).flatMap { b =>
         val positions = positionsOf(b, colName, targets)
         if (positions.isEmpty) None else Some(PosChunk(b.shard, b.partId, b.chunkId, positions))
       })
@@ -84,7 +84,7 @@ object DictFilter {
         // (reads what a scan would read; still no full-row decode of
         // non-matching rows)
         val blocks = StoreLayout.readBlocks(spark, storeDir, names.toSeq)
-        val rdd = blocks.rdd.mapPartitions { it =>
+        val rdd = StoreLayout.blockRdd(blocks).mapPartitions { it =>
           // reused mutable row — safe: createDataFrame's scan copies per row
           val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(dts.toIndexedSeq)
           it.flatMap { b =>

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.encode.{MetaIndex, StoreLayout, TableCodec}
+import graft.encode.{MetaIndex, QueryCache, StoreLayout, TableCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,7 +63,7 @@ object IndexStore {
     val dt = MetaIndex.flatOf(schema)(colName).dataType
 
     def entries[T: scala.reflect.ClassTag](f: (graft.codecs.ColVec, graft.encode.EncodedBlock) => Iterator[T]) =
-      blocks.rdd.flatMap { b =>
+      StoreLayout.blockRdd(blocks).flatMap { b =>
         val c = b.cols.find(_.name == colName)
           .getOrElse(throw new IllegalArgumentException(s"no column $colName in block"))
         f(TableCodec.decodeColumn(c), b)
@@ -111,7 +111,7 @@ object IndexStore {
       spark.createDataFrame(ranked, StructType(sorted.schema.fields :+
           StructField("rank", LongType, nullable = false)))
         .write.mode("overwrite").parquet(out)
-      graft.encode.QueryCache.invalidate(out) // rebuilt index: drop its cached relation
+      QueryCache.invalidate(out) // rebuilt index: drop its cached relation
     } finally { sorted.unpersist(); () }
   }
 
@@ -123,7 +123,7 @@ object IndexStore {
     import graft.codecs.{BinVec, LongVec}
     StoreLayout.requireNoBatch(graft.encode.Snapshots.storeDf(spark, storeDir).schema, "createBucket")
     val blocks = StoreLayout.readBlocks(spark, storeDir, Seq(colName))
-    val rdd = blocks.rdd.flatMap { b =>
+    val rdd = StoreLayout.blockRdd(blocks).flatMap { b =>
       val c = b.cols.find(_.name == colName).get
       val vec = TableCodec.decodeColumn(c)
       val buckets = scala.collection.mutable.BitSet()
@@ -144,7 +144,7 @@ object IndexStore {
       .toDF("bucket", "shard", "partId", "chunkId")
       .repartitionByRange(col("bucket")).sortWithinPartitions("bucket")
       .write.mode("overwrite").parquet(bucketPath(storeDir, colName))
-    graft.encode.QueryCache.invalidate(bucketPath(storeDir, colName))
+    QueryCache.invalidate(bucketPath(storeDir, colName))
   }
 
   def bucketOfBytes(v: Array[Byte], nBuckets: Int): Int =
@@ -158,7 +158,7 @@ object IndexStore {
     */
   private def fullIndexDf(spark: SparkSession, storeDir: String, colName: String): DataFrame = {
     val p = fullPath(storeDir, colName)
-    graft.encode.QueryCache.relation(spark, p)(spark.read.parquet(p))
+    QueryCache.relation(spark, p)(spark.read.parquet(p))
   }
 
   /** Read the FULL index for a key range with the predicate pushed into
@@ -180,14 +180,25 @@ object IndexStore {
     * `schema`. Caller (Planner) bounds the gather size.
     */
   def rangeGather(spark: SparkSession, storeDir: String, schema: StructType,
-                  colName: String, lo: String, hi: String): DataFrame = {
-    val hits = readFullRange(spark, storeDir, schema, colName, lo, hi)
-      .select("shard", "partId", "chunkId", "pos").collect()
-    val byChunk: Map[(Int, Int, Long), Array[Int]] =
-      hits.groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        .map { case (k, rs) => k -> rs.map(_.getInt(3)).sorted }
-    gather(spark, storeDir, schema, byChunk)
-  }
+                  colName: String, lo: String, hi: String): DataFrame =
+    gather(spark, storeDir, schema, byChunk(hitRows(spark, storeDir, schema, colName, lo, hi).collect()))
+
+  /** FULL-index hit rows (shard, partId, chunkId, pos) of [lo, hi]. */
+  private[index] def hitRows(spark: SparkSession, storeDir: String, schema: StructType,
+                              colName: String, lo: String, hi: String): DataFrame =
+    readFullRange(spark, storeDir, schema, colName, lo, hi).select("shard", "partId", "chunkId", "pos")
+
+  /** A hit row's (shard, partId, chunkId, pos). */
+  private[index] def hitOf(r: org.apache.spark.sql.catalyst.InternalRow): (Int, Int, Long, Int) =
+    (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))
+
+  /** Sorted hit positions per chunk — a gather's input. */
+  private[index] def byChunk(hits: Array[(Int, Int, Long, Int)]): Map[(Int, Int, Long), Array[Int]] =
+    hits.groupBy(h => (h._1, h._2, h._3)).map { case (k, hs) => k -> hs.map(_._4).sorted }
+
+  /** [[byChunk]] of collected (shard, partId, chunkId, pos) rows. */
+  private def byChunk(rows: Array[org.apache.spark.sql.Row]): Map[(Int, Int, Long), Array[Int]] =
+    byChunk(rows.map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))))
 
   /** Equality probe through the BUCKET index: decode only chunks whose
     * bucket set contains the probe's bucket, then exact-filter. `value`
@@ -207,7 +218,7 @@ object IndexStore {
       case _ => bucketOfLong(value.toLong, nBuckets)
     }
     val bp = bucketPath(storeDir, colName)
-    val cand = graft.encode.QueryCache.relation(spark, bp)(spark.read.parquet(bp))
+    val cand = QueryCache.relation(spark, bp)(spark.read.parquet(bp))
       .filter(col("bucket") === bk) // pushed → row-group skip
     val blocks = StoreLayout.readChunks(spark, storeDir, cand, StoreLayout.pushableKeys(cand),
       TableCodec.encodedNames(schema))
@@ -225,7 +236,7 @@ object IndexStore {
     val dts = flat.fields.map(_.dataType)
     val blocks = StoreLayout.readBlocksByKeys(spark, storeDir, posByChunk.keys.toSeq, names.toSeq)
     val bc = spark.sparkContext.broadcast(posByChunk)
-    val rdd = blocks.rdd.mapPartitions { it =>
+    val rdd = StoreLayout.blockRdd(blocks).mapPartitions { it =>
       // reused mutable row — safe: createDataFrame's scan copies per row
       val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(dts.toIndexedSeq)
       it.flatMap { b =>
@@ -269,7 +280,7 @@ object IndexStore {
       .withColumn("startOff", col("shardBase") + col("inShard"))
       .select("shard", "partId", "chunkId", "nRows", "startOff")
       .write.mode("overwrite").parquet(offsetsPath(storeDir))
-    graft.encode.QueryCache.invalidate(offsetsPath(storeDir))
+    QueryCache.invalidate(offsetsPath(storeDir))
   }
 
   /** Chunks overlapping global row range [start, start+count) in
@@ -280,7 +291,7 @@ object IndexStore {
                     start: Long, count: Long): Array[(Int, Int, Long, Int, Long)] = {
     if (!exists(spark, offsetsPath(storeDir))) refreshOffsets(spark, storeDir)
     val op = offsetsPath(storeDir)
-    graft.encode.QueryCache.relation(spark, op)(spark.read.parquet(op))
+    QueryCache.relation(spark, op)(spark.read.parquet(op))
       .filter(col("startOff") < start + count && col("startOff") + col("nRows") > start)
       .select("shard", "partId", "chunkId", "nRows", "startOff")
       .collect()
@@ -391,9 +402,7 @@ object IndexStore {
       // page with the keyset cursor (sortedPage ascending=false).
       val win = idx.filter(col("rank") >= offset && col("rank") < offset + k)
         .select("shard", "partId", "chunkId", "pos").collect()
-      val byChunk = win.groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        .map { case (kk, rs) => kk -> rs.map(_.getInt(3)).sorted }
-      return gather(spark, storeDir, schema, byChunk)
+      return gather(spark, storeDir, schema, byChunk(win))
     }
     // Dataset.offset is Int-typed; a silent .toInt wrap would read the
     // wrong window. Deep windows (offset ~ rows at 100 TB) should page
@@ -406,9 +415,7 @@ object IndexStore {
     else idx.orderBy(col("key").desc, col("shard"), col("partId"), col("chunkId"), col("pos"))
     val win = ordered.offset(offset.toInt).limit(k)
       .select("shard", "partId", "chunkId", "pos").collect()
-    val byChunk = win.groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-      .map { case (kk, rs) => kk -> rs.map(_.getInt(3)).sorted }
-    gather(spark, storeDir, schema, byChunk)
+    gather(spark, storeDir, schema, byChunk(win))
   }
 }
 
@@ -461,33 +468,83 @@ object Planner {
     else Choice("zone-scan", idxRows, idxChunks, zoneCand, total)
   }
 
-  /** Execute a range query through the chosen path. Unlike calling
-    * `plan` then `rangeGather`, this probes the FULL index ONCE: the
-    * hit positions are collected (bounded by MAX_GATHER_ROWS+1) and
-    * reused for both the cost decision and the gather — a planned probe
-    * is 3 Spark jobs total (zone stats, index probe, gather), not 5.
+  /** What a planned probe's metadata job returns: the zone candidate
+    * and total chunk counts, the candidate keys (None: more than
+    * MAX_PUSHDOWN_KEYS) and the FULL-index hits (None: more than
+    * MAX_GATHER_ROWS, or no index).
+    */
+  private final case class Probe(cand: Long, total: Long, keys: Option[Seq[(Int, Int, Long)]],
+                                 hits: Option[Array[(Int, Int, Long, Int)]])
+
+  /** One partition's share of a [[Probe]]. */
+  private final case class ProbePart(cand: Long, total: Long, keys: Array[(Int, Int, Long)],
+                                     hits: Array[(Int, Int, Long, Int)])
+
+  /** ONE Spark job over the union of the zone-metadata scan and the
+    * FULL-index range scan (`index`), with no exchange: each zone
+    * partition counts its chunks and hits and keeps at most
+    * MAX_PUSHDOWN_KEYS+1 candidate keys, each index partition keeps at
+    * most MAX_GATHER_ROWS+1 hits, and the driver bounds both totals.
+    * A NULL zone hit is a miss, as in pruningStats' sum.
+    */
+  private def probe(zone: DataFrame, index: Option[DataFrame]): Probe = {
+    val keyCap = StoreLayout.MAX_PUSHDOWN_KEYS
+    val hitCap = MAX_GATHER_ROWS.toInt
+    val zoneParts = zone.queryExecution.toRdd.mapPartitions { it =>
+      var cand, total = 0L
+      val keys = Array.newBuilder[(Int, Int, Long)]
+      it.foreach { r =>
+        total += 1
+        if (!r.isNullAt(3) && r.getBoolean(3)) {
+          if (cand <= keyCap) keys += StoreLayout.keyOf(r)
+          cand += 1
+        }
+      }
+      Iterator(new ProbePart(cand, total, keys.result(), Array.empty))
+    }
+    val parts = index.fold(zoneParts)(ix => zoneParts.union(ix.queryExecution.toRdd.mapPartitions { it =>
+      Iterator(new ProbePart(0L, 0L, Array.empty, it.take(hitCap + 1).map(IndexStore.hitOf).toArray))
+    }))
+    var cand, total = 0L
+    val keys = new StoreLayout.Capped[(Int, Int, Long)](keyCap)
+    val hits = new StoreLayout.Capped[(Int, Int, Long, Int)](hitCap)
+    zone.sparkSession.sparkContext.runJob(parts, (it: Iterator[ProbePart]) => it.next(),
+      (i: Int, p: ProbePart) => {
+        cand += p.cand; total += p.total
+        keys.add(i, p.keys); hits.add(i, p.hits)
+      })
+    Probe(cand, total, keys.result.map(_.toSeq), index.flatMap(_ => hits.result))
+  }
+
+  /** Execute a range query through the chosen path, deciding as [[plan]]
+    * does (past MAX_GATHER_ROWS hits the index counts read -1). Unlike calling `plan` then `rangeGather`, the zone counts and
+    * the bounded FULL-index hits come from ONE Spark job ([[probe]]),
+    * and the hits serve both the cost decision and the gather: a
+    * planned probe is 2 Spark jobs (probe, then the read), either path.
+    * The zone-scan path reads the probe's own candidate keys, which are
+    * also stored in QueryCache, so a following [[MetaIndex.lookup]] of
+    * the same range at the same store version skips its metadata scan.
     */
   def query(spark: SparkSession, storeDir: String, schema: StructType,
             colName: String, lo: String, hi: String): (DataFrame, Choice) = {
-    val (zoneCand, total) = MetaIndex.pruningStats(spark, storeDir, colName, lo, hi)
-    if (!IndexStore.hasFull(spark, storeDir, colName))
-      return (MetaIndex.lookup(spark, storeDir, schema, colName, lo, hi),
-        Choice("zone-scan", -1L, -1L, zoneCand, total))
-    val hits = IndexStore.readFullRange(spark, storeDir, schema, colName, lo, hi)
-      .select("shard", "partId", "chunkId", "pos")
-      .limit(MAX_GATHER_ROWS.toInt + 1).collect()
-    val overflow = hits.length > MAX_GATHER_ROWS
-    val byChunk: Map[(Int, Int, Long), Array[Int]] =
-      if (overflow) Map.empty
-      else hits.groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-        .map { case (k, rs) => k -> rs.map(_.getInt(3)).sorted }
-    val idxChunks = if (overflow) -1L else byChunk.size.toLong
-    if (!overflow && idxChunks <= (zoneCand * GATHER_CHUNK_ADVANTAGE).toLong + 1)
-      (IndexStore.gather(spark, storeDir, schema, byChunk),
-        Choice("index-gather", hits.length.toLong, idxChunks, zoneCand, total))
-    else
-      (MetaIndex.lookup(spark, storeDir, schema, colName, lo, hi),
-        Choice("zone-scan", if (overflow) -1L else hits.length.toLong, idxChunks, zoneCand, total))
+    val cacheKey = MetaIndex.candidatesKey(spark, storeDir, colName, lo, hi)
+    val index =
+      if (IndexStore.hasFull(spark, storeDir, colName)) Some(IndexStore.hitRows(spark, storeDir, schema, colName, lo, hi))
+      else None
+    val p = probe(MetaIndex.zoneHits(spark, storeDir, colName, lo, hi), index)
+    QueryCache.putCoordinates(cacheKey, p.keys)
+    def scan(estRows: Long, idxChunks: Long) =
+      (MetaIndex.lookupKeys(spark, storeDir, schema, colName, lo, hi, p.keys),
+        Choice("zone-scan", estRows, idxChunks, p.cand, p.total))
+    p.hits match {
+      case None => scan(-1L, -1L) // no FULL index, or over MAX_GATHER_ROWS hits
+      case Some(hits) =>
+        val byChunk = IndexStore.byChunk(hits)
+        if (byChunk.size <= (p.cand * GATHER_CHUNK_ADVANTAGE).toLong + 1)
+          (IndexStore.gather(spark, storeDir, schema, byChunk),
+            Choice("index-gather", hits.length.toLong, byChunk.size.toLong, p.cand, p.total))
+        else scan(hits.length.toLong, byChunk.size.toLong)
+    }
   }
 
   /** Metadata-only intersection of zone candidate sets across the
@@ -529,17 +586,12 @@ object Planner {
     preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName)) match {
       case Some(ip) if keys.isDefined =>
         val keySet = keys.get.toSet
-        // bound the gather with ONE limited collect (not count + collect)
-        val hits = IndexStore.readFullRange(spark, storeDir, schema, ip.colName, ip.lo, ip.hi)
-          .select("shard", "partId", "chunkId", "pos")
-          .filter(r => keySet.contains((r.getInt(0), r.getInt(1), r.getLong(2))))
-          .limit(MAX_GATHER_ROWS.toInt + 1).collect()
-        if (hits.length <= MAX_GATHER_ROWS) {
-          val byChunk = hits
-            .groupBy(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-            .map { case (k, rs) => k -> rs.map(_.getInt(3)).sorted }
-          IndexStore.gather(spark, storeDir, schema, byChunk).filter(exactAll)
-        } else scanCandidates
+        // the index hits inside surviving chunks, bounded in ONE job
+        StoreLayout.collectAtMost(IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi),
+          MAX_GATHER_ROWS.toInt)(_.filter(r => keySet.contains(StoreLayout.keyOf(r))).map(IndexStore.hitOf)) match {
+          case Some(hits) => IndexStore.gather(spark, storeDir, schema, IndexStore.byChunk(hits)).filter(exactAll)
+          case None => scanCandidates
+        }
       case _ => scanCandidates
     }
   }

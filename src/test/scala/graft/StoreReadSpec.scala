@@ -35,9 +35,9 @@ class StoreReadSpec extends SparkTestBase {
     to
   }
 
-  /** Sorted ids plus an order-free hash of every column's string form. */
+  /** Sorted ids (`id`, else `row_id`) plus an order-free hash of every column's string form. */
   private def fingerprint(d: DataFrame): (Seq[Long], Long) = {
-    val ids = d.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val ids = d.select(if (d.columns.contains("id")) "id" else "row_id").collect().map(_.getLong(0)).sorted.toSeq
     val h = d.select(coalesce(sum(crc32(concat_ws("|",
       d.columns.sorted.map(c => coalesce(col(c).cast("string"), lit("<null>"))): _*))), lit(0L)))
       .head().getLong(0)
@@ -205,11 +205,11 @@ class StoreReadSpec extends SparkTestBase {
 
     counts("wide.minMaxAll") = jobs("wide-minmax")(
       MetaAgg.minMaxAll(spark, wideDir, wide.schema, Seq("d", "s", "big")))
-    // recorded before the read paths were merged; wide.bucketProbe has
-    // no earlier count (its unbounded key push overflowed the stack)
-    val pinned = Map("query.gather" -> 5, "query.scan" -> 5, "lookup.cold" -> 4, "lookup.warm" -> 1,
-      "queryAnd" -> 6, "bucketProbe" -> 3, "minMaxAll.fallback" -> 6, "wide.lookup.warm" -> 2,
-      "wide.queryAnd" -> 4, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 9)
+    // each pin only ever moves down: Planner.query's probe is one job,
+    // and every bounded key collect runs one job, not incremental takes
+    val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "lookup.cold" -> 3, "lookup.warm" -> 1,
+      "queryAnd" -> 4, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 2,
+      "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 8)
     assert(counts.toMap == pinned)
   }
 
@@ -221,7 +221,132 @@ class StoreReadSpec extends SparkTestBase {
     val lang = input.select("lang").orderBy("lang").head().getString(0)
     val n = jobs("deleteWhere")(Lineage.deleteWhere(spark, dir, input.schema,
       col("lang") === lang && col("row_id") >= 0L))
-    assert(n <= 8, s"deleteWhere ran $n jobs, pinned at most 8")
+    assert(n <= 6, s"deleteWhere ran $n jobs, pinned at most 6")
+  }
+
+  // ---------------------------------------------------------------- planned probes
+
+  /** The Choice `Planner.query` must return, from the two-query form:
+    * `pruningStats` plus a plain count of the FULL index's hits.
+    */
+  private def expectedChoice(dir: String, schema: org.apache.spark.sql.types.StructType,
+                             c: String, lo: String, hi: String): Planner.Choice = {
+    val (cand, total) = MetaIndex.pruningStats(spark, dir, c, lo, hi)
+    if (!IndexStore.hasFull(spark, dir, c)) return Planner.Choice("zone-scan", -1L, -1L, cand, total)
+    val idx = IndexStore.readFullRange(spark, dir, schema, c, lo, hi)
+    val rows = idx.count()
+    val chunks = idx.select("shard", "partId", "chunkId").distinct().count()
+    if (rows > Planner.MAX_GATHER_ROWS) Planner.Choice("zone-scan", -1L, -1L, cand, total)
+    else if (chunks <= (cand * Planner.GATHER_CHUNK_ADVANTAGE).toLong + 1)
+      Planner.Choice("index-gather", rows, chunks, cand, total)
+    else Planner.Choice("zone-scan", rows, chunks, cand, total)
+  }
+
+  private def checkQuery(dir: String, raw: DataFrame, c: String, lo: String, hi: String,
+                         path: String, exact: Column): Unit = {
+    val (got, choice) = Planner.query(spark, dir, raw.schema, c, lo, hi)
+    assert(choice == expectedChoice(dir, raw.schema, c, lo, hi), s"$c in [$lo, $hi]")
+    assert(choice.path == path, s"$c in [$lo, $hi]: $choice")
+    assertSameRows(got, raw.filter(exact), s"query($c in [$lo, $hi])")
+  }
+
+  test("Planner.query's Choice equals pruningStats plus an index count, on both paths") {
+    val schema = corpus.schema
+    val repo = corpus.select("repo").orderBy("repo").head().getString(0)
+    checkQuery(corpusDir, corpus, "row_id", "100", "299", "index-gather", col("row_id").between(100L, 299L))
+    checkQuery(corpusDir, corpus, "row_id", "0", s"${Long.MaxValue}", "zone-scan", col("row_id") >= 0L)
+    // no FULL index on repo
+    checkQuery(corpusDir, corpus, "repo", repo, repo, "zone-scan", col("repo") === repo)
+    // an empty range
+    assert(Planner.query(spark, corpusDir, schema, "row_id", "-9", "-1")._2 ==
+      expectedChoice(corpusDir, schema, "row_id", "-9", "-1"))
+  }
+
+  test("Planner.query over the caps: zone candidates past the pushdown cap") {
+    val dir = copyStore(wideDir)
+    IndexStore.createFull(spark, dir, wide.schema, "id")
+    // 1,300 zone candidates: the scan path reads by left-semi join
+    checkQuery(dir, wide, "id", "0", "2599", "zone-scan", col("id").between(0L, 2599L))
+    checkQuery(dir, wide, "id", "10", "11", "index-gather", col("id").between(10L, 11L))
+  }
+
+  test("Planner.query over the caps: FULL-index hits past MAX_GATHER_ROWS") {
+    val n = Planner.MAX_GATHER_ROWS + 600
+    val big = spark.range(0, n, 1, 4).select(col("id"), (col("id") % 3).as("k")).cache()
+    val dir = writeStore(big, chunkRows = 8192)
+    IndexStore.createFull(spark, dir, big.schema, "id")
+    checkQuery(dir, big, "id", "0", s"${n - 1}", "zone-scan", col("id") >= 0L)
+    checkQuery(dir, big, "id", "0", s"${Planner.MAX_GATHER_ROWS - 1}", "zone-scan",
+      col("id") < Planner.MAX_GATHER_ROWS) // within the row cap, but the index names most chunks
+    checkQuery(dir, big, "id", "5000", "5099", "index-gather", col("id").between(5000L, 5099L))
+    big.unpersist()
+  }
+
+  test("Planner.query files its candidate keys where MetaIndex.lookup finds them") {
+    val schema = corpus.schema
+    val repo = corpus.select("repo").orderBy("repo").head().getString(0)
+    for ((c, lo, hi) <- Seq(("row_id", "100", "299"), ("row_id", "0", s"${Long.MaxValue}"), ("repo", repo, repo))) {
+      val (_, choice) = Planner.query(spark, corpusDir, schema, c, lo, hi)
+      val (h, m) = (QueryCache.hits.get, QueryCache.misses.get)
+      val n = jobs(s"lookup-after-query-$c-${choice.path}")(
+        MetaIndex.lookup(spark, corpusDir, schema, c, lo, hi).collect())
+      assert(QueryCache.hits.get == h + 1 && QueryCache.misses.get == m, s"$c in [$lo, $hi]: not a cache hit")
+      assert(n == 1, s"$c in [$lo, $hi]: $n jobs, want only the chunk read (no metadata job)")
+    }
+  }
+
+  test("IndexStore.gather over the pushdown cap reads by left-semi join") {
+    val keys = Snapshots.storeDf(spark, wideDir).select("shard", "partId", "chunkId").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
+    assert(keys.size == 1300)
+    // position 0 of every two-row chunk is its even id
+    val got = IndexStore.gather(spark, wideDir, wide.schema, keys.map(_ -> Array(0)).toMap)
+    assertSameRows(got, wide.filter(col("id") % 2 === 0), "gather(position 0 of every chunk)")
+    val plan = StoreLayout.readBlocksByKeys(spark, wideDir, keys).queryExecution.executedPlan.toString
+    assert(plan.contains("LeftSemi"), s"over-cap keyed read must semi-join:\n$plan")
+    assert(!plan.contains("EqualTo(chunkId"), s"over-cap keyed read must not push chunk keys:\n$plan")
+  }
+
+  // ---------------------------------------------------------------- block reader
+
+  /** Every field of two block lists, matched by chunk key. */
+  private def assertSameBlocks(got: Seq[graft.encode.EncodedBlock], want: Seq[graft.encode.EncodedBlock],
+                               what: String): Unit = {
+    def byKey(bs: Seq[graft.encode.EncodedBlock]) = bs.map(b => (b.shard, b.partId, b.chunkId) -> b).toMap
+    val (g, w) = (byKey(got), byKey(want))
+    assert(got.size == want.size && g.keySet == w.keySet, s"$what: chunk keys differ")
+    for ((k, wb) <- w) {
+      val gb = g(k)
+      assert(gb.nRows == wb.nRows && gb.cols.size == wb.cols.size, s"$what $k")
+      gb.cols.zip(wb.cols).foreach { case (gc, wc) =>
+        assert(gc.copy(sha = null, payload = null) == wc.copy(sha = null, payload = null), s"$what $k ${wc.name}")
+        assert(gc.sha.sameElements(wc.sha) && gc.payload.sameElements(wc.payload), s"$what $k ${wc.name} bytes")
+      }
+    }
+  }
+
+  test("blockRdd equals Dataset.rdd field by field: hist, sha, empty zone keys, nested schema") {
+    val blocks = StoreLayout.readBlocks(spark, wideDir)
+    val all = blocks.rdd.collect().toSeq
+    val cols = all.flatMap(_.cols)
+    assert(cols.exists(_.minKey == "") && cols.exists(c => c.hist != null && c.hist.nonEmpty) &&
+      cols.forall(_.sha.nonEmpty), "fixture lacks an empty zone key, a histogram or a digest")
+    assertSameBlocks(StoreLayout.blockRdd(blocks).collect().toSeq, all, "store scan")
+    val narrow = StoreLayout.readBlocks(spark, wideDir, Seq("grp", "s"))
+    assertSameBlocks(StoreLayout.blockRdd(narrow).collect().toSeq, narrow.rdd.collect().toSeq, "two columns")
+    val some = StoreLayout.readBlocksByKeys(spark, wideDir, all.take(5).map(b => (b.shard, b.partId, b.chunkId)))
+    assertSameBlocks(StoreLayout.blockRdd(some).collect().toSeq, some.rdd.collect().toSeq, "pushed keys")
+    val typed = MetaIndex.candidateBlocks(blocks, "id", "0", "99")
+    assertSameBlocks(StoreLayout.blockRdd(typed).collect().toSeq, typed.rdd.collect().toSeq, "typed filter")
+    val encoded = TableCodec.encode(wide.limit(40), chunkRows = 8)
+    assertSameBlocks(StoreLayout.blockRdd(encoded).collect().toSeq, encoded.rdd.collect().toSeq, "encode output")
+
+    val nested = corpus.select(col("row_id"), struct(col("repo"), col("lang")).as("meta"), col("content"))
+    val dir = tmpDir("storeread-nested")
+    StoreLayout.write(TableCodec.encode(nested, chunkRows = 100), TableCodec.encodedNames(nested.schema), dir)
+    val nb = StoreLayout.readBlocks(spark, dir)
+    assert(nb.rdd.first().cols.map(_.name).contains("meta.repo"))
+    assertSameBlocks(StoreLayout.blockRdd(nb).collect().toSeq, nb.rdd.collect().toSeq, "nested store")
   }
 
   // ---------------------------------------------------------------- zone-hit expression
