@@ -6,6 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.FutureAction
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.reflect.ClassTag
 
 /** Persisted layout of the encoded block store — v2: one parquet row per
@@ -140,33 +143,58 @@ object StoreLayout {
     }
   }
 
+  /** ONE Spark job over `rdd`: each partition is reduced by `f`, and
+    * the results reach `add` on the driver as they arrive. Once `add`
+    * returns false the job is cancelled: tasks not yet started never
+    * run and no later result reaches `add`, so a bounded collect stops
+    * after the partitions it needs instead of shipping every one.
+    */
+  private[graft] def runUntil[T, U](rdd: RDD[T], f: Iterator[T] => U)(add: (Int, U) => Boolean): Unit = {
+    val lock = new Object
+    var stopped = false
+    var job: FutureAction[Unit] = null
+    lock.synchronized { // the handler runs on the scheduler's thread: it waits for `job`
+      job = rdd.sparkContext.submitJob(rdd, f, rdd.partitions.indices,
+        (i: Int, u: U) => lock.synchronized { if (!stopped && !add(i, u)) { stopped = true; job.cancel() } }, ())
+    }
+    Await.ready(job, Duration.Inf)
+    // a stop has what it needs; otherwise rethrow a failed job's cause
+    if (!lock.synchronized(stopped)) job.value.get.get
+  }
+
   /** The rows of `df`, each partition mapped through `part`, iff there
-    * are at most `cap` of them: ONE Spark job over the plan's rows.
-    * Every task ships at most cap+1 rows; once the total passes `cap`
-    * the driver keeps none. Rows keep partition order, as a collect's
-    * do. `limit(cap+1).collect()` runs incremental-take jobs instead (1
-    * partition, then 4x as many: ceil(log4 P)+1 sequential jobs at P
-    * partitions). `part` must copy what it keeps: scans reuse their row.
+    * are at most `cap` of them: ONE Spark job over the plan's rows
+    * ([[runUntil]]), stopped once the driver holds more than `cap`.
+    * Every task ships at most cap+1 rows. Rows keep partition order, as
+    * a collect's do. `limit(cap+1).collect()` runs incremental-take
+    * jobs instead (1 partition, then 4x as many: ceil(log4 P)+1
+    * sequential jobs at P partitions). `part` must copy what it keeps:
+    * scans reuse their row.
     */
   private[graft] def collectAtMost[T: ClassTag](df: DataFrame, cap: Int)
                                                (part: Iterator[InternalRow] => Iterator[T]): Option[Array[T]] = {
-    val acc = new Capped[T](cap)
-    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
-      (it: Iterator[InternalRow]) => part(it).take(cap + 1).toArray, acc.add _)
-    acc.result
+    val acc = new Capped[Array[T]](cap, _.length)
+    runUntil(df.queryExecution.toRdd, (it: Iterator[InternalRow]) => part(it).take(cap + 1).toArray)(acc.add)
+    acc.result.map(_.flatten.toArray)
   }
 
-  /** Driver side of a bounded collect: per-partition row arrays, all
-    * dropped once their total passes `cap` (None).
+  /** Driver side of a bounded collect: per-partition batches of `size`
+    * rows each, kept in partition order while their total stays within
+    * `cap`, all dropped once it passes (None).
     */
-  private[graft] final class Capped[T: ClassTag](cap: Int) {
-    private val parts = scala.collection.mutable.TreeMap[Int, Array[T]]()
+  private[graft] final class Capped[B](cap: Int, size: B => Int) {
+    private val parts = scala.collection.mutable.TreeMap[Int, B]()
     private var n = 0L
-    def add(partition: Int, rows: Array[T]): Unit = if (n <= cap) {
-      n += rows.length
-      if (n <= cap) parts(partition) = rows else parts.clear()
+    /** Keep `batch`; false once the total has passed `cap`. */
+    def add(partition: Int, batch: B): Boolean = {
+      if (within) {
+        n += size(batch)
+        if (within) parts(partition) = batch else parts.clear()
+      }
+      within
     }
-    def result: Option[Array[T]] = if (n > cap) None else Some(parts.valuesIterator.flatten.toArray)
+    def within: Boolean = n <= cap
+    def result: Option[Seq[B]] = if (within) Some(parts.values.toSeq) else None
   }
 
   /** A chunk key (shard, partId, chunkId) from the first three fields. */
@@ -213,15 +241,16 @@ object StoreLayout {
     * pushed into the parquet scan when there are at most
     * MAX_PUSHDOWN_KEYS of them, else — `None` or more keys — a
     * left-semi join of the store on `cand` (the read touches most of
-    * the store anyway). `cand` is only built for the join.
+    * the store anyway). `cand` is only built for the join. A read
+    * given `keys` addresses chunks by key, so it refuses a
+    * batch-partitioned store ([[requireNoBatch]]).
     */
   def readChunks(spark: SparkSession, storeDir: String, cand: => DataFrame,
                  keys: Option[Seq[(Int, Int, Long)]], names: Seq[String]): Dataset[EncodedBlock] = {
     val df = Snapshots.storeDf(spark, storeDir)
+    if (keys.isDefined) requireNoBatch(df.schema, "a chunk-key read")
     keys match {
-      case Some(ks) if ks.size <= MAX_PUSHDOWN_KEYS =>
-        requireNoBatch(df.schema, "a pushed chunk-key read")
-        assemble(pushKeys(df, ks), fieldsOf(df.schema, names))
+      case Some(ks) if ks.size <= MAX_PUSHDOWN_KEYS => assemble(pushKeys(df, ks), fieldsOf(df.schema, names))
       case _ =>
         val keyCols = Seq("shard", "partId", "chunkId")
         assemble(df.join(cand.select(keyCols.map(col): _*), keyCols, "left_semi"), fieldsOf(df.schema, names))
@@ -250,11 +279,9 @@ object StoreLayout {
     * the scan, more are a left-semi join on a local key frame.
     */
   def readBlocksByKeys(spark: SparkSession, storeDir: String, keys: Seq[(Int, Int, Long)],
-                       names: Seq[String] = null): Dataset[EncodedBlock] = {
-    requireNoBatch(Snapshots.storeDf(spark, storeDir).schema, "readBlocksByKeys")
+                       names: Seq[String] = null): Dataset[EncodedBlock] =
     readChunks(spark, storeDir, spark.createDataFrame(keys).toDF("shard", "partId", "chunkId"),
       Some(keys), names)
-  }
 
   /** Decode-free physical recluster — the reference's `reorder_offsets`
     * (python-blosc2 schunk.py:1055: permute chunks WITHOUT

@@ -2,6 +2,7 @@ package graft.index
 
 import graft.encode.{MetaIndex, QueryCache, StoreLayout, TableCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.InternalRowShim
@@ -181,24 +182,54 @@ object IndexStore {
     */
   def rangeGather(spark: SparkSession, storeDir: String, schema: StructType,
                   colName: String, lo: String, hi: String): DataFrame =
-    gather(spark, storeDir, schema, byChunk(hitRows(spark, storeDir, schema, colName, lo, hi).collect()))
+    gather(spark, storeDir, schema, byChunk(collectHits(hitRows(spark, storeDir, schema, colName, lo, hi))))
 
   /** FULL-index hit rows (shard, partId, chunkId, pos) of [lo, hi]. */
   private[index] def hitRows(spark: SparkSession, storeDir: String, schema: StructType,
                               colName: String, lo: String, hi: String): DataFrame =
     readFullRange(spark, storeDir, schema, colName, lo, hi).select("shard", "partId", "chunkId", "pos")
 
-  /** A hit row's (shard, partId, chunkId, pos). */
-  private[index] def hitOf(r: org.apache.spark.sql.catalyst.InternalRow): (Int, Int, Long, Int) =
-    (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))
+  /** FULL-index hits as parallel primitive arrays: 20 bytes a hit to
+    * ship to the driver, where boxed tuples cost several times that.
+    */
+  private[index] final class Hits(val shard: Array[Int], val partId: Array[Int],
+                                  val chunkId: Array[Long], val pos: Array[Int]) extends Serializable {
+    def size: Int = pos.length
+  }
+
+  private[index] object Hits {
+    /** The first `max` rows of `rows`, fields ordered as [[hitRows]]. */
+    def of(rows: Iterator[InternalRow], max: Int = Int.MaxValue): Hits = {
+      val (s, p, c, q) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long], Array.newBuilder[Int])
+      rows.take(max).foreach { r => s += r.getInt(0); p += r.getInt(1); c += r.getLong(2); q += r.getInt(3) }
+      new Hits(s.result(), p.result(), c.result(), q.result())
+    }
+
+    def concat(hs: Seq[Hits]): Hits =
+      new Hits(Array.concat(hs.map(_.shard): _*), Array.concat(hs.map(_.partId): _*),
+        Array.concat(hs.map(_.chunkId): _*), Array.concat(hs.map(_.pos): _*))
+  }
+
+  /** All hits of hit frame `df` (fields ordered as [[hitRows]]): one
+    * collect, executed as `Dataset.collect` would, without the Row
+    * conversion.
+    */
+  private def collectHits(df: DataFrame): Hits = Hits.of(df.queryExecution.executedPlan.executeCollect().iterator)
+
+  /** The hits of hit frame `df` that `keep` accepts, iff at most `cap`:
+    * one job, stopped once the driver holds more than `cap`
+    * ([[StoreLayout.runUntil]]).
+    */
+  private[index] def hitsAtMost(df: DataFrame, cap: Int)(keep: InternalRow => Boolean): Option[Hits] = {
+    val acc = new StoreLayout.Capped[Hits](cap, _.size)
+    StoreLayout.runUntil(df.queryExecution.toRdd, (it: Iterator[InternalRow]) => Hits.of(it.filter(keep), cap + 1))(acc.add)
+    acc.result.map(Hits.concat)
+  }
 
   /** Sorted hit positions per chunk — a gather's input. */
-  private[index] def byChunk(hits: Array[(Int, Int, Long, Int)]): Map[(Int, Int, Long), Array[Int]] =
-    hits.groupBy(h => (h._1, h._2, h._3)).map { case (k, hs) => k -> hs.map(_._4).sorted }
-
-  /** [[byChunk]] of collected (shard, partId, chunkId, pos) rows. */
-  private def byChunk(rows: Array[org.apache.spark.sql.Row]): Map[(Int, Int, Long), Array[Int]] =
-    byChunk(rows.map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getInt(3))))
+  private[index] def byChunk(h: Hits): Map[(Int, Int, Long), Array[Int]] =
+    (0 until h.size).groupBy(i => (h.shard(i), h.partId(i), h.chunkId(i)))
+      .map { case (k, is) => k -> is.map(i => h.pos(i)).toArray.sorted }
 
   /** Equality probe through the BUCKET index: decode only chunks whose
     * bucket set contains the probe's bucket, then exact-filter. `value`
@@ -401,8 +432,8 @@ object IndexStore {
       // the oracle's row selection under ties); deep descending reads
       // page with the keyset cursor (sortedPage ascending=false).
       val win = idx.filter(col("rank") >= offset && col("rank") < offset + k)
-        .select("shard", "partId", "chunkId", "pos").collect()
-      return gather(spark, storeDir, schema, byChunk(win))
+        .select("shard", "partId", "chunkId", "pos")
+      return gather(spark, storeDir, schema, byChunk(collectHits(win)))
     }
     // Dataset.offset is Int-typed; a silent .toInt wrap would read the
     // wrong window. Deep windows (offset ~ rows at 100 TB) should page
@@ -413,9 +444,8 @@ object IndexStore {
     val ordered = if (ascending)
       idx.orderBy(col("key"), col("shard"), col("partId"), col("chunkId"), col("pos"))
     else idx.orderBy(col("key").desc, col("shard"), col("partId"), col("chunkId"), col("pos"))
-    val win = ordered.offset(offset.toInt).limit(k)
-      .select("shard", "partId", "chunkId", "pos").collect()
-    gather(spark, storeDir, schema, byChunk(win))
+    val win = ordered.offset(offset.toInt).limit(k).select("shard", "partId", "chunkId", "pos")
+    gather(spark, storeDir, schema, byChunk(collectHits(win)))
   }
 }
 
@@ -474,22 +504,26 @@ object Planner {
     * MAX_GATHER_ROWS, or no index).
     */
   private final case class Probe(cand: Long, total: Long, keys: Option[Seq[(Int, Int, Long)]],
-                                 hits: Option[Array[(Int, Int, Long, Int)]])
+                                 hits: Option[IndexStore.Hits])
 
   /** One partition's share of a [[Probe]]. */
   private final case class ProbePart(cand: Long, total: Long, keys: Array[(Int, Int, Long)],
-                                     hits: Array[(Int, Int, Long, Int)])
+                                     hits: IndexStore.Hits)
 
   /** ONE Spark job over the union of the zone-metadata scan and the
     * FULL-index range scan (`index`), with no exchange: each zone
     * partition counts its chunks and hits and keeps at most
     * MAX_PUSHDOWN_KEYS+1 candidate keys, each index partition keeps at
     * most MAX_GATHER_ROWS+1 hits, and the driver bounds both totals.
-    * A NULL zone hit is a miss, as in pruningStats' sum.
+    * The job stops ([[StoreLayout.runUntil]]) once the hits are past
+    * their cap and every zone partition has reported, so an over-cap
+    * range ships a few partitions' hits, not the whole range. A NULL
+    * zone hit is a miss, as in pruningStats' sum.
     */
   private def probe(zone: DataFrame, index: Option[DataFrame]): Probe = {
     val keyCap = StoreLayout.MAX_PUSHDOWN_KEYS
     val hitCap = MAX_GATHER_ROWS.toInt
+    val noHits = IndexStore.Hits.of(Iterator.empty)
     val zoneParts = zone.queryExecution.toRdd.mapPartitions { it =>
       var cand, total = 0L
       val keys = Array.newBuilder[(Int, Int, Long)]
@@ -500,24 +534,29 @@ object Planner {
           cand += 1
         }
       }
-      Iterator(new ProbePart(cand, total, keys.result(), Array.empty))
+      Iterator(ProbePart(cand, total, keys.result(), noHits))
     }
+    val nZone = zoneParts.getNumPartitions
     val parts = index.fold(zoneParts)(ix => zoneParts.union(ix.queryExecution.toRdd.mapPartitions { it =>
-      Iterator(new ProbePart(0L, 0L, Array.empty, it.take(hitCap + 1).map(IndexStore.hitOf).toArray))
+      Iterator(ProbePart(0L, 0L, Array.empty, IndexStore.Hits.of(it, hitCap + 1)))
     }))
     var cand, total = 0L
-    val keys = new StoreLayout.Capped[(Int, Int, Long)](keyCap)
-    val hits = new StoreLayout.Capped[(Int, Int, Long, Int)](hitCap)
-    zone.sparkSession.sparkContext.runJob(parts, (it: Iterator[ProbePart]) => it.next(),
-      (i: Int, p: ProbePart) => {
-        cand += p.cand; total += p.total
-        keys.add(i, p.keys); hits.add(i, p.hits)
-      })
-    Probe(cand, total, keys.result.map(_.toSeq), index.flatMap(_ => hits.result))
+    var zoneLeft = nZone
+    val keys = new StoreLayout.Capped[Array[(Int, Int, Long)]](keyCap, _.length)
+    val hits = new StoreLayout.Capped[IndexStore.Hits](hitCap, _.size)
+    StoreLayout.runUntil(parts, (it: Iterator[ProbePart]) => it.next()) { (i, p) =>
+      if (i < nZone) {
+        cand += p.cand; total += p.total; zoneLeft -= 1
+        keys.add(i, p.keys)
+      } else hits.add(i, p.hits)
+      zoneLeft > 0 || hits.within
+    }
+    Probe(cand, total, keys.result.map(_.flatten), index.flatMap(_ => hits.result.map(IndexStore.Hits.concat)))
   }
 
   /** Execute a range query through the chosen path, deciding as [[plan]]
-    * does (past MAX_GATHER_ROWS hits the index counts read -1). Unlike calling `plan` then `rangeGather`, the zone counts and
+    * does (past MAX_GATHER_ROWS hits the index counts read -1). Unlike
+    * calling `plan` then `rangeGather`, the zone counts and
     * the bounded FULL-index hits come from ONE Spark job ([[probe]]),
     * and the hits serve both the cost decision and the gather: a
     * planned probe is 2 Spark jobs (probe, then the read), either path.
@@ -542,8 +581,8 @@ object Planner {
         val byChunk = IndexStore.byChunk(hits)
         if (byChunk.size <= (p.cand * GATHER_CHUNK_ADVANTAGE).toLong + 1)
           (IndexStore.gather(spark, storeDir, schema, byChunk),
-            Choice("index-gather", hits.length.toLong, byChunk.size.toLong, p.cand, p.total))
-        else scan(hits.length.toLong, byChunk.size.toLong)
+            Choice("index-gather", hits.size.toLong, byChunk.size.toLong, p.cand, p.total))
+        else scan(hits.size.toLong, byChunk.size.toLong)
     }
   }
 
@@ -587,8 +626,8 @@ object Planner {
       case Some(ip) if keys.isDefined =>
         val keySet = keys.get.toSet
         // the index hits inside surviving chunks, bounded in ONE job
-        StoreLayout.collectAtMost(IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi),
-          MAX_GATHER_ROWS.toInt)(_.filter(r => keySet.contains(StoreLayout.keyOf(r))).map(IndexStore.hitOf)) match {
+        IndexStore.hitsAtMost(IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi),
+          MAX_GATHER_ROWS.toInt)(r => keySet.contains(StoreLayout.keyOf(r))) match {
           case Some(hits) => IndexStore.gather(spark, storeDir, schema, IndexStore.byChunk(hits)).filter(exactAll)
           case None => scanCandidates
         }

@@ -282,6 +282,69 @@ class StoreReadSpec extends SparkTestBase {
     big.unpersist()
   }
 
+  /** Runs `body` with these SQL confs set, restoring the prior values. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `body`'s value, the result bytes its successful tasks shipped to
+    * the driver, and how many tasks succeeded.
+    */
+  private def shipped[T](body: => T): (T, Long, Int) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.reason == org.apache.spark.Success && t.taskMetrics != null) {
+          bytes.addAndGet(t.taskMetrics.resultSize); tasks.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val v = body
+      org.apache.spark.sql.graftshim.TestListenerShim.waitUntilEmpty(spark.sparkContext)
+      (v, bytes.get, tasks.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Planner.query far past MAX_GATHER_ROWS stops its probe: bounded bytes reach the driver") {
+    val cap = Planner.MAX_GATHER_ROWS
+    val n = 5 * cap
+    val big = spark.range(0, n, 1, 4).toDF("id")
+    val dir = writeStore(big, chunkRows = 8192)
+    // the FULL index as 100 files, each read as its own scan partition
+    withConf("spark.sql.shuffle.partitions" -> "100", "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      IndexStore.createFull(spark, dir, big.schema, "id")
+    }
+    withConf("spark.sql.files.maxPartitionBytes" -> "1m") {
+      val (lo, hi) = ("0", s"${n - 1}")
+      val parts = IndexStore.readFullRange(spark, dir, big.schema, "id", lo, hi).rdd.getNumPartitions
+      assert(parts >= 100, s"$parts index scan partitions")
+      val ((got, choice), bytes, tasks) = shipped(Planner.query(spark, dir, big.schema, "id", lo, hi))
+      info(s"probe: $tasks tasks, $bytes result bytes over $parts index partitions")
+      assert(choice == expectedChoice(dir, big.schema, "id", lo, hi) && choice.path == "zone-scan", choice.toString)
+      // 20 bytes a hit: the cap's worth plus a few partitions in flight,
+      // where shipping the whole range (n hits) would be 5x the cap's
+      assert(bytes < 2 * 20 * (cap + 1), s"probe shipped $bytes bytes")
+      assert(tasks < parts, s"probe ran all $tasks tasks")
+      assertSameRows(got, big, "query(id in [0, n))")
+    }
+  }
+
+  test("collectAtMost: rows in partition order up to the cap, None past it, failures rethrown") {
+    val df = spark.range(0, 1000, 1, 8).toDF("id")
+    def ids(cap: Int) = StoreLayout.collectAtMost(df, cap)(_.map(_.getLong(0))).map(_.toSeq)
+    assert(ids(1000) == Some(0L until 1000L))
+    assert(ids(999).isEmpty)
+    assert(jobs("collectAtMost")(assert(ids(10).isEmpty)) == 1)
+    val err = intercept[Exception](StoreLayout.collectAtMost(
+      spark.range(0, 10, 1, 2).select(raise_error(lit("boom"))), 100)(_.map(_ => 0)))
+    assert(err.getMessage.contains("boom"), err.getMessage)
+  }
+
   test("Planner.query files its candidate keys where MetaIndex.lookup finds them") {
     val schema = corpus.schema
     val repo = corpus.select("repo").orderBy("repo").head().getString(0)
