@@ -83,42 +83,18 @@ object MetaAgg {
     TableCodec.decode(StoreLayout.readChunks(spark, storeDir, cand, keys, Seq(colName)),
       StructType(Seq(MetaIndex.flatOf(schema)(colName))))
 
-  /** Fallback-chunk keys per column, each bounded INDEPENDENTLY.
-    * Common case: the union of every column's flagged chunks fits
-    * MAX_PUSHDOWN_KEYS → ONE collect job serves all columns. Rare giant
-    * case: one count aggregate learns each column's own flagged count,
-    * then columns under the cap get their own pushed keys and only
-    * truly-oversized columns fall to the semi-join (None) — a column
-    * with few (or zero) fallback chunks never loses pushdown because a
-    * sibling column overflowed the shared cap.
-    * Result per column: Some(keys) (possibly empty = skip the decode
-    * branch entirely) or None (= decode via semi-join on `cond`).
+  /** Fallback-chunk keys per column, each bounded INDEPENDENTLY, from
+    * ONE probe job over the chunks flagged on any column
+    * ([[StoreLayout.probe]]): a column with few (or zero) fallback
+    * chunks keeps its pushed keys when a sibling column overflows the
+    * cap. Result per column: Some(keys) (possibly empty = skip the
+    * decode branch entirely) or None (= decode via semi-join on `cond`).
     */
   private def fallbackKeys(meta: DataFrame, conds: Seq[(String, Column)]):
-      Map[String, Option[Seq[(Int, Int, Long)]]] = {
-    if (conds.isEmpty) return Map.empty
-    val nc = conds.size
-    val flagged = StoreLayout.collectAtMost(meta
-      .filter(conds.map(_._2).reduce(_ || _))
-      .select(Seq(col("shard"), col("partId"), col("chunkId")) ++
-        conds.zipWithIndex.map { case ((_, e), i) => e.as(s"_f$i") }: _*),
-      StoreLayout.MAX_PUSHDOWN_KEYS)(_.map(r =>
-        (StoreLayout.keyOf(r), Array.tabulate(nc)(i => !r.isNullAt(3 + i) && r.getBoolean(3 + i)))))
-    flagged match {
-      case Some(rows) =>
-        conds.zipWithIndex.map { case ((c, _), i) => c -> Some(rows.filter(_._2(i)).map(_._1).toSeq) }.toMap
-      case None =>
-        val cntAggs = conds.map { case (_, e) => sum(when(e, 1L).otherwise(0L)) }
-        val cnts = meta.agg(cntAggs.head, cntAggs.tail: _*).head()
-        conds.zipWithIndex.map { case ((c, e), i) =>
-          val n = if (cnts.isNullAt(i)) 0L else cnts.getLong(i)
-          if (n == 0L) c -> Some(Nil)
-          else if (n <= StoreLayout.MAX_PUSHDOWN_KEYS)
-            c -> StoreLayout.pushableKeys(meta.filter(e))
-          else c -> None
-        }.toMap
-    }
-  }
+      Map[String, Option[Seq[(Int, Int, Long)]]] =
+    if (conds.isEmpty) Map.empty
+    else conds.map(_._1).zip(StoreLayout.probe(meta.filter(conds.map(_._2).reduce(_ || _)),
+      conds.map(_._2), needCounts = false).keys).toMap
 
   /** Exact SUM(col) for an integral-domain column, served from the
     * per-chunk `sumKey` accumulators: zero payload bytes unless a chunk

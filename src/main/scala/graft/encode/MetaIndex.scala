@@ -121,15 +121,6 @@ object MetaIndex {
   def candidateKeysAnd(spark: SparkSession, storeDir: String, hits: Seq[Column]): DataFrame =
     Snapshots.storeDf(spark, storeDir).filter(hits.reduce(_ && _)).select("shard", "partId", "chunkId")
 
-  /** Every chunk's key and its [[zoneHit]] on `colName` for [lo, hi]
-    * (`hit`; NULL counts as a miss, as in a filter) — the metadata
-    * scan behind a planned probe's candidate count and keys.
-    */
-  private[graft] def zoneHits(spark: SparkSession, storeDir: String, colName: String,
-                               lo: String, hi: String): DataFrame =
-    Snapshots.storeDf(spark, storeDir).select(col("shard"), col("partId"), col("chunkId"),
-      zoneHitOn(colName, Some(lo), Some(hi)).as("hit"))
-
   /** The QueryCache key of [lo, hi] on `colName`'s candidate chunk keys
     * at the store's current version. Take it BEFORE the scan whose keys
     * it stores: a commit during the scan then files them under the old
@@ -140,14 +131,16 @@ object MetaIndex {
     QueryCache.key(spark, storeDir, "zone", colName, lo, hi)
 
   /** Candidate chunk keys of [lo, hi] on `colName` (pushable, else
-    * None). Repeated probes with the same predicate skip the metadata
-    * scan: the keys come from the store-version-keyed LRU (QueryCache —
-    * the reference's result-coordinate cache analog).
+    * None): one bounded probe job ([[StoreLayout.probe]]). Repeated
+    * probes with the same predicate skip the metadata scan: the keys
+    * come from the store-version-keyed LRU (QueryCache — the
+    * reference's result-coordinate cache analog).
     */
   private def cachedCandidates(spark: SparkSession, storeDir: String, colName: String,
                                lo: String, hi: String): Option[Seq[(Int, Int, Long)]] =
     QueryCache.coordinates(candidatesKey(spark, storeDir, colName, lo, hi))(
-      StoreLayout.pushableKeys(candidateKeys(spark, storeDir, colName, lo, hi)))
+      StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(zoneHitOn(colName, Some(lo), Some(hi))),
+        needCounts = false).keys.head)
 
   /** Read only the surviving blocks (StoreLayout.readChunks: pushed
     * keys, or a left-semi join when too many survive). `names`

@@ -3,6 +3,7 @@ package graft.encode
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Conservative zone-map pruning for ARBITRARY `Column` predicates —
@@ -186,6 +187,7 @@ object PredicatePrune {
                       predicate: Column, names: Seq[String]): Dataset[EncodedBlock] =
     candidateChunks(spark, storeDir, schema, predicate) match {
       case None => StoreLayout.readBlocks(spark, storeDir, names)
-      case Some(cand) => StoreLayout.readChunks(spark, storeDir, cand, StoreLayout.pushableKeys(cand), names)
+      case Some(cand) => StoreLayout.readChunks(spark, storeDir, cand,
+        StoreLayout.probe(cand, Seq(lit(true)), needCounts = false).keys.head, names)
     }
 }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import org.apache.spark.FutureAction
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
-import scala.reflect.ClassTag
 
 /** Persisted layout of the encoded block store — v2: one parquet row per
   * chunk, ONE TOP-LEVEL PARQUET STRUCT COLUMN PER TABLE COLUMN.
@@ -149,7 +148,7 @@ object StoreLayout {
     * run and no later result reaches `add`, so a bounded collect stops
     * after the partitions it needs instead of shipping every one.
     */
-  private[graft] def runUntil[T, U](rdd: RDD[T], f: Iterator[T] => U)(add: (Int, U) => Boolean): Unit = {
+  private def runUntil[T, U](rdd: RDD[T], f: Iterator[T] => U)(add: (Int, U) => Boolean): Unit = {
     val lock = new Object
     var stopped = false
     var job: FutureAction[Unit] = null
@@ -162,27 +161,11 @@ object StoreLayout {
     if (!lock.synchronized(stopped)) job.value.get.get
   }
 
-  /** The rows of `df`, each partition mapped through `part`, iff there
-    * are at most `cap` of them: ONE Spark job over the plan's rows
-    * ([[runUntil]]), stopped once the driver holds more than `cap`.
-    * Every task ships at most cap+1 rows. Rows keep partition order, as
-    * a collect's do. `limit(cap+1).collect()` runs incremental-take
-    * jobs instead (1 partition, then 4x as many: ceil(log4 P)+1
-    * sequential jobs at P partitions). `part` must copy what it keeps:
-    * scans reuse their row.
-    */
-  private[graft] def collectAtMost[T: ClassTag](df: DataFrame, cap: Int)
-                                               (part: Iterator[InternalRow] => Iterator[T]): Option[Array[T]] = {
-    val acc = new Capped[Array[T]](cap, _.length)
-    runUntil(df.queryExecution.toRdd, (it: Iterator[InternalRow]) => part(it).take(cap + 1).toArray)(acc.add)
-    acc.result.map(_.flatten.toArray)
-  }
-
   /** Driver side of a bounded collect: per-partition batches of `size`
     * rows each, kept in partition order while their total stays within
     * `cap`, all dropped once it passes (None).
     */
-  private[graft] final class Capped[B](cap: Int, size: B => Int) {
+  private final class Capped[B](cap: Int, size: B => Int) {
     private val parts = scala.collection.mutable.TreeMap[Int, B]()
     private var n = 0L
     /** Keep `batch`; false once the total has passed `cap`. */
@@ -197,8 +180,109 @@ object StoreLayout {
     def result: Option[Seq[B]] = if (within) Some(parts.values.toSeq) else None
   }
 
-  /** A chunk key (shard, partId, chunkId) from the first three fields. */
-  private[graft] def keyOf(r: InternalRow): (Int, Int, Long) = (r.getInt(0), r.getInt(1), r.getLong(2))
+  /** How many candidate chunk keys a read pushes into the parquet scan
+    * as an OR-of-ANDs predicate. Above this the read is not selective,
+    * and the honest plan is a store scan + left-semi join.
+    */
+  val MAX_PUSHDOWN_KEYS = 1024
+
+  /** How many index hits a probe ships to the driver. Above this many
+    * matching rows the gather's position broadcast and row-at-a-time
+    * assembly lose to a streaming chunk scan (measured: decode
+    * ~1.6 GB/s vs ~8M gathered rows/s per core).
+    */
+  val MAX_GATHER_ROWS = 200000L
+
+  /** Chunk-addressed hits (shard, partId, chunkId, pos) as parallel
+    * primitive arrays: 20 bytes a hit to ship to the driver, where
+    * boxed tuples cost several times that.
+    */
+  private[graft] final class Hits(val shard: Array[Int], val partId: Array[Int],
+                                  val chunkId: Array[Long], val pos: Array[Int]) extends Serializable {
+    def size: Int = pos.length
+
+    /** Sorted hit positions per chunk — a gather's input. */
+    @transient lazy val byChunk: Map[(Int, Int, Long), Array[Int]] =
+      (0 until size).groupBy(i => (shard(i), partId(i), chunkId(i)))
+        .map { case (k, is) => k -> is.map(pos).toArray.sorted }
+  }
+
+  private[graft] object Hits {
+    /** The first `max` rows of `rows`, fields (shard, partId, chunkId, pos). */
+    def of(rows: Iterator[InternalRow], max: Int = Int.MaxValue): Hits = {
+      val (s, p, c, q) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long], Array.newBuilder[Int])
+      rows.take(max).foreach { r => s += r.getInt(0); p += r.getInt(1); c += r.getLong(2); q += r.getInt(3) }
+      new Hits(s.result(), p.result(), c.result(), q.result())
+    }
+
+    def concat(hs: Seq[Hits]): Hits =
+      new Hits(Array.concat(hs.map(_.shard): _*), Array.concat(hs.map(_.partId): _*),
+        Array.concat(hs.map(_.chunkId): _*), Array.concat(hs.map(_.pos): _*))
+  }
+
+  /** What a [[probe]] returns, per hit column: its candidate count and
+    * its chunk keys (None: more than MAX_PUSHDOWN_KEYS); then the total
+    * chunk count and the index hits (None: more than MAX_GATHER_ROWS,
+    * or no index).
+    */
+  private[graft] final case class Probe(cand: Seq[Long], keys: Seq[Option[Seq[(Int, Int, Long)]]],
+                                        total: Long, hits: Option[Hits])
+
+  /** One partition's share of a [[Probe]]. */
+  private final case class ProbePart(cand: Array[Long], total: Long, keys: Array[Array[(Int, Int, Long)]],
+                                     hits: Hits)
+
+  /** Every bounded metadata question a store read asks, in ONE Spark
+    * job ([[runUntil]]) with no exchange: the rows of `meta` (chunk keys
+    * `shard`, `partId`, `chunkId`) are tested against each `hit` column
+    * (NULL is a miss, as in a filter), unioned with the hit rows
+    * (shard, partId, chunkId, pos) of `index`. Each metadata partition
+    * counts its chunks and each column's hits and ships at most
+    * MAX_PUSHDOWN_KEYS+1 keys per column; each index partition ships at
+    * most MAX_GATHER_ROWS+1 hits; the driver bounds every column and the
+    * hits independently. Keys and hits keep partition order. The job
+    * stops once what is left cannot change the answer: the hits (with
+    * an `index`) are past their cap, and either every metadata
+    * partition has reported or, without `needCounts`, every column is
+    * past its cap. The counts are exact only with `needCounts`. A
+    * failed task is rethrown, never taken for a stop.
+    */
+  private[graft] def probe(meta: DataFrame, hit: Seq[Column], index: Option[DataFrame] = None,
+                           needCounts: Boolean = true): Probe = {
+    val (k, keyCap, hitCap) = (hit.size, MAX_PUSHDOWN_KEYS, MAX_GATHER_ROWS.toInt)
+    val noHits = Hits.of(Iterator.empty)
+    val zone = meta.select(Seq(col("shard"), col("partId"), col("chunkId")) ++ hit: _*)
+      .queryExecution.toRdd.mapPartitions { it =>
+        val cand = new Array[Long](k)
+        var total = 0L
+        val keys = Array.fill(k)(Array.newBuilder[(Int, Int, Long)])
+        it.foreach { r =>
+          total += 1
+          for (j <- 0 until k if !r.isNullAt(3 + j) && r.getBoolean(3 + j)) {
+            if (cand(j) <= keyCap) keys(j) += ((r.getInt(0), r.getInt(1), r.getLong(2)))
+            cand(j) += 1
+          }
+        }
+        Iterator(ProbePart(cand, total, keys.map(_.result()), noHits))
+      }
+    val nZone = zone.getNumPartitions
+    val parts = index.fold(zone)(ix => zone.union(ix.queryExecution.toRdd.mapPartitions { it =>
+      Iterator(ProbePart(new Array[Long](k), 0L, Array.fill(k)(Array.empty), Hits.of(it, hitCap + 1)))
+    }))
+    val cand = new Array[Long](k)
+    var total = 0L
+    var zoneLeft = nZone
+    val keys = Seq.fill(k)(new Capped[Array[(Int, Int, Long)]](keyCap, _.length))
+    val hits = new Capped[Hits](hitCap, _.size)
+    runUntil(parts, (it: Iterator[ProbePart]) => it.next()) { (i, p) =>
+      if (i < nZone) {
+        for (j <- 0 until k) { cand(j) += p.cand(j); keys(j).add(i, p.keys(j)) }
+        total += p.total; zoneLeft -= 1
+      } else hits.add(i, p.hits)
+      zoneLeft > 0 && (needCounts || keys.exists(_.within)) || index.isDefined && hits.within
+    }
+    Probe(cand.toSeq, keys.map(_.result.map(_.flatten)), total, index.flatMap(_ => hits.result.map(Hits.concat)))
+  }
 
   /** Blocks carrying only `names`' columns (column-selective IO);
     * `names = null` → all columns, `shards` → partition-dir pruning.
@@ -222,22 +306,8 @@ object StoreLayout {
     assemble(df, storeColFields(df.schema))
   }
 
-  /** How many candidate chunk keys a read pushes into the parquet scan
-    * as an OR-of-ANDs predicate. Above this the read is not selective,
-    * and the honest plan is a store scan + left-semi join.
-    */
-  val MAX_PUSHDOWN_KEYS = 1024
-
-  /** The (shard, partId, chunkId) keys of candidate frame `cand` iff
-    * there are at most MAX_PUSHDOWN_KEYS of them — one bounded collect
-    * job ([[collectAtMost]]).
-    */
-  def pushableKeys(cand: DataFrame): Option[Seq[(Int, Int, Long)]] =
-    collectAtMost(cand.select("shard", "partId", "chunkId"), MAX_PUSHDOWN_KEYS)(_.map(keyOf))
-      .map(_.toSeq)
-
   /** Read the chunks candidate frame `cand` names, carrying only
-    * `names`' columns (null = all): `keys` (from [[pushableKeys]])
+    * `names`' columns (null = all): `keys` (from a [[probe]])
     * pushed into the parquet scan when there are at most
     * MAX_PUSHDOWN_KEYS of them, else — `None` or more keys — a
     * left-semi join of the store on `cand` (the read touches most of

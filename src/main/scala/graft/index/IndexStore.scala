@@ -1,8 +1,8 @@
 package graft.index
 
-import graft.encode.{MetaIndex, QueryCache, StoreLayout, TableCodec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import graft.encode.{MetaIndex, QueryCache, Snapshots, StoreLayout, TableCodec}
+import graft.encode.StoreLayout.Hits
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.InternalRowShim
@@ -178,58 +178,24 @@ object IndexStore {
 
   /** Index-served range lookup: probe the FULL index, fetch only the
     * named chunks, gather only the named positions. Returns rows of
-    * `schema`. Caller (Planner) bounds the gather size.
+    * `schema`. UNBOUNDED: every hit of the range reaches the driver;
+    * a bounded lookup goes through [[Planner.query]], which scans
+    * instead past MAX_GATHER_ROWS hits.
     */
   def rangeGather(spark: SparkSession, storeDir: String, schema: StructType,
                   colName: String, lo: String, hi: String): DataFrame =
-    gather(spark, storeDir, schema, byChunk(collectHits(hitRows(spark, storeDir, schema, colName, lo, hi))))
+    gather(spark, storeDir, schema, collectHits(hitRows(spark, storeDir, schema, colName, lo, hi)).byChunk)
 
   /** FULL-index hit rows (shard, partId, chunkId, pos) of [lo, hi]. */
   private[index] def hitRows(spark: SparkSession, storeDir: String, schema: StructType,
                               colName: String, lo: String, hi: String): DataFrame =
     readFullRange(spark, storeDir, schema, colName, lo, hi).select("shard", "partId", "chunkId", "pos")
 
-  /** FULL-index hits as parallel primitive arrays: 20 bytes a hit to
-    * ship to the driver, where boxed tuples cost several times that.
-    */
-  private[index] final class Hits(val shard: Array[Int], val partId: Array[Int],
-                                  val chunkId: Array[Long], val pos: Array[Int]) extends Serializable {
-    def size: Int = pos.length
-  }
-
-  private[index] object Hits {
-    /** The first `max` rows of `rows`, fields ordered as [[hitRows]]. */
-    def of(rows: Iterator[InternalRow], max: Int = Int.MaxValue): Hits = {
-      val (s, p, c, q) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long], Array.newBuilder[Int])
-      rows.take(max).foreach { r => s += r.getInt(0); p += r.getInt(1); c += r.getLong(2); q += r.getInt(3) }
-      new Hits(s.result(), p.result(), c.result(), q.result())
-    }
-
-    def concat(hs: Seq[Hits]): Hits =
-      new Hits(Array.concat(hs.map(_.shard): _*), Array.concat(hs.map(_.partId): _*),
-        Array.concat(hs.map(_.chunkId): _*), Array.concat(hs.map(_.pos): _*))
-  }
-
   /** All hits of hit frame `df` (fields ordered as [[hitRows]]): one
     * collect, executed as `Dataset.collect` would, without the Row
     * conversion.
     */
   private def collectHits(df: DataFrame): Hits = Hits.of(df.queryExecution.executedPlan.executeCollect().iterator)
-
-  /** The hits of hit frame `df` that `keep` accepts, iff at most `cap`:
-    * one job, stopped once the driver holds more than `cap`
-    * ([[StoreLayout.runUntil]]).
-    */
-  private[index] def hitsAtMost(df: DataFrame, cap: Int)(keep: InternalRow => Boolean): Option[Hits] = {
-    val acc = new StoreLayout.Capped[Hits](cap, _.size)
-    StoreLayout.runUntil(df.queryExecution.toRdd, (it: Iterator[InternalRow]) => Hits.of(it.filter(keep), cap + 1))(acc.add)
-    acc.result.map(Hits.concat)
-  }
-
-  /** Sorted hit positions per chunk — a gather's input. */
-  private[index] def byChunk(h: Hits): Map[(Int, Int, Long), Array[Int]] =
-    (0 until h.size).groupBy(i => (h.shard(i), h.partId(i), h.chunkId(i)))
-      .map { case (k, is) => k -> is.map(i => h.pos(i)).toArray.sorted }
 
   /** Equality probe through the BUCKET index: decode only chunks whose
     * bucket set contains the probe's bucket, then exact-filter. `value`
@@ -251,8 +217,8 @@ object IndexStore {
     val bp = bucketPath(storeDir, colName)
     val cand = QueryCache.relation(spark, bp)(spark.read.parquet(bp))
       .filter(col("bucket") === bk) // pushed → row-group skip
-    val blocks = StoreLayout.readChunks(spark, storeDir, cand, StoreLayout.pushableKeys(cand),
-      TableCodec.encodedNames(schema))
+    val keys = StoreLayout.probe(cand, Seq(lit(true)), needCounts = false).keys.head
+    val blocks = StoreLayout.readChunks(spark, storeDir, cand, keys, TableCodec.encodedNames(schema))
     TableCodec.decode(blocks, schema).filter(MetaIndex.exactEq(schema, colName, value))
   }
 
@@ -389,18 +355,18 @@ object IndexStore {
     val ordered = if (ascending)
       resumed.orderBy(col("key"), col("shard"), col("partId"), col("chunkId"), col("pos"))
     else resumed.orderBy(col("key").desc, col("shard"), col("partId"), col("chunkId"), col("pos"))
-    val win = ordered.limit(k).collect()
+    // hit fields first (Hits.of reads them), then the key
+    val win = ordered.limit(k).select("shard", "partId", "chunkId", "pos", "key")
+      .queryExecution.executedPlan.executeCollect()
     if (win.isEmpty) return (gather(spark, storeDir, schema, Map.empty), None)
     val last = win.last
     val keyStr = MetaIndex.flatOf(schema)(colName).dataType match {
-      case StringType => last.getString(0)
-      case DoubleType | FloatType => last.getDouble(0).toString
-      case _ => last.getLong(0).toString
+      case StringType => last.getUTF8String(4).toString
+      case DoubleType | FloatType => last.getDouble(4).toString
+      case _ => last.getLong(4).toString
     }
-    val next = SortCursor(keyStr, last.getInt(1), last.getInt(2), last.getLong(3), last.getInt(4))
-    val byChunk = win.groupBy(r => (r.getInt(1), r.getInt(2), r.getLong(3)))
-      .map { case (kk, rs) => kk -> rs.map(_.getInt(4)).sorted }
-    (gather(spark, storeDir, schema, byChunk), if (win.length < k) None else Some(next))
+    val next = SortCursor(keyStr, last.getInt(0), last.getInt(1), last.getLong(2), last.getInt(3))
+    (gather(spark, storeDir, schema, Hits.of(win.iterator).byChunk), if (win.length < k) None else Some(next))
   }
 
   /** Index-ordered top-k (the reference serves sort_by from a FULL
@@ -433,7 +399,7 @@ object IndexStore {
       // page with the keyset cursor (sortedPage ascending=false).
       val win = idx.filter(col("rank") >= offset && col("rank") < offset + k)
         .select("shard", "partId", "chunkId", "pos")
-      return gather(spark, storeDir, schema, byChunk(collectHits(win)))
+      return gather(spark, storeDir, schema, collectHits(win).byChunk)
     }
     // Dataset.offset is Int-typed; a silent .toInt wrap would read the
     // wrong window. Deep windows (offset ~ rows at 100 TB) should page
@@ -445,7 +411,7 @@ object IndexStore {
       idx.orderBy(col("key"), col("shard"), col("partId"), col("chunkId"), col("pos"))
     else idx.orderBy(col("key").desc, col("shard"), col("partId"), col("chunkId"), col("pos"))
     val win = ordered.offset(offset.toInt).limit(k).select("shard", "partId", "chunkId", "pos")
-    gather(spark, storeDir, schema, byChunk(collectHits(win)))
+    gather(spark, storeDir, schema, collectHits(win).byChunk)
   }
 }
 
@@ -461,17 +427,16 @@ object IndexStore {
   *  - zone scan: decode cost ∝ chunks whose [min,max] intersects.
   *  - full scan: everything (zone keys unbounded / no index).
   *
-  * For AND-of-predicates, zone candidate sets are intersected across
-  * columns FIRST (metadata-only), then one FULL index (if present)
-  * refines the surviving chunks to exact positions.
+  * Every decision comes from ONE metadata job ([[StoreLayout.probe]]):
+  * the zone counts and candidate keys and the bounded FULL-index hits
+  * together. For AND-of-predicates the zone hits of every column are
+  * ANDed in that job, and one FULL index (if present) refines the
+  * surviving chunks to exact positions.
   */
 object Planner {
 
-  /** Above this many matching rows the gather's position broadcast and
-    * row-at-a-time assembly lose to a streaming chunk scan (measured:
-    * decode ~1.6 GB/s vs ~8M gathered rows/s/core on this container).
-    */
-  val MAX_GATHER_ROWS = 200000L
+  /** See [[StoreLayout.MAX_GATHER_ROWS]]. */
+  val MAX_GATHER_ROWS: Long = StoreLayout.MAX_GATHER_ROWS
 
   /** A gather must touch meaningfully fewer chunks than the zone scan
     * to pay for its index probe (reference keeps the same shaped
@@ -483,107 +448,52 @@ object Planner {
 
   final case class Pred(colName: String, lo: String, hi: String)
 
-  def plan(spark: SparkSession, storeDir: String, schema: StructType,
-           colName: String, lo: String, hi: String): Choice = {
-    val (zoneCand, total) = MetaIndex.pruningStats(spark, storeDir, colName, lo, hi)
-    if (!IndexStore.hasFull(spark, storeDir, colName))
-      return Choice("zone-scan", -1L, -1L, zoneCand, total)
-    val idx = IndexStore.readFullRange(spark, storeDir, schema, colName, lo, hi)
-      .groupBy("shard", "partId", "chunkId").agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("chunks"), sum("n").as("rows")).head()
-    val idxChunks = idx.getLong(0)
-    val idxRows = if (idx.isNullAt(1)) 0L else idx.getLong(1)
-    if (idxRows <= MAX_GATHER_ROWS && idxChunks <= (zoneCand * GATHER_CHUNK_ADVANTAGE).toLong + 1)
-      Choice("index-gather", idxRows, idxChunks, zoneCand, total)
-    else Choice("zone-scan", idxRows, idxChunks, zoneCand, total)
-  }
-
-  /** What a planned probe's metadata job returns: the zone candidate
-    * and total chunk counts, the candidate keys (None: more than
-    * MAX_PUSHDOWN_KEYS) and the FULL-index hits (None: more than
-    * MAX_GATHER_ROWS, or no index).
+  /** The probe of [lo, hi] on `colName` (zone hits plus the FULL-index
+    * hits when the column has one) and the decision over it: the
+    * gather when the index names at most MAX_GATHER_ROWS hits in
+    * meaningfully fewer chunks than the zone candidates, else the zone
+    * scan (index counts -1 past MAX_GATHER_ROWS hits or without an
+    * index). The candidate keys are stored in QueryCache, so a
+    * following [[MetaIndex.lookup]] of the same range at the same store
+    * version skips its metadata scan.
     */
-  private final case class Probe(cand: Long, total: Long, keys: Option[Seq[(Int, Int, Long)]],
-                                 hits: Option[IndexStore.Hits])
-
-  /** One partition's share of a [[Probe]]. */
-  private final case class ProbePart(cand: Long, total: Long, keys: Array[(Int, Int, Long)],
-                                     hits: IndexStore.Hits)
-
-  /** ONE Spark job over the union of the zone-metadata scan and the
-    * FULL-index range scan (`index`), with no exchange: each zone
-    * partition counts its chunks and hits and keeps at most
-    * MAX_PUSHDOWN_KEYS+1 candidate keys, each index partition keeps at
-    * most MAX_GATHER_ROWS+1 hits, and the driver bounds both totals.
-    * The job stops ([[StoreLayout.runUntil]]) once the hits are past
-    * their cap and every zone partition has reported, so an over-cap
-    * range ships a few partitions' hits, not the whole range. A NULL
-    * zone hit is a miss, as in pruningStats' sum.
-    */
-  private def probe(zone: DataFrame, index: Option[DataFrame]): Probe = {
-    val keyCap = StoreLayout.MAX_PUSHDOWN_KEYS
-    val hitCap = MAX_GATHER_ROWS.toInt
-    val noHits = IndexStore.Hits.of(Iterator.empty)
-    val zoneParts = zone.queryExecution.toRdd.mapPartitions { it =>
-      var cand, total = 0L
-      val keys = Array.newBuilder[(Int, Int, Long)]
-      it.foreach { r =>
-        total += 1
-        if (!r.isNullAt(3) && r.getBoolean(3)) {
-          if (cand <= keyCap) keys += StoreLayout.keyOf(r)
-          cand += 1
-        }
-      }
-      Iterator(ProbePart(cand, total, keys.result(), noHits))
-    }
-    val nZone = zoneParts.getNumPartitions
-    val parts = index.fold(zoneParts)(ix => zoneParts.union(ix.queryExecution.toRdd.mapPartitions { it =>
-      Iterator(ProbePart(0L, 0L, Array.empty, IndexStore.Hits.of(it, hitCap + 1)))
-    }))
-    var cand, total = 0L
-    var zoneLeft = nZone
-    val keys = new StoreLayout.Capped[Array[(Int, Int, Long)]](keyCap, _.length)
-    val hits = new StoreLayout.Capped[IndexStore.Hits](hitCap, _.size)
-    StoreLayout.runUntil(parts, (it: Iterator[ProbePart]) => it.next()) { (i, p) =>
-      if (i < nZone) {
-        cand += p.cand; total += p.total; zoneLeft -= 1
-        keys.add(i, p.keys)
-      } else hits.add(i, p.hits)
-      zoneLeft > 0 || hits.within
-    }
-    Probe(cand, total, keys.result.map(_.flatten), index.flatMap(_ => hits.result.map(IndexStore.Hits.concat)))
-  }
-
-  /** Execute a range query through the chosen path, deciding as [[plan]]
-    * does (past MAX_GATHER_ROWS hits the index counts read -1). Unlike
-    * calling `plan` then `rangeGather`, the zone counts and
-    * the bounded FULL-index hits come from ONE Spark job ([[probe]]),
-    * and the hits serve both the cost decision and the gather: a
-    * planned probe is 2 Spark jobs (probe, then the read), either path.
-    * The zone-scan path reads the probe's own candidate keys, which are
-    * also stored in QueryCache, so a following [[MetaIndex.lookup]] of
-    * the same range at the same store version skips its metadata scan.
-    */
-  def query(spark: SparkSession, storeDir: String, schema: StructType,
-            colName: String, lo: String, hi: String): (DataFrame, Choice) = {
+  private def decide(spark: SparkSession, storeDir: String, schema: StructType,
+                     colName: String, lo: String, hi: String): (StoreLayout.Probe, Choice) = {
     val cacheKey = MetaIndex.candidatesKey(spark, storeDir, colName, lo, hi)
     val index =
       if (IndexStore.hasFull(spark, storeDir, colName)) Some(IndexStore.hitRows(spark, storeDir, schema, colName, lo, hi))
       else None
-    val p = probe(MetaIndex.zoneHits(spark, storeDir, colName, lo, hi), index)
-    QueryCache.putCoordinates(cacheKey, p.keys)
-    def scan(estRows: Long, idxChunks: Long) =
-      (MetaIndex.lookupKeys(spark, storeDir, schema, colName, lo, hi, p.keys),
-        Choice("zone-scan", estRows, idxChunks, p.cand, p.total))
-    p.hits match {
-      case None => scan(-1L, -1L) // no FULL index, or over MAX_GATHER_ROWS hits
-      case Some(hits) =>
-        val byChunk = IndexStore.byChunk(hits)
-        if (byChunk.size <= (p.cand * GATHER_CHUNK_ADVANTAGE).toLong + 1)
-          (IndexStore.gather(spark, storeDir, schema, byChunk),
-            Choice("index-gather", hits.size.toLong, byChunk.size.toLong, p.cand, p.total))
-        else scan(hits.size.toLong, byChunk.size.toLong)
+    val p = StoreLayout.probe(Snapshots.storeDf(spark, storeDir),
+      Seq(MetaIndex.zoneHitOn(colName, Some(lo), Some(hi))), index)
+    QueryCache.putCoordinates(cacheKey, p.keys.head)
+    val (cand, total) = (p.cand.head, p.total)
+    val choice = p.hits.fold(Choice("zone-scan", -1L, -1L, cand, total)) { h =>
+      val chunks = h.byChunk.size.toLong
+      val path = if (chunks <= (cand * GATHER_CHUNK_ADVANTAGE).toLong + 1) "index-gather" else "zone-scan"
+      Choice(path, h.size.toLong, chunks, cand, total)
     }
+    (p, choice)
+  }
+
+  /** The path [[query]] takes for this range, without the read: one
+    * Spark job.
+    */
+  def plan(spark: SparkSession, storeDir: String, schema: StructType,
+           colName: String, lo: String, hi: String): Choice =
+    decide(spark, storeDir, schema, colName, lo, hi)._2
+
+  /** Execute a range query through the path [[plan]] chooses. The
+    * probe's hits serve both the decision and the gather, and the zone
+    * scan reads the probe's own candidate keys: a planned lookup is 2
+    * Spark jobs (probe, then the read), either path.
+    */
+  def query(spark: SparkSession, storeDir: String, schema: StructType,
+            colName: String, lo: String, hi: String): (DataFrame, Choice) = {
+    val (p, choice) = decide(spark, storeDir, schema, colName, lo, hi)
+    val df =
+      if (choice.path == "index-gather") IndexStore.gather(spark, storeDir, schema, p.hits.get.byChunk)
+      else MetaIndex.lookupKeys(spark, storeDir, schema, colName, lo, hi, p.keys.head)
+    (df, choice)
   }
 
   /** Metadata-only intersection of zone candidate sets across the
@@ -591,8 +501,9 @@ object Planner {
     * joins never touch a payload leaf).
     */
   def candidatesAnd(spark: SparkSession, storeDir: String, preds: Seq[Pred]): DataFrame =
-    MetaIndex.candidateKeysAnd(spark, storeDir,
-      preds.map(p => MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))))
+    MetaIndex.candidateKeysAnd(spark, storeDir, preds.map(zoneHit))
+
+  private def zoneHit(p: Pred): Column = MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))
 
   /** Plan an AND-of-range-predicates query: intersected zone chunk
     * count plus, per predicate, the single-column candidate count —
@@ -606,32 +517,29 @@ object Planner {
   }
 
   /** Execute an AND-of-range-predicates query over the encoded store:
-    * intersect zone candidates across columns, refine with one FULL
-    * index when present (index rows restricted to surviving chunks →
-    * positional gather), and exact-filter every predicate on the
-    * decoded rows. Falls back to a candidate-chunk scan when the
-    * refinement names too many rows for a gather.
+    * ONE probe job takes the chunks passing every predicate's zone hit
+    * and the hits of the first predicate with a FULL index; the hits
+    * inside those chunks are gathered by position, and every predicate
+    * is exact-filtered on the decoded rows. Falls back to a
+    * candidate-chunk scan when there is no index, or the chunks or the
+    * hits are too many for pushed keys or a gather. One Spark job
+    * before the read.
     */
   def queryAnd(spark: SparkSession, storeDir: String, schema: StructType,
                preds: Seq[Pred]): DataFrame = {
     require(preds.nonEmpty, "queryAnd needs at least one predicate")
     val exactAll = preds.map(p => MetaIndex.exactRange(schema, p.colName, p.lo, p.hi)).reduce(_ && _)
-    val cand = candidatesAnd(spark, storeDir, preds)
-    val keys = StoreLayout.pushableKeys(cand)
-    def scanCandidates = TableCodec.decode(
-      StoreLayout.readChunks(spark, storeDir, cand, keys, TableCodec.encodedNames(schema)),
-      schema).filter(exactAll)
-
-    preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName)) match {
-      case Some(ip) if keys.isDefined =>
-        val keySet = keys.get.toSet
-        // the index hits inside surviving chunks, bounded in ONE job
-        IndexStore.hitsAtMost(IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi),
-          MAX_GATHER_ROWS.toInt)(r => keySet.contains(StoreLayout.keyOf(r))) match {
-          case Some(hits) => IndexStore.gather(spark, storeDir, schema, IndexStore.byChunk(hits)).filter(exactAll)
-          case None => scanCandidates
-        }
-      case _ => scanCandidates
+    val index = preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName))
+      .map(ip => IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi))
+    val p = StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(preds.map(zoneHit).reduce(_ && _)), index,
+      needCounts = false)
+    (p.keys.head, p.hits) match {
+      case (Some(keys), Some(hits)) =>
+        val keySet = keys.toSet
+        IndexStore.gather(spark, storeDir, schema, hits.byChunk.filter { case (c, _) => keySet(c) }).filter(exactAll)
+      case (keys, _) =>
+        TableCodec.decode(StoreLayout.readChunks(spark, storeDir, candidatesAnd(spark, storeDir, preds), keys,
+          TableCodec.encodedNames(schema)), schema).filter(exactAll)
     }
   }
 }

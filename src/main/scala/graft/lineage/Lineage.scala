@@ -373,23 +373,14 @@ object Lineage {
     // is TRUE (not NULL), so both the count here and the keep-filter
     // below coalesce NULL→false.
     val matched = coalesce(predicate, lit(false))
-    val hits = discoveryCounts(spark, outDir, schema, predicate, matched, "n_del")
-      .filter(col("n_del") > 0)
-      .collect()
-    if (hits.isEmpty) return 0L
-    val hitShards = hits.map(_.getInt(0)).toSeq.sorted
-    val deleted = hits.map(_.getLong(1)).sum
+    val (hitShards, deleted) = discover(spark, outDir, schema, predicate, matched)
+    if (hitShards.isEmpty) return 0L
 
     // Pass 2 (rewrite): decode ONLY the hit shards once; keep rows where
     // the predicate is not TRUE (NULL-valued predicates keep the row).
     val affected = readBlocks(spark, outDir, Some(hitShards))
-    val kept = TableCodec.decode(affected, schema, shardColName = Some(SHARD_COL))
-      .filter(not(matched))
-      // cluster rows of a shard together so re-encoded blocks are shard-pure
-      .repartition(math.max(hitShards.size, spark.sparkContext.defaultParallelism), col(SHARD_COL))
-      .sortWithinPartitions(SHARD_COL)
-    val reencoded = TableCodec.encode(kept, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
-    commitCoW(spark, outDir, hitShards.toSet, reencoded, TableCodec.encodedNames(schema))
+    rewrite(spark, outDir, schema, hitShards, chunkRows,
+      TableCodec.decode(affected, schema, shardColName = Some(SHARD_COL)).filter(not(matched)))
     deleted
   }
 
@@ -422,12 +413,8 @@ object Lineage {
       s"SET may not target identity columns ${set.keys.filter(idCols.contains)} — " +
         "delete + re-append instead (the shard is the identity hash)")
     val matched = coalesce(predicate, lit(false))
-    val hits = discoveryCounts(spark, outDir, schema, predicate, matched, "n_upd")
-      .filter(col("n_upd") > 0)
-      .collect()
-    if (hits.isEmpty) return 0L
-    val hitShards = hits.map(_.getInt(0)).toSeq.sorted
-    val updated = hits.map(_.getLong(1)).sum
+    val (hitShards, updated) = discover(spark, outDir, schema, predicate, matched)
+    if (hitShards.isEmpty) return 0L
 
     val decoded = TableCodec.decode(readBlocks(spark, outDir, Some(hitShards)), schema, shardColName = Some(SHARD_COL))
     val projected = decoded.select(
@@ -437,10 +424,7 @@ object Lineage {
           case None => col(n)
         }
       } :+ col(SHARD_COL)): _*)
-      .repartition(math.max(hitShards.size, spark.sparkContext.defaultParallelism), col(SHARD_COL))
-      .sortWithinPartitions(SHARD_COL)
-    val reencoded = TableCodec.encode(projected, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
-    commitCoW(spark, outDir, hitShards.toSet, reencoded, TableCodec.encodedNames(schema))
+    rewrite(spark, outDir, schema, hitShards, chunkRows, projected)
     updated
   }
 
@@ -502,13 +486,24 @@ object Lineage {
     lastUpsertJoinPlan = kept.queryExecution.executedPlan.toString
     val merged = kept.select((schema.fieldNames.map(col) :+ col(SHARD_COL)): _*)
       .unionByName(sharded.select((schema.fieldNames.map(col) :+ col(SHARD_COL)): _*))
-      .repartition(math.max(hitShards.size, spark.sparkContext.defaultParallelism), col(SHARD_COL))
-      .sortWithinPartitions(SHARD_COL)
-    val reencoded = TableCodec.encode(merged, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
-    commitCoW(spark, outDir, hitShards.toSet, reencoded, TableCodec.encodedNames(schema))
+    rewrite(spark, outDir, schema, hitShards, chunkRows, merged)
     val afterRows = metaRows()
     val replaced = oldRows + newCount - afterRows
     (replaced, newCount - replaced)
+  }
+
+  /** CoW rewrite tail: re-encode `rows` (schema columns plus SHARD_COL,
+    * only the `hitShards`' rows) with each shard's rows clustered
+    * together, so re-encoded blocks are shard-pure, and commit them as
+    * the replacement of those shards ([[commitCoW]]).
+    */
+  private def rewrite(spark: SparkSession, outDir: String, schema: org.apache.spark.sql.types.StructType,
+                      hitShards: Seq[Int], chunkRows: Int, rows: DataFrame): Unit = {
+    val clustered = rows
+      .repartition(math.max(hitShards.size, spark.sparkContext.defaultParallelism), col(SHARD_COL))
+      .sortWithinPartitions(SHARD_COL)
+    val reencoded = TableCodec.encode(clustered, chunkRows = chunkRows, shardCol = Some(SHARD_COL))
+    commitCoW(spark, outDir, hitShards.toSet, reencoded, TableCodec.encodedNames(schema))
   }
 
   /** Commit a copy-on-write rewrite of `hitShards` with READER-SNAPSHOT
@@ -543,27 +538,30 @@ object Lineage {
     ()
   }
 
-  /** Shared CoW discovery pass: per-shard match counts of `matched`
-    * (= predicate with NULL→false), decoding ONLY zone-candidate
-    * chunks and ONLY the predicate's own columns. Sound because a
-    * non-candidate chunk cannot contain a predicate-TRUE row (zone
-    * pruning is conservative) and the count needs no other columns.
+  /** Shared CoW discovery pass: the shards holding rows where `matched`
+    * (= predicate with NULL→false) is TRUE, sorted, and how many such
+    * rows there are, decoding ONLY zone-candidate chunks and ONLY the
+    * predicate's own columns. Sound because a non-candidate chunk
+    * cannot contain a predicate-TRUE row (zone pruning is conservative)
+    * and the count needs no other columns.
     */
-  private def discoveryCounts(
+  private def discover(
       spark: SparkSession,
       outDir: String,
       schema: org.apache.spark.sql.types.StructType,
       predicate: org.apache.spark.sql.Column,
-      matched: org.apache.spark.sql.Column,
-      alias: String): DataFrame = {
+      matched: org.apache.spark.sql.Column): (Seq[Int], Long) = {
     val passSchema = graft.encode.PredicatePrune.referencedColumns(spark, schema, predicate)
       .map(ns => org.apache.spark.sql.types.StructType(ns.map(schema(_))))
       .getOrElse(schema)
     val blocks = graft.encode.PredicatePrune.candidateBlocks(
       spark, outDir, schema, predicate, TableCodec.encodedNames(passSchema))
-    TableCodec.decode(blocks, passSchema, shardColName = Some(SHARD_COL))
+    val hits = TableCodec.decode(blocks, passSchema, shardColName = Some(SHARD_COL))
       .groupBy(col(SHARD_COL))
-      .agg(sum(matched.cast("long")).as(alias))
+      .agg(sum(matched.cast("long")).as("n"))
+      .filter(col("n") > 0)
+      .collect()
+    (hits.map(_.getInt(0)).toSeq.sorted, hits.map(_.getLong(1)).sum)
   }
 
   /** Refresh the derived per-shard manifest stats after CoW mutations

@@ -119,6 +119,25 @@ class StoreReadSpec extends SparkTestBase {
     assert(st.nonNull("d") == 2600L)
   }
 
+  test("minMaxAll bounds each column's fallback keys on its own: one past the cap, one with a handful") {
+    // `d` is unbounded in every chunk, `f` (NaN on ids 0..9) in five
+    val df = wide.select(col("id"), col("d"),
+      when(col("id") < 10, lit(Double.NaN)).otherwise(col("id") * 0.25).as("f"))
+    val dir = writeStore(df, chunkRows = 2)
+    val store = Snapshots.storeDf(spark, dir)
+    def unbounded(c: String) = store.filter(col(s"g_$c.minKey") === "" || col(s"g_$c.maxKey") === "").count()
+    assert(unbounded("d") > StoreLayout.MAX_PUSHDOWN_KEYS && unbounded("f") == 5L)
+    var mm: MetaAgg.MinMaxAll = null
+    val n = jobs("minmax-split") { mm = MetaAgg.minMaxAll(spark, dir, df.schema, Seq("d", "f")) }
+    // the aggregate, ONE probe for both columns' keys, two one-column decodes
+    assert(n <= 8, s"minMaxAll(d, f) ran $n jobs, pinned at most 8")
+    val raw = df.agg(min(when(!isnan(col("d")), col("d"))), max(when(!isnan(col("d")), col("d"))),
+      min(when(!isnan(col("f")), col("f"))), max(when(!isnan(col("f")), col("f")))).head()
+    assert(mm.nRows == 2600L)
+    assert(mm.byCol("d") == (Some(raw.getDouble(0)), Some(raw.getDouble(1))), mm.byCol("d").toString)
+    assert(mm.byCol("f") == (Some(raw.getDouble(2)), Some(raw.getDouble(3))), mm.byCol("f").toString)
+  }
+
   test("over-cap deleteWhere equals the raw filter") {
     val dir = copyStore(wideDir)
     val pred = col("d") > 1000.0 // NaN sorts above every number: NaN rows match too
@@ -173,6 +192,13 @@ class StoreReadSpec extends SparkTestBase {
     n
   }
 
+  /** Spark jobs per probe entry point. Each pin only ever moves down:
+    * every store-read decision is one probe job, never incremental takes.
+    */
+  private val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "plan" -> 1, "lookup.cold" -> 3, "lookup.warm" -> 1,
+    "queryAnd" -> 3, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 2,
+    "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 6)
+
   test("probe entry points run the pinned number of Spark jobs") {
     val schema = corpus.schema
     val repo = corpus.select("repo").orderBy("repo").head().getString(0)
@@ -182,6 +208,7 @@ class StoreReadSpec extends SparkTestBase {
     val counts = scala.collection.mutable.LinkedHashMap[String, Int]()
     counts("query.gather") = jobs("query-gather")(gather()._1.collect())
     counts("query.scan") = jobs("query-scan")(scan()._1.collect())
+    counts("plan") = jobs("plan")(Planner.plan(spark, corpusDir, schema, "row_id", "100", "299"))
     QueryCache.clear()
     counts("lookup.cold") = jobs("lookup-cold")(
       MetaIndex.lookup(spark, corpusDir, schema, "repo", repo, repo).collect())
@@ -205,11 +232,6 @@ class StoreReadSpec extends SparkTestBase {
 
     counts("wide.minMaxAll") = jobs("wide-minmax")(
       MetaAgg.minMaxAll(spark, wideDir, wide.schema, Seq("d", "s", "big")))
-    // each pin only ever moves down: Planner.query's probe is one job,
-    // and every bounded key collect runs one job, not incremental takes
-    val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "lookup.cold" -> 3, "lookup.warm" -> 1,
-      "queryAnd" -> 4, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 2,
-      "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 8)
     assert(counts.toMap == pinned)
   }
 
@@ -246,6 +268,7 @@ class StoreReadSpec extends SparkTestBase {
                          path: String, exact: Column): Unit = {
     val (got, choice) = Planner.query(spark, dir, raw.schema, c, lo, hi)
     assert(choice == expectedChoice(dir, raw.schema, c, lo, hi), s"$c in [$lo, $hi]")
+    assert(Planner.plan(spark, dir, raw.schema, c, lo, hi) == choice, s"plan($c in [$lo, $hi])")
     assert(choice.path == path, s"$c in [$lo, $hi]: $choice")
     assertSameRows(got, raw.filter(exact), s"query($c in [$lo, $hi])")
   }
@@ -334,15 +357,48 @@ class StoreReadSpec extends SparkTestBase {
     }
   }
 
-  test("collectAtMost: rows in partition order up to the cap, None past it, failures rethrown") {
-    val df = spark.range(0, 1000, 1, 8).toDF("id")
-    def ids(cap: Int) = StoreLayout.collectAtMost(df, cap)(_.map(_.getLong(0))).map(_.toSeq)
-    assert(ids(1000) == Some(0L until 1000L))
-    assert(ids(999).isEmpty)
-    assert(jobs("collectAtMost")(assert(ids(10).isEmpty)) == 1)
-    val err = intercept[Exception](StoreLayout.collectAtMost(
-      spark.range(0, 10, 1, 2).select(raise_error(lit("boom"))), 100)(_.map(_ => 0)))
-    assert(err.getMessage.contains("boom"), err.getMessage)
+  /** Chunk-key rows (shard = chunkId = id, partId = 0) over 8 partitions. */
+  private def chunkRows(n: Long): DataFrame = spark.range(0, n, 1, 8)
+    .select(col("id").cast("int").as("shard"), lit(0).as("partId"), col("id").as("chunkId"))
+
+  /** FULL-index-shaped hit rows, 100 positions a chunk, over 8 partitions. */
+  private def hitRows(n: Long): DataFrame = spark.range(0, n, 1, 8)
+    .select(lit(1).as("shard"), lit(0).as("partId"), (col("id") / 100).cast("long").as("chunkId"),
+      (col("id") % 100).cast("int").as("pos"))
+
+  private def keysOf(ids: Seq[Long]) = ids.map(i => (i.toInt, 0, i))
+
+  test("probe: keys and hits in partition order up to their caps, None past them, one job, failures rethrown") {
+    val cap = StoreLayout.MAX_PUSHDOWN_KEYS.toLong
+    val few = col("chunkId") < 10
+    val at = StoreLayout.probe(chunkRows(cap), Seq(lit(true), few))
+    assert(at.keys == Seq(Some(keysOf(0L until cap)), Some(keysOf(0L until 10L))))
+    assert(at.cand == Seq(cap, 10L) && at.total == cap && at.hits.isEmpty)
+    // one past the cap on one column: the other keeps its keys, the counts stay exact
+    val past = StoreLayout.probe(chunkRows(cap + 1), Seq(lit(true), few))
+    assert(past.keys == Seq(None, Some(keysOf(0L until 10L))))
+    assert(past.cand == Seq(cap + 1, 10L) && past.total == cap + 1)
+    // a NULL hit is a miss
+    assert(StoreLayout.probe(chunkRows(20), Seq(when(few, lit(true)))).keys == Seq(Some(keysOf(0L until 10L))))
+    // one job, also when it stops early
+    assert(jobs("probe")(assert(StoreLayout.probe(chunkRows(5000), Seq(lit(true)), needCounts = false)
+      .keys == Seq(None))) == 1)
+
+    val gcap = StoreLayout.MAX_GATHER_ROWS
+    def hitSeq(h: StoreLayout.Hits) = (0 until h.size).map(i => (h.shard(i), h.partId(i), h.chunkId(i), h.pos(i)))
+    val hits = StoreLayout.probe(chunkRows(10), Seq(lit(true)), Some(hitRows(gcap))).hits
+    assert(hits.map(hitSeq) == Some((0L until gcap).map(i => (1, 0, i / 100, (i % 100).toInt))))
+    assert(StoreLayout.probe(chunkRows(10), Seq(lit(true)), Some(hitRows(gcap + 1))).hits.isEmpty)
+    assert(jobs("probe-hits")(assert(StoreLayout.probe(chunkRows(10), Seq(lit(true)), Some(hitRows(gcap + 1)))
+      .hits.isEmpty)) == 1)
+
+    // a failing task is rethrown, on either side
+    val boom = raise_error(lit("boom"))
+    val errs = Seq(
+      intercept[Exception](StoreLayout.probe(chunkRows(10), Seq(boom.isNull))),
+      intercept[Exception](StoreLayout.probe(chunkRows(10), Seq(lit(true)),
+        Some(hitRows(10).withColumn("pos", boom.cast("int"))), needCounts = false)))
+    errs.foreach(e => assert(e.getMessage.contains("boom"), e.getMessage))
   }
 
   test("Planner.query files its candidate keys where MetaIndex.lookup finds them") {
