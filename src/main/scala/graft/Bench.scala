@@ -198,12 +198,6 @@ object Bench {
     // misattributed build cost (round-2 judge finding #5)
     val (_, storeBuildSec) = time(ops.Queries.prebuildStores(spark, sfDir))
 
-    // QUALITY-HARNESS queries: their cost is a fixture-pinned O(n²)
-    // brute-force ground truth + multi-stage LSH verification — a
-    // measurement apparatus (correctness-gated every round in Verify),
-    // not an engine performance surface. Timed separately so the
-    // headline total tracks the ENGINE round over round.
-    val harness = Set("dedup_minhash_recall", "dedup_simhash_recall")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     val results = queries.map { case (name, fn) =>
       val (_, sec) = time {
@@ -216,7 +210,12 @@ object Bench {
     val corpus = corpusBench(spark, benchRows, math.max(4, cpus.toInt))
     val dup = dupCorpusBench(spark, benchRows, math.max(4, cpus.toInt))
 
-    val (harnessResults, engineResults) = results.partition(r => harness(r._1))
+    // QUALITY-HARNESS queries (`Queries.harness`): their cost is a
+    // fixture-pinned O(n²) brute-force ground truth + multi-stage LSH
+    // verification — a measurement apparatus (correctness-gated every round in Verify),
+    // not an engine performance surface. Timed separately so the
+    // headline total tracks the ENGINE round over round.
+    val (harnessResults, engineResults) = results.partition(r => ops.Queries.harness(r._1))
     val qs = engineResults.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val extra = (corpus ++ dup + ("store_build_sec" -> storeBuildSec)
         + ("harness_sec" -> harnessResults.map(_._2).sum))

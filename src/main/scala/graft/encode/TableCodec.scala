@@ -346,19 +346,13 @@ object TableCodec {
 
   def decodeColumn(col: EncodedCol): ColVec = ChunkCodec.decode(col.payload)
 
-  /** Column getter producing the Catalyst-internal value for `dt`.
-    * Bound once per (vec, column) so the per-row path is one virtual
-    * call, not a type dispatch.
+  /** Column getter producing the Catalyst-internal value for `dt`, for
+    * the types [[internalWriter]] does not write unboxed. Bound once per
+    * (vec, column) so the per-row path is one virtual call, not a type
+    * dispatch.
     */
   private def internalGetter(vec: ColVec, dt: DataType): Int => Any = (vec, dt) match {
-    case (v: LongVec, LongType | TimestampType | TimestampNTZType) => i => v.values(i)
-    case (v: LongVec, IntegerType | DateType) => i => v.values(i).toInt
-    case (v: LongVec, ShortType) => i => v.values(i).toShort
-    case (v: LongVec, ByteType) => i => v.values(i).toByte
-    case (v: LongVec, BooleanType) => i => v.values(i) != 0L
     case (v: LongVec, d: DecimalType) => i => Decimal.createUnsafe(v.values(i), d.precision, d.scale)
-    case (v: DoubleVec, DoubleType) => i => v.values(i)
-    case (v: DoubleVec, FloatType) => i => v.values(i).toFloat
     case (v: BinVec, StringType) => i => UTF8String.fromBytes(v.values(i))
     case (v: BinVec, BinaryType) => i => v.values(i)
     case (v: BinVec, d: DecimalType) =>

@@ -74,7 +74,7 @@ object DictFilter {
         .agg(count(lit(1)), coalesce(sum(size(fcol("pos"))), lit(0L))).head()
       val nChunks = statsRow.getLong(0)
       val totalPos = statsRow.getLong(1)
-      if (nChunks <= StoreLayout.MAX_PUSHDOWN_KEYS && totalPos <= Planner.MAX_GATHER_ROWS) {
+      if (nChunks <= StoreLayout.MAX_PUSHDOWN_KEYS && totalPos <= StoreLayout.MAX_GATHER_ROWS) {
         // selective: gather just the matching chunks (pushed keys)
         val byChunk = posDs.collect()
           .map(p => (p.shard, p.partId, p.chunkId) -> p.pos).toMap

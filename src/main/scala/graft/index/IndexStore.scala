@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * StoreLayoutSpec); the build itself is one shuffle (range partition
   * of narrow (key, pos) rows); probes read O(log) row groups of the
   * index + O(selected) chunks of the store. Gathered positions flow
-  * through a broadcast (bounded by Planner.MAX_GATHER_ROWS — beyond
+  * through a broadcast (bounded by StoreLayout.MAX_GATHER_ROWS — beyond
   * that a scan wins anyway, see Planner).
   */
 object IndexStore {
@@ -434,9 +434,6 @@ object IndexStore {
   * surviving chunks to exact positions.
   */
 object Planner {
-
-  /** See [[StoreLayout.MAX_GATHER_ROWS]]. */
-  val MAX_GATHER_ROWS: Long = StoreLayout.MAX_GATHER_ROWS
 
   /** A gather must touch meaningfully fewer chunks than the zone scan
     * to pay for its index probe (reference keeps the same shaped

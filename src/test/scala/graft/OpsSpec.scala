@@ -307,12 +307,49 @@ class OpsSpec extends SparkTestBase {
     assert(q(spark, dir.toString).collect().toSeq == q(spark, sf).collect().toSeq)
   }
 
+  test("concurrent prebuildStores calls build each store once; a failed build is not kept") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-prebuild2")
+    def copyIn(name: String): Unit =
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, name), dir.resolve(name))
+    copyIn("documents.parquet")
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try {
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val calls = Seq.fill(2)(scala.concurrent.Future {
+        go.await(); scala.util.Try(Queries.prebuildStores(spark, dir.toString))
+      })
+      go.countDown()
+      calls.map(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf)).foreach { r =>
+        val cause = r.failed.get.getCause
+        assert(cause.getMessage.contains("embeddings"), cause.getMessage)
+      }
+      copyIn("embeddings.parquet")
+      Queries.prebuildStores(spark, dir.toString)
+    } finally System.setErr(stderr)
+    val builds = err.toString.linesIterator.filter(_.startsWith("[build] ")).map(_.split(' ')(1)).toSeq
+    assert(builds.sorted == Seq("ann", "annaxis", "doc", "ivf", "ivfseed"), builds)
+    val stage = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/_graft_stage")
+    val docDirs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(stage)
+      .map(_.getPath.getName).filter(_.startsWith(s"doc-${Integer.toHexString(dir.toString.hashCode)}-"))
+    assert(docDirs.length == 1, docDirs.mkString(", "))
+    val q = SparkEntry.queries("store_point_lookup")
+    assert(q(spark, dir.toString).collect().toSeq == q(spark, sf).collect().toSeq)
+  }
+
   test("entry() returns the roundtrip proof with rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
   test("oracle keys are a subset of query keys and share column names") {
     assert(Queries.oracle.keySet.subsetOf(Queries.all.keySet))
+    assert(Queries.all.size == 78 && Queries.oracle.size == 71)
+    assert(Queries.all.keySet -- Queries.oracle.keySet == Set("corpus_codec_plans", "dedup_minhash",
+      "dedup_ngram", "dedup_simhash", "sim_ann_store_topk", "sim_ivf_store_topk", "sim_lsh_buckets"))
+    assert(Queries.harness == Set("dedup_minhash_recall", "dedup_simhash_recall"))
   }
 
   test("broadcast join plan actually broadcasts the dims") {

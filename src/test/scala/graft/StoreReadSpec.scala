@@ -258,7 +258,7 @@ class StoreReadSpec extends SparkTestBase {
     val idx = IndexStore.readFullRange(spark, dir, schema, c, lo, hi)
     val rows = idx.count()
     val chunks = idx.select("shard", "partId", "chunkId").distinct().count()
-    if (rows > Planner.MAX_GATHER_ROWS) Planner.Choice("zone-scan", -1L, -1L, cand, total)
+    if (rows > StoreLayout.MAX_GATHER_ROWS) Planner.Choice("zone-scan", -1L, -1L, cand, total)
     else if (chunks <= (cand * Planner.GATHER_CHUNK_ADVANTAGE).toLong + 1)
       Planner.Choice("index-gather", rows, chunks, cand, total)
     else Planner.Choice("zone-scan", rows, chunks, cand, total)
@@ -294,13 +294,13 @@ class StoreReadSpec extends SparkTestBase {
   }
 
   test("Planner.query over the caps: FULL-index hits past MAX_GATHER_ROWS") {
-    val n = Planner.MAX_GATHER_ROWS + 600
+    val n = StoreLayout.MAX_GATHER_ROWS + 600
     val big = spark.range(0, n, 1, 4).select(col("id"), (col("id") % 3).as("k")).cache()
     val dir = writeStore(big, chunkRows = 8192)
     IndexStore.createFull(spark, dir, big.schema, "id")
     checkQuery(dir, big, "id", "0", s"${n - 1}", "zone-scan", col("id") >= 0L)
-    checkQuery(dir, big, "id", "0", s"${Planner.MAX_GATHER_ROWS - 1}", "zone-scan",
-      col("id") < Planner.MAX_GATHER_ROWS) // within the row cap, but the index names most chunks
+    checkQuery(dir, big, "id", "0", s"${StoreLayout.MAX_GATHER_ROWS - 1}", "zone-scan",
+      col("id") < StoreLayout.MAX_GATHER_ROWS) // within the row cap, but the index names most chunks
     checkQuery(dir, big, "id", "5000", "5099", "index-gather", col("id").between(5000L, 5099L))
     big.unpersist()
   }
@@ -334,7 +334,7 @@ class StoreReadSpec extends SparkTestBase {
   }
 
   test("Planner.query far past MAX_GATHER_ROWS stops its probe: bounded bytes reach the driver") {
-    val cap = Planner.MAX_GATHER_ROWS
+    val cap = StoreLayout.MAX_GATHER_ROWS
     val n = 5 * cap
     val big = spark.range(0, n, 1, 4).toDF("id")
     val dir = writeStore(big, chunkRows = 8192)
