@@ -61,52 +61,4 @@ object CodecRegistry {
   }
 
   def isPluginId(id: Byte): Boolean = id >= USER_ID_MIN && id <= USER_ID_MAX
-
-  /** `register_filter`-style convenience (python-blosc2's filter
-    * callables are plain per-block byte transforms): wrap a forward /
-    * inverse VALUE transform as a full plugin kernel. The transform
-    * runs per cell ahead of the entropy stage (the reference's
-    * prefilter position); decode applies the inverse after it (the
-    * postfilter position). The wrapped kernel competes in the
-    * Selector's cost model like any plugin.
-    *
-    * `forward` MUST be total over arbitrary byte arrays (the Selector
-    * validates plans only on a SAMPLE — a transform that throws on
-    * full-chunk values it never sampled fails the encode job). Gate
-    * domain-specific transforms with `offerIf` instead of relying on
-    * forward to reject.
-    */
-  def registerFilter(id: Byte, filterName: String,
-                     forward: Array[Byte] => Array[Byte],
-                     inverse: Array[Byte] => Array[Byte],
-                     offerIf: BinVec => Boolean = _ => true,
-                     costNsPerByte: Double = 8.0): Unit =
-    registerBin(id, new BinKernel {
-      def name: String = filterName
-      def encode(vec: BinVec, w: Bytes.Writer): Unit = {
-        var i = 0
-        while (i < vec.n) {
-          val v = vec.values(i)
-          if (v == null) w.putVarInt(0)
-          else {
-            val t = forward(v)
-            w.putVarInt(t.length + 1)
-            w.putBytes(t)
-          }
-          i += 1
-        }
-      }
-      def decode(r: Bytes.Reader, n: Int, validity: Array[Boolean]): Array[Array[Byte]] = {
-        val out = new Array[Array[Byte]](n)
-        var i = 0
-        while (i < n) {
-          val len = r.getVarInt()
-          if (len > 0) out(i) = inverse(r.getBytes(len - 1))
-          i += 1
-        }
-        out
-      }
-      override def offer(vec: BinVec): Boolean = offerIf(vec)
-      override def nsPerByte: Double = costNsPerByte
-    })
 }

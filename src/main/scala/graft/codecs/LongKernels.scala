@@ -106,7 +106,7 @@ object LongKernels {
         var i = 0
         while (i < n) {
           val v = r.getSVarLong()
-          val run = r.getVarLong().toInt
+          val run = r.getVarInt()
           java.util.Arrays.fill(out, i, i + run, v)
           i += run
         }

@@ -92,7 +92,14 @@ object Bytes {
       out
     }
 
-    def getVarInt(): Int = getVarLong().toInt
+    /** A varint `putVarInt` wrote: a value with a bit set above bit 31
+      * is corrupt input and throws, never truncated.
+      */
+    def getVarInt(): Int = {
+      val v = getVarLong()
+      if ((v >>> 32) != 0L) throw new IllegalArgumentException(s"varint $v before byte $pos overflows 32 bits")
+      v.toInt
+    }
 
     def getSVarLong(): Long = unzigzag(getVarLong())
 

@@ -44,13 +44,6 @@ object MetaAgg {
     if (n.isNullAt(0)) 0L else n.getLong(0)
   }
 
-  /** Exact COUNT(col) — non-null count — from chunk metadata alone
-    * (per-chunk `nNulls` is recorded for every builder type, so this
-    * never decodes and never falls back).
-    */
-  def countNonNull(spark: SparkSession, storeDir: String, colName: String): Long =
-    stats(spark, storeDir, null, Nil, Seq(colName)).nonNull(colName)
-
   // ------------------------------------------------------------ helpers
 
   private def fld(c: String): String = StoreLayout.fieldName(c)
@@ -114,8 +107,9 @@ object MetaAgg {
     * total row count, exact sums for `sumCols` (sumLong semantics per
     * column, incl. the decode fallback — fallback chunk keys for ALL
     * columns are collected in one additional job when any exist),
-    * non-null counts for `nonNullCols`. `schema` may be null when
-    * `sumCols` is empty (non-null counts are type-agnostic).
+    * non-null counts for `nonNullCols` (per-chunk `nNulls`: never a
+    * decode). `schema` may be null when `sumCols` is empty (non-null
+    * counts are type-agnostic).
     */
   final case class StoreStats(nRows: Long, sums: Map[String, Option[Long]],
                               nonNull: Map[String, Long])

@@ -30,46 +30,6 @@ import org.apache.spark.sql.types._
   */
 object MetaIndex {
 
-  /** One row per (chunk, column) with zone bounds — payload/sha leaves
-    * are never in the scan's ReadSchema (asserted in MetaIndexSpec).
-    */
-  def zoneMeta(spark: SparkSession, storeDir: String): DataFrame = {
-    val df = Snapshots.storeDf(spark, storeDir)
-    val fields = StoreLayout.storeColFields(df.schema)
-    df.select(col("shard"), col("partId"), col("chunkId"), col("nRows"),
-        explode(array(fields.map(f => struct(
-          col(s"$f.name").as("name"), col(s"$f.dt").as("dt"),
-          col(s"$f.minKey").as("minKey"), col(s"$f.maxKey").as("maxKey"))): _*)).as("c"))
-      .select(col("shard"), col("partId"), col("chunkId"), col("nRows"),
-        col("c.name").as("name"), col("c.dt").as("dt"),
-        col("c.minKey").as("minKey"), col("c.maxKey").as("maxKey"))
-  }
-
-  /** Zone metadata of ONE column — the common prune pass: four tiny
-    * leaf columns of one struct in the scan, nothing else.
-    */
-  def zoneMetaFor(spark: SparkSession, storeDir: String, colName: String): DataFrame = {
-    val f = StoreLayout.fieldName(colName)
-    Snapshots.storeDf(spark, storeDir)
-      .select(col("shard"), col("partId"), col("chunkId"), col("nRows"),
-        col(s"$f.name").as("name"), col(s"$f.dt").as("dt"),
-        col(s"$f.minKey").as("minKey"), col(s"$f.maxKey").as("maxKey"))
-  }
-
-  /** zoneMetaFor plus the per-chunk summary leaves (null count, exact
-    * sum, bounded value histogram) — MetaAgg's scan. Still metadata
-    * only: payload/sha never enter the ReadSchema.
-    */
-  def summaryMetaFor(spark: SparkSession, storeDir: String, colName: String): DataFrame = {
-    val f = StoreLayout.fieldName(colName)
-    Snapshots.storeDf(spark, storeDir)
-      .select(col("shard"), col("partId"), col("chunkId"), col("nRows"),
-        col(s"$f.name").as("name"), col(s"$f.dt").as("dt"),
-        col(s"$f.minKey").as("minKey"), col(s"$f.maxKey").as("maxKey"),
-        col(s"$f.nNulls").as("nNulls"), col(s"$f.sumKey").as("sumKey"),
-        col(s"$f.hist").as("hist"))
-  }
-
   /** Column types whose zone keys compare numerically. */
   private val numericDts = Seq(
     "bigint", "int", "smallint", "tinyint", "boolean",
@@ -141,15 +101,6 @@ object MetaIndex {
     QueryCache.coordinates(candidatesKey(spark, storeDir, colName, lo, hi))(
       StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(zoneHitOn(colName, Some(lo), Some(hi))),
         needCounts = false).keys.head)
-
-  /** Read only the surviving blocks (StoreLayout.readChunks: pushed
-    * keys, or a left-semi join when too many survive). `names`
-    * restricts the columns read (null = all).
-    */
-  def readCandidates(spark: SparkSession, storeDir: String, colName: String,
-                     lo: String, hi: String, names: Seq[String] = null): Dataset[EncodedBlock] =
-    StoreLayout.readChunks(spark, storeDir, candidateKeys(spark, storeDir, colName, lo, hi),
-      cachedCandidates(spark, storeDir, colName, lo, hi), names)
 
   /** The encoded (flat) view of `schema`: struct columns become dotted
     * leaves — the namespace predicates, indexes, and store reads

@@ -30,8 +30,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * restricted to the hit shards (dataFiles(shards=…)).
   *
   * Stores without a `_snapshots/` directory (pure-append stores, test
-  * fixtures, streaming `batch=` stores) read the directory itself —
-  * zero overhead until the first mutation enables versioning.
+  * fixtures) read the directory itself — zero overhead until the first
+  * mutation enables versioning.
   */
 object Snapshots {
 

@@ -51,18 +51,6 @@ object StoreLayout {
     case StructField(n, st: StructType, _, _) if st.fieldNames.toSet == COL_FIELDS.toSet => n
   }.toSeq
 
-  /** True if the store was written by a batch-partitioned streaming
-    * sink (`batch=<id>` dirs): (shard, partId, chunkId) is then NOT
-    * unique and keyed operations (indexes, gathers, slices) must refuse
-    * it — see StreamingEncode.compact.
-    */
-  def hasBatchPartitions(schema: StructType): Boolean = schema.fieldNames.contains("batch")
-
-  def requireNoBatch(schema: StructType, op: String): Unit =
-    require(!hasBatchPartitions(schema),
-      s"$op addresses chunks by (shard, partId, chunkId), which is not unique across " +
-        "streaming batch= partitions — run StreamingEncode.compact first")
-
   /** Pivot in-flight blocks to the persisted layout. `names` must be
     * the encoded columns in block order (= the encoded DataFrame's
     * field order).
@@ -232,6 +220,12 @@ object StoreLayout {
   private final case class ProbePart(cand: Array[Long], total: Long, keys: Array[Array[(Int, Int, Long)]],
                                      hits: Hits)
 
+  /** The rows a [[probe]] scans: the chunk keys of `meta`, then one
+    * boolean per `hit` column.
+    */
+  private[graft] def probeRows(meta: DataFrame, hit: Seq[Column]): DataFrame =
+    meta.select(Seq(col("shard"), col("partId"), col("chunkId")) ++ hit: _*)
+
   /** Every bounded metadata question a store read asks, in ONE Spark
     * job ([[runUntil]]) with no exchange: the rows of `meta` (chunk keys
     * `shard`, `partId`, `chunkId`) are tested against each `hit` column
@@ -251,7 +245,7 @@ object StoreLayout {
                            needCounts: Boolean = true): Probe = {
     val (k, keyCap, hitCap) = (hit.size, MAX_PUSHDOWN_KEYS, MAX_GATHER_ROWS.toInt)
     val noHits = Hits.of(Iterator.empty)
-    val zone = meta.select(Seq(col("shard"), col("partId"), col("chunkId")) ++ hit: _*)
+    val zone = probeRows(meta, hit)
       .queryExecution.toRdd.mapPartitions { it =>
         val cand = new Array[Long](k)
         var total = 0L
@@ -297,28 +291,16 @@ object StoreLayout {
     assemble(filtered, fieldsOf(df.schema, names))
   }
 
-  /** Blocks of a PINNED snapshot version — a reader holding this
-    * Dataset keeps seeing that version's files regardless of concurrent
-    * CoW commits (until a vacuum reaps them). See Snapshots.
-    */
-  def readBlocksAt(spark: SparkSession, storeDir: String, version: Long): Dataset[EncodedBlock] = {
-    val df = Snapshots.storeDfAt(spark, storeDir, version)
-    assemble(df, storeColFields(df.schema))
-  }
-
   /** Read the chunks candidate frame `cand` names, carrying only
     * `names`' columns (null = all): `keys` (from a [[probe]])
     * pushed into the parquet scan when there are at most
     * MAX_PUSHDOWN_KEYS of them, else — `None` or more keys — a
     * left-semi join of the store on `cand` (the read touches most of
-    * the store anyway). `cand` is only built for the join. A read
-    * given `keys` addresses chunks by key, so it refuses a
-    * batch-partitioned store ([[requireNoBatch]]).
+    * the store anyway). `cand` is only built for the join.
     */
   def readChunks(spark: SparkSession, storeDir: String, cand: => DataFrame,
                  keys: Option[Seq[(Int, Int, Long)]], names: Seq[String]): Dataset[EncodedBlock] = {
     val df = Snapshots.storeDf(spark, storeDir)
-    if (keys.isDefined) requireNoBatch(df.schema, "a chunk-key read")
     keys match {
       case Some(ks) if ks.size <= MAX_PUSHDOWN_KEYS => assemble(pushKeys(df, ks), fieldsOf(df.schema, names))
       case _ =>
@@ -371,7 +353,6 @@ object StoreLayout {
     */
   def recluster(spark: SparkSession, storeDir: String, schema: StructType, colName: String): Unit = {
     val df = Snapshots.storeDf(spark, storeDir)
-    requireNoBatch(df.schema, "recluster")
     val f = fieldName(colName)
     val numeric = graft.encode.MetaIndex.flatOf(schema)(colName).dataType match {
       case org.apache.spark.sql.types.StringType => false
@@ -413,7 +394,6 @@ object StoreLayout {
     require(colNames.size >= 2 && colNames.size <= 4,
       s"zorder takes 2-4 columns, got ${colNames.size} (one column → recluster)")
     val df = Snapshots.storeDf(spark, storeDir)
-    requireNoBatch(df.schema, "reclusterZOrder")
     // bins beyond the chunk count are empty weight in the quantile
     // sketch (65k cut points for a 200-chunk store is waste); rank
     // resolution only needs ~one bin per chunk

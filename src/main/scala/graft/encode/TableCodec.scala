@@ -285,7 +285,9 @@ object TableCodec {
   /** Decode one block into InternalRows. `positions` (if non-null)
     * gathers only those row indexes, in the given order — the
     * index-gather fast path (cf. reference positional gather,
-    * python-blosc2 ctable_indexing.py gather constants).
+    * python-blosc2 ctable_indexing.py gather constants). Every decoded
+    * column must hold exactly `block.nRows` values: a mismatch is a
+    * damaged block and throws, never a dropped or out-of-range row.
     *
     * @param reuseRow every emitted row IS this instance, mutated in
     *                 place (valid only until the next `next()`).
@@ -299,7 +301,13 @@ object TableCodec {
                   withShard: Boolean, reuseRow: SpecificInternalRow,
                   positions: Array[Int] = null): Iterator[InternalRow] = {
     val byName = block.cols.map(c => c.name -> c).toMap
-    val vecs = names.map(n => decodeColumn(byName(n)))
+    val vecs = names.map { n =>
+      val v = decodeColumn(byName(n))
+      if (v.n != block.nRows) throw new IllegalStateException(
+        s"corrupt block (shard ${block.shard}, partId ${block.partId}, chunkId ${block.chunkId}): " +
+          s"column $n decodes to ${v.n} rows, the block records ${block.nRows}")
+      v
+    }
     val writers = new Array[ColWriter](names.length)
     var c = 0
     while (c < names.length) { writers(c) = internalWriter(vecs(c), dts(c), c); c += 1 }

@@ -154,9 +154,6 @@ object GraftFunctions {
       "graft_vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
   }
 
-  /** Typed Aggregator: overall compression ratio of (nBytes, cBytes)
-    * pairs — partial+final mergeable, registrable as a UDAF.
-    */
   /** Product aggregate (the reference's cumulative_prod reducer,
     * ndarray.py:674) — over a running window it IS cumulative_prod;
     * as a plain aggregate it is the product reduction. NULL inputs
@@ -181,6 +178,9 @@ object GraftFunctions {
   def product(c: Column): Column =
     org.apache.spark.sql.functions.udaf(ProdAgg).apply(c)
 
+  /** Typed Aggregator: overall compression ratio of (nBytes, cBytes)
+    * pairs — partial+final mergeable, registrable as a UDAF.
+    */
   object RatioAgg extends Aggregator[(Long, Long), (Long, Long), Double] {
     def zero: (Long, Long) = (0L, 0L)
     def reduce(b: (Long, Long), a: (Long, Long)): (Long, Long) = (b._1 + a._1, b._2 + a._2)

@@ -98,8 +98,4 @@ object DictFilter {
       }
     } finally posDs.unpersist()
   }
-
-  def equalityScan(spark: SparkSession, storeDir: String, schema: StructType,
-                   colName: String, value: String): DataFrame =
-    isinScan(spark, storeDir, schema, colName, Seq(value))
 }

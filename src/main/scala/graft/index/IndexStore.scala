@@ -58,7 +58,6 @@ object IndexStore {
     */
   def createFull(spark: SparkSession, storeDir: String, schema: StructType, colName: String): Unit = {
     import graft.codecs.{BinVec, DoubleVec, LongVec}
-    StoreLayout.requireNoBatch(graft.encode.Snapshots.storeDf(spark, storeDir).schema, "createFull")
     val blocks = StoreLayout.readBlocks(spark, storeDir, Seq(colName))
     val out = fullPath(storeDir, colName)
     val dt = MetaIndex.flatOf(schema)(colName).dataType
@@ -122,7 +121,6 @@ object IndexStore {
   def createBucket(spark: SparkSession, storeDir: String, schema: StructType,
                    colName: String, nBuckets: Int = 1 << 14): Unit = {
     import graft.codecs.{BinVec, LongVec}
-    StoreLayout.requireNoBatch(graft.encode.Snapshots.storeDf(spark, storeDir).schema, "createBucket")
     val blocks = StoreLayout.readBlocks(spark, storeDir, Seq(colName))
     val rdd = StoreLayout.blockRdd(blocks).flatMap { b =>
       val c = b.cols.find(_.name == colName).get
@@ -175,16 +173,6 @@ object IndexStore {
       case _ => idx.filter(col("key") >= lo.toLong && col("key") <= hi.toLong)
     }
   }
-
-  /** Index-served range lookup: probe the FULL index, fetch only the
-    * named chunks, gather only the named positions. Returns rows of
-    * `schema`. UNBOUNDED: every hit of the range reaches the driver;
-    * a bounded lookup goes through [[Planner.query]], which scans
-    * instead past MAX_GATHER_ROWS hits.
-    */
-  def rangeGather(spark: SparkSession, storeDir: String, schema: StructType,
-                  colName: String, lo: String, hi: String): DataFrame =
-    gather(spark, storeDir, schema, collectHits(hitRows(spark, storeDir, schema, colName, lo, hi)).byChunk)
 
   /** FULL-index hit rows (shard, partId, chunkId, pos) of [lo, hi]. */
   private[index] def hitRows(spark: SparkSession, storeDir: String, schema: StructType,
@@ -303,7 +291,6 @@ object IndexStore {
     */
   def slice(spark: SparkSession, storeDir: String, schema: StructType,
             start: Long, count: Long): DataFrame = {
-    StoreLayout.requireNoBatch(graft.encode.Snapshots.storeDf(spark, storeDir).schema, "slice")
     val posByChunk = overlapChunks(spark, storeDir, start, count).map {
       case (shard, partId, chunkId, n, off) =>
         val lo = math.max(start, off)
@@ -501,17 +488,6 @@ object Planner {
     MetaIndex.candidateKeysAnd(spark, storeDir, preds.map(zoneHit))
 
   private def zoneHit(p: Pred): Column = MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))
-
-  /** Plan an AND-of-range-predicates query: intersected zone chunk
-    * count plus, per predicate, the single-column candidate count —
-    * the evidence that cross-column intersection prunes harder than
-    * any one column (asserted in IndexSpec).
-    */
-  def planAnd(spark: SparkSession, storeDir: String, preds: Seq[Pred]): (Long, Seq[Long]) = {
-    val single = preds.map(p =>
-      MetaIndex.candidateKeys(spark, storeDir, p.colName, p.lo, p.hi).count())
-    (candidatesAnd(spark, storeDir, preds).count(), single)
-  }
 
   /** Execute an AND-of-range-predicates query over the encoded store:
     * ONE probe job takes the chunks passing every predicate's zone hit

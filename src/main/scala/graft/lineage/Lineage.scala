@@ -564,31 +564,6 @@ object Lineage {
     (hits.map(_.getInt(0)).toSeq.sorted, hits.map(_.getLong(1)).sum)
   }
 
-  /** Refresh the derived per-shard manifest stats after CoW mutations
-    * (the reference's refresh_generated_column staleness story,
-    * ctable.py:10520): recompute rows/bytes per shard from the store's
-    * METADATA columns (payloads never read) and rewrite the manifest.
-    */
-  def refreshManifest(spark: SparkSession, outDir: String): Unit = {
-    val now = System.currentTimeMillis()
-    val byShard = StoreLayout.chunkStats(spark, outDir)
-      .groupBy("shard")
-      .agg(sum("nRows").as("nRows"), sum("nBytes").as("nBytes"), sum("cBytes").as("cBytes"))
-      .collect()
-      .map(r => r.getInt(0) -> ShardManifest(r.getInt(0), -1, r.getLong(1), r.getLong(2), r.getLong(3), 0L, now))
-      .toMap
-    // PRESERVE the shard universe: the manifest's one-row-per-shard
-    // invariant (incl. shards a delete emptied) is what storeShardCount
-    // — and therefore upsert's key hashing — relies on. Rebuilding from
-    // chunk stats alone would drop empty shards and silently shrink the
-    // hash modulus.
-    val universe = completedShards(spark, outDir) ++ byShard.keySet
-    val stats = universe.toSeq.sorted.map(sh =>
-      byShard.getOrElse(sh, ShardManifest(sh, -1, 0L, 0L, 0L, 0L, now)))
-    spark.createDataset(stats)(Encoders.product[ShardManifest])
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(manifestPath(outDir))
-  }
-
   /** Secondary indexes and the offsets table address rows by
     * (shard, partId, chunkId, pos) — any copy-on-write rewrite
     * invalidates them. Dropped BEFORE the rewrite commits (dropping

@@ -69,23 +69,10 @@ object Dedup {
       (0 to ws.length - k).map(i => ws.slice(i, i + k).mkString(" ")).distinct.toArray
   }
 
-  /** Exact word-k-shingle Jaccard of two texts (local). */
-  def wordShingleJaccard(a: String, b: String, k: Int): Double = {
-    val ga = wordShingles(a, k).toSet
-    val gb = wordShingles(b, k).toSet
-    if (ga.isEmpty && gb.isEmpty) 1.0
-    else ga.intersect(gb).size.toDouble / ga.union(gb).size.toDouble
-  }
-
-  /** Brute-force ALL-PAIRS exact shingle-Jaccard ≥ threshold →
-    * (id_a, id_b). O(n²) nested-loop join: this is the MEASUREMENT
-    * HARNESS that ground-truths the LSH paths at oracle scale (≤ a few
-    * thousand docs) — never a production operator; the scale paths are
-    * [[minhashDuplicates]] / [[simhashDuplicates]].
-    */
   /** Jaccard of two SORTED distinct string arrays (two-pointer
-    * intersection) — same sizes, hence the same IEEE division, as the
-    * Set-based [[wordShingleJaccard]].
+    * intersection): |a ∩ b| / |a ∪ b|, and 1.0 when both are empty —
+    * the exact word-k-shingle Jaccard of two texts given their
+    * [[wordShingles]], sorted.
     */
   private def sortedJaccard(a: Seq[String], b: Seq[String]): Double = {
     if (a.isEmpty && b.isEmpty) return 1.0
@@ -99,17 +86,22 @@ object Dedup {
     common.toDouble / (a.length + b.length - common).toDouble
   }
 
+  /** Brute-force ALL-PAIRS exact shingle-Jaccard ≥ threshold →
+    * (id_a, id_b). O(n²) nested-loop join: this is the MEASUREMENT
+    * HARNESS that ground-truths the LSH paths at oracle scale (≤ a few
+    * thousand docs) — never a production operator; the scale paths are
+    * [[minhashDuplicates]] / [[simhashDuplicates]].
+    */
   def bruteShingleJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                                k: Int, threshold: Double): DataFrame = {
     // spread the nested-loop's STREAM side: a small doc set usually
     // arrives as one file split, which would put every one of the n²/2
     // pair computations on a single core
     val par = df.sparkSession.sparkContext.defaultParallelism
-    // tokenize ONCE per doc — the per-PAIR wordShingleJaccard rebuilt
-    // both docs' shingle sets for every one of the n²/2 pairs, i.e.
-    // each doc was re-tokenized n times (guide §1.2: fix per-task work
-    // after the job shape). Sorted distinct arrays + a two-pointer
-    // intersection give identical set sizes, hence identical values.
+    // tokenize ONCE per doc, not once per pair (a per-pair Set-based
+    // Jaccard re-tokenizes each doc n times). Sorted distinct arrays +
+    // a two-pointer intersection give the same set sizes, hence the
+    // same values, as a Set intersection.
     val shingleU = udf((t: String) => wordShingles(t, k).sorted.toSeq)
     val sh = df.select(col(idCol), shingleU(col(textCol)).as("sh"))
     val a = sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")).repartition(par)

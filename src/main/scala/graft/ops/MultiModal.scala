@@ -49,8 +49,6 @@ object MultiModal {
       */
     final case class Audio(channels: Int, sampleRate: Int, bitsPerSample: Int,
                            samples: Array[Long]) {
-      def nFrames: Int = if (channels == 0) 0 else samples.length / channels
-      def durationSec: Double = if (sampleRate == 0) 0.0 else nFrames.toDouble / sampleRate
       /** full-scale divisor: 2^(bits-1) (int16 → 32768). */
       def fullScale: Double = (1L << (bitsPerSample - 1)).toDouble
     }

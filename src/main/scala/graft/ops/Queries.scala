@@ -533,8 +533,8 @@ object Queries {
       |ORDER BY event_id""".stripMargin
 
   /** Tumbling time-window aggregation over the event stream table (the
-    * batch shape of the Structured Streaming pipeline in
-    * graft.streaming; windows pinned via date_trunc on both sides).
+    * batch shape of a watermarked Structured Streaming window
+    * aggregation; windows pinned via date_trunc on both sides).
     */
   def q17TimeWindow(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "events")

@@ -8,8 +8,7 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 /** Batch sessionization: split each key's event stream into sessions at
   * inactivity gaps > `gapUs` (the classic clickstream/telemetry
   * operator; the streaming twin is Structured Streaming's session
-  * window, streaming/StreamingEncode.scala covers the watermarked
-  * path).
+  * window).
   *
   * Spark-first shape: one shuffle on the key, then two stacked per-key
   * ordered window passes — `lag` marks session starts (gap from the

@@ -9,11 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CodecRegistrySpec extends AnyFunSuite {
 
+  import CodecRegistrySpec.{marked, marker}
+
   /** Toy plugin: XOR every byte with 0x5A (a "filter" ahead of the
     * entropy stage — lossless, order-preserving for the test).
     */
   private object XorKernel extends CodecRegistry.BinKernel {
     val name = "xor5a"
+    override def offer(vec: BinVec): Boolean = marked(vec)
     def encode(vec: BinVec, w: Bytes.Writer): Unit = {
       var i = 0
       while (i < vec.n) {
@@ -55,7 +58,7 @@ class CodecRegistrySpec extends AnyFunSuite {
 
   test("selector offers registered plans alongside built-ins") {
     CodecRegistry.registerBin(ID, XorKernel)
-    val vec = BinVec(Array.tabulate(300)(i => s"doc $i contents with words $i".getBytes("UTF-8")))
+    val vec = BinVec(Array.tabulate(300)(i => s"$marker doc $i contents with words $i".getBytes("UTF-8")))
     val cands = graft.encode.Selector.candidatesFor(vec)
     assert(cands.exists(_.method == ID), s"plugin plans missing from $cands")
     // and the chosen plan (whatever wins the cost model) still roundtrips
@@ -65,16 +68,12 @@ class CodecRegistrySpec extends AnyFunSuite {
   }
 
   test("selector trials demote a failing plugin but never swallow a fatal error") {
-    // offered only on chunks led by the probe marker, so these kernels
-    // stay out of every other suite's selections in this JVM
-    val marker = "throwing-kernel-probe"
     def throwing(err: () => Throwable): CodecRegistry.BinKernel = new CodecRegistry.BinKernel {
       val name = "throws"
       def encode(vec: BinVec, w: Bytes.Writer): Unit = throw err()
       def decode(r: Bytes.Reader, n: Int, validity: Array[Boolean]): Array[Array[Byte]] =
         throw new UnsupportedOperationException
-      override def offer(vec: BinVec): Boolean =
-        vec.n > 0 && vec.values(0) != null && new String(vec.values(0), "UTF-8").startsWith(marker)
+      override def offer(vec: BinVec): Boolean = marked(vec)
     }
     val vec = BinVec(Array.tabulate(300)(i => s"$marker doc $i contents with words $i".getBytes("UTF-8")))
     CodecRegistry.registerBin(42, throwing(() => new IllegalStateException("broken plugin")))
@@ -97,24 +96,17 @@ class CodecRegistrySpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("no codec is registered"))
   }
-
-  test("registerFilter wraps a plain byte transform incl. null and empty cells") {
-    val FID: Byte = 41
-    // rot13-ish reversible transform: add 13 mod 256 per byte
-    CodecRegistry.registerFilter(FID, "add13",
-      forward = v => v.map(b => ((b + 13) & 0xff).toByte),
-      inverse = v => v.map(b => ((b - 13) & 0xff).toByte))
-    val vec = BinVec(
-      Array[Array[Byte]]("alpha".getBytes, null, Array.emptyByteArray, "omega-9".getBytes),
-      Array(true, false, true, true))
-    for (plan <- CodecRegistry.binKernelOrThrow(FID).plans(FID)) {
-      val back = ChunkCodec.decode(ChunkCodec.encode(vec, plan)).asInstanceOf[BinVec]
-      assert(back.n == 4)
-      assert(java.util.Arrays.equals(back.values(0), "alpha".getBytes))
-      assert(!back.isValid(1), "null cell must survive the filter")
-      assert(back.values(2).length == 0, "empty cell must stay empty, not become null")
-      assert(java.util.Arrays.equals(back.values(3), "omega-9".getBytes))
-    }
-  }
 }
 
+object CodecRegistrySpec {
+
+  /** Chunks led by this value are the only ones the plugins here are
+    * offered on: the registry is JVM-wide, and a plugin offered on
+    * every chunk would change other suites' selections (and the codec
+    * byte pins) once this suite has run.
+    */
+  val marker = "codec-registry-probe"
+
+  def marked(vec: BinVec): Boolean =
+    vec.n > 0 && vec.values(0) != null && new String(vec.values(0), "UTF-8").startsWith(marker)
+}

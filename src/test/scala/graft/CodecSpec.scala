@@ -42,6 +42,19 @@ class CodecSpec extends SparkTestBase {
     vals.foreach(v => assert(r.getSVarLong() == v))
   }
 
+  test("getVarInt rejects a varint with a bit set above bit 31") {
+    val ints = Seq(0, 1, Int.MaxValue, Int.MinValue, -1)
+    val w = new Bytes.Writer()
+    ints.foreach(w.putVarInt)
+    val r = new Bytes.Reader(w.result())
+    ints.foreach(v => assert(r.getVarInt() == v))
+    for (v <- Seq(1L << 32, Long.MaxValue, -1L)) {
+      val big = new Bytes.Writer()
+      big.putVarLong(v)
+      intercept[IllegalArgumentException](new Bytes.Reader(big.result()).getVarInt())
+    }
+  }
+
   // ------------------------------------------------------------ fixtures
 
   private def arangeLongs(n: Int) = Array.tabulate(n)(_.toLong)

@@ -34,7 +34,7 @@ class DictFilterSpec extends SparkTestBase {
   test("non-matching chunks never materialize values (zero full decodes)") {
     storeDir // force store build before resetting the counter
     BinKernels.fullDecodes.set(0)
-    val none = DictFilter.equalityScan(spark, storeDir, df.schema, "lang", "no-such-lang")
+    val none = DictFilter.isinScan(spark, storeDir, df.schema, "lang", Seq("no-such-lang"))
     assert(none.count() == 0)
     assert(BinKernels.fullDecodes.get() == 0,
       s"dictionary miss must not decode values, saw ${BinKernels.fullDecodes.get()} full decodes")
@@ -56,7 +56,7 @@ class DictFilterSpec extends SparkTestBase {
     assert(matchingChunks < totalChunks, "corpus must have non-matching chunks for this test")
 
     BinKernels.fullDecodes.set(0)
-    val res = DictFilter.equalityScan(spark, storeDir, df.schema, "lang", target)
+    val res = DictFilter.isinScan(spark, storeDir, df.schema, "lang", Seq(target))
     assert(res.count() == df.filter(col("lang") === target).count())
     // the gather decodes the string columns of MATCHING chunks only —
     // a full scan would decode all 5 bin columns of every chunk

@@ -35,7 +35,8 @@ class IndexSpec extends SparkTestBase {
   }
 
   test("FULL index range gather equals the full-scan filter") {
-    val viaIndex = IndexStore.rangeGather(spark, storeDir, df.schema, "row_id", "100", "299")
+    val (viaIndex, choice) = Planner.query(spark, storeDir, df.schema, "row_id", "100", "299")
+    assert(choice.path == "index-gather", choice.toString)
     val viaScan = df.filter(col("row_id").between(100, 299))
     assert(viaIndex.count() == viaScan.count())
     val h = (d: org.apache.spark.sql.DataFrame) =>
@@ -106,9 +107,19 @@ class IndexSpec extends SparkTestBase {
       s"per-page index IO not flat: shallow=$shallow deep=$deep")
   }
 
+  /** A repo from the middle of the sort order: every chunk's zone
+    * spans it, while its few rows sit in a few chunks, so a probe of it
+    * takes the index path.
+    */
+  private lazy val midRepo: String = {
+    val repos = df.select("repo").distinct().orderBy("repo").collect().map(_.getString(0))
+    repos(repos.length / 2)
+  }
+
   test("FULL index on a string column serves range probes") {
-    val target = df.select("repo").orderBy("repo").head().getString(0)
-    val viaIndex = IndexStore.rangeGather(spark, storeDir, df.schema, "repo", target, target)
+    val target = midRepo
+    val (viaIndex, choice) = Planner.query(spark, storeDir, df.schema, "repo", target, target)
+    assert(choice.path == "index-gather", choice.toString)
     assert(viaIndex.count() == df.filter(col("repo") === target).count())
   }
 
@@ -166,7 +177,8 @@ class IndexSpec extends SparkTestBase {
     // row_id 350-1049 → chunks 3-10; grp=1 ⇔ row_id 700-1399 → chunks
     // 7-13; the intersection (7-10) is strictly smaller than both
     val preds = Seq(Planner.Pred("row_id", "350", "1049"), Planner.Pred("grp", "1", "1"))
-    val (andChunks, singles) = Planner.planAnd(spark, storeDir, preds)
+    val andChunks = Planner.candidatesAnd(spark, storeDir, preds).count()
+    val singles = preds.map(p => graft.encode.MetaIndex.candidateKeys(spark, storeDir, p.colName, p.lo, p.hi).count())
     assert(singles.size == 2 && singles.forall(andChunks < _), s"and=$andChunks singles=$singles")
     val res = Planner.queryAnd(spark, storeDir, df.schema, preds)
     val expect = df.filter(col("row_id").between(350, 1049) && col("grp") === 1)
@@ -191,8 +203,9 @@ class IndexSpec extends SparkTestBase {
     assert(byZone.schema("meta").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
     // FULL index + positional gather on a DOTTED LEAF column
     IndexStore.createFull(spark, dir, nested.schema, "meta.repo")
-    val target = df.select("repo").orderBy("repo").head().getString(0)
-    val viaIndex = IndexStore.rangeGather(spark, dir, nested.schema, "meta.repo", target, target)
+    val target = midRepo
+    val (viaIndex, choice) = Planner.query(spark, dir, nested.schema, "meta.repo", target, target)
+    assert(choice.path == "index-gather", choice.toString)
     assert(viaIndex.count() == df.filter(col("repo") === target).count())
     assert(viaIndex.select("meta.repo").distinct().head().getString(0) == target)
   }

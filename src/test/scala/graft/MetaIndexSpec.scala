@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.Corpus
-import graft.encode.{MetaIndex, TableCodec}
+import graft.encode.{MetaIndex, Snapshots, StoreLayout, TableCodec}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
@@ -42,25 +42,14 @@ class MetaIndexSpec extends SparkTestBase {
   }
 
   test("prune pass is metadata-only: payload/sha never in the scan schema") {
-    import org.apache.spark.sql.types.StructType
-    val meta = MetaIndex.zoneMeta(spark, storeDir)
-    val scan = meta.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in prune plan"))
-    // the exact struct leaves the parquet reader maps: zone metadata
-    // only, for EVERY per-column chunk struct in the v2 layout
-    val structFields = scan.requiredSchema.fields.collect {
-      case f if f.dataType.isInstanceOf[StructType] =>
-        f.name -> f.dataType.asInstanceOf[StructType].fieldNames.toSet
-    }
-    assert(structFields.nonEmpty, s"no chunk structs in ${scan.requiredSchema}")
-    structFields.foreach { case (n, fields) =>
-      assert(fields == Set("name", "dt", "minKey", "maxKey"),
-        s"prune pass must not read payload/sha of $n, got $fields")
-    }
-    // and the candidate fetch pushes the surviving chunk keys into the scan
     val target = df.select("repo").orderBy("repo").head().getString(0)
-    val cand = MetaIndex.readCandidates(spark, storeDir, "repo", target, target)
+    assertZonePassMetadataOnly(storeDir, "repo", target, target)
+    // and the candidate fetch pushes the probe's chunk keys into the scan
+    val keys = StoreLayout.probe(Snapshots.storeDf(spark, storeDir),
+      Seq(MetaIndex.zoneHitOn("repo", Some(target), Some(target))), needCounts = false).keys.head
+    assert(keys.exists(_.nonEmpty), s"a selective range must have pushable keys: $keys")
+    val cand = StoreLayout.readChunks(spark, storeDir,
+      MetaIndex.candidateKeys(spark, storeDir, "repo", target, target), keys, null)
     val fetchPlan = cand.queryExecution.executedPlan.toString
     assert(fetchPlan.contains("PushedFilters: [") && fetchPlan.contains("chunkId"),
       s"candidate fetch must push chunk keys:\n$fetchPlan")
@@ -155,7 +144,7 @@ class MetaIndexSpec extends SparkTestBase {
   }
 
   test("MetaAgg: count/min/max from zone metadata; unbounded chunks fall back to one-column decode") {
-    import graft.encode.{MetaAgg, StoreLayout}
+    import graft.encode.MetaAgg
 
     assert(MetaAgg.count(spark, storeDir) == 2000L)
 
@@ -188,18 +177,8 @@ class MetaIndexSpec extends SparkTestBase {
     val expMx = dd.filter(!isnan(col("v"))).agg(max("v")).head().getDouble(0)
     assert(mxV.contains(expMx), s"got $mxV want $expMx")
 
-    // the zone pass itself never maps payload pages: the scan schema of
-    // the metadata aggregation carries zone leaves only
-    val meta = MetaIndex.zoneMetaFor(spark, storeDir, "row_id")
-    val scan = meta.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in MetaAgg metadata plan"))
-    val structs = scan.requiredSchema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-        f.dataType.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-    }
-    assert(structs.nonEmpty && structs.forall(_ == Set("name", "dt", "minKey", "maxKey")),
-      s"MetaAgg metadata pass must not touch payload/sha: ${structs.toSeq}")
+    // the zone pass over a long column never maps payload pages either
+    assertZonePassMetadataOnly(storeDir, "row_id", "100", "199")
   }
 
   test("MetaAgg batched: multi-column min/max + sums run as ONE metadata pass") {
@@ -236,13 +215,13 @@ class MetaIndexSpec extends SparkTestBase {
   }
 
   test("MetaAgg: exact sum / non-null count / histogram group-by, with decode fallbacks") {
-    import graft.encode.{MetaAgg, StoreLayout}
+    import graft.encode.MetaAgg
     import org.apache.spark.sql.types.DecimalType
 
     // corpus store: no nulls, no overflow → sums/counts are pure metadata
     val expSum = df.agg(sum("row_id")).head().getLong(0)
     assert(MetaAgg.sumLong(spark, storeDir, df.schema, "row_id").contains(expSum))
-    assert(MetaAgg.countNonNull(spark, storeDir, "repo") == 2000L)
+    assert(MetaAgg.stats(spark, storeDir, null, Nil, Seq("repo")).nonNull("repo") == 2000L)
 
     // group-by on a low-cardinality column: histograms alive in every
     // chunk → equals the decoded group-by exactly
@@ -252,18 +231,11 @@ class MetaIndexSpec extends SparkTestBase {
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(gotLang == expLang)
 
-    // the summary pass maps summary leaves only — payload/sha never
-    val meta = MetaIndex.summaryMetaFor(spark, storeDir, "lang")
-    val scan = meta.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in summary plan"))
-    val structs = scan.requiredSchema.fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] =>
-        f.dataType.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-    }
+    // the group-by's summary pass maps summary leaves only — payload/sha never
+    val structs = scanStructLeaves(MetaAgg.groupCount(spark, storeDir, df.schema, "lang"))
     assert(structs.nonEmpty &&
-      structs.forall(_ == Set("name", "dt", "minKey", "maxKey", "nNulls", "sumKey", "hist")),
-      s"summary pass must not touch payload/sha: ${structs.toSeq}")
+      structs.values.forall(_.subsetOf(Set("name", "dt", "minKey", "maxKey", "nNulls", "sumKey", "hist"))),
+      s"summary pass must not touch payload/sha: $structs")
 
     // nulls + a chunk whose RUNNING sum overflows Long (sumKey dead →
     // one-column decode fallback) + >HIST_MAX distinct values per chunk
@@ -283,15 +255,15 @@ class MetaIndexSpec extends SparkTestBase {
     StoreLayout.write(TableCodec.encode(dd, chunkRows = 100), dd.schema.fieldNames.toSeq, dir2)
 
     // the middle chunk really is sum-dead (else this test proves nothing)
-    val deadChunks = MetaIndex.summaryMetaFor(spark, dir2, "v")
-      .filter(col("sumKey") === "" && col("nNulls") < col("nRows")).count()
+    val deadChunks = Snapshots.storeDf(spark, dir2)
+      .filter(col("g_v.sumKey") === "" && col("g_v.nNulls") < col("nRows")).count()
     assert(deadChunks == 1L, s"want exactly the overflow chunk sum-dead, got $deadChunks")
 
     val expExact = dd.agg(sum(col("v").cast(DecimalType(38, 0)))).head()
       .getDecimal(0).toBigIntegerExact.longValueExact()
     assert(MetaAgg.sumLong(spark, dir2, dd.schema, "v").contains(expExact))
     val expNN = dd.filter(col("v").isNotNull).count()
-    assert(MetaAgg.countNonNull(spark, dir2, "v") == expNN)
+    assert(MetaAgg.stats(spark, dir2, null, Nil, Seq("v")).nonNull("v") == expNN)
 
     // group-by with dead histograms + a null group: equals decode
     val gotV = MetaAgg.groupCount(spark, dir2, dd.schema, "v").collect()
@@ -305,7 +277,7 @@ class MetaIndexSpec extends SparkTestBase {
     val dir3 = java.nio.file.Files.createTempDirectory("graft-metaagg-null").toString
     StoreLayout.write(TableCodec.encode(ddNull, chunkRows = 20), ddNull.schema.fieldNames.toSeq, dir3)
     assert(MetaAgg.sumLong(spark, dir3, ddNull.schema, "v").isEmpty)
-    assert(MetaAgg.countNonNull(spark, dir3, "v") == 0L)
+    assert(MetaAgg.stats(spark, dir3, null, Nil, Seq("v")).nonNull("v") == 0L)
 
     // float sums are order-dependent — pushdown must refuse, not lie
     val ddD = Seq((1L, 0.5), (2L, 1.5)).toDF("id", "v").coalesce(1)

@@ -38,6 +38,39 @@ trait SparkTestBase extends AnyFunSuite {
     acc.get()
   }
 
+  /** Field → leaf names of every struct column the parquet scans of
+    * `df`'s physical plan read: what the reader maps of each store
+    * chunk struct.
+    */
+  protected def scanStructLeaves(df: org.apache.spark.sql.DataFrame): Map[String, Set[String]] = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val scans = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scans.nonEmpty, s"no parquet scan in ${df.queryExecution.sparkPlan}")
+    scans.flatMap(_.requiredSchema.fields.collect {
+      case StructField(n, st: StructType, _, _) => n -> st.fieldNames.toSet
+    }).groupMapReduce(_._1)(_._2)(_ ++ _)
+  }
+
+  /** The zone pass of [lo, hi] on `colName` maps zone leaves only, in
+    * both scans that run it: `MetaIndex.candidateKeys` and the rows of
+    * the `StoreLayout.probe` a lookup runs.
+    */
+  protected def assertZonePassMetadataOnly(storeDir: String, colName: String, lo: String, hi: String): Unit = {
+    import graft.encode.{MetaIndex, Snapshots, StoreLayout}
+    val probeRows = StoreLayout.probeRows(Snapshots.storeDf(spark, storeDir),
+      Seq(MetaIndex.zoneHitOn(colName, Some(lo), Some(hi))))
+    for (pass <- Seq(MetaIndex.candidateKeys(spark, storeDir, colName, lo, hi), probeRows)) {
+      val leaves = scanStructLeaves(pass)
+      assert(leaves.nonEmpty, s"no chunk structs in the zone pass of $colName")
+      leaves.foreach { case (n, fields) =>
+        assert(fields.subsetOf(Set("name", "dt", "minKey", "maxKey")),
+          s"zone pass must not read payload/sha of $n, got $fields")
+      }
+    }
+  }
+
   /** Number of Spark jobs `body` launches, counted by job group (the
     * status tracker is fed by the listener bus, so flush it first).
     */

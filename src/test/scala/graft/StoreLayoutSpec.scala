@@ -1,7 +1,7 @@
 package graft
 
-import graft.encode.{StoreLayout, TableCodec}
-import graft.index.{DictFilter, IndexStore}
+import graft.encode.{MetaIndex, Snapshots, StoreLayout, TableCodec}
+import graft.index.{DictFilter, IndexStore, Planner}
 import org.apache.spark.sql.functions._
 
 /** The v2 store layout's core scale claim, asserted at the BYTE level:
@@ -115,7 +115,8 @@ class StoreLayoutSpec extends SparkTestBase {
     assert(decoded.agg(sum("v")).head().getLong(0) == (0L until 2000L).sum)
     // the FULL index built BEFORE the recluster still serves gathers:
     // chunk identities are names, not file positions
-    val got = IndexStore.rangeGather(spark, out, input.schema, "v", "100", "150")
+    val (got, choice) = Planner.query(spark, out, input.schema, "v", "100", "150")
+    assert(choice.path == "index-gather", choice.toString)
     assert(got.count() == 51)
     assert(got.agg(min("v"), max("v")).head() == org.apache.spark.sql.Row(100L, 150L))
   }
@@ -230,42 +231,15 @@ class StoreLayoutSpec extends SparkTestBase {
     intercept[Exception](Bundle.unpack(spark, corrupt, dst2))
   }
 
-  test("proxy serves a slow source from its compressed cache without re-evaluating it") {
-    import spark.implicits._
-    import graft.lineage.Proxy
-    val evals = spark.sparkContext.longAccumulator("source-evals")
-    def slowSource: org.apache.spark.sql.DataFrame =
-      (0L until 600L).map(i => (i, s"payload-$i-" + "w" * 50)).toDS()
-        .mapPartitions { it => evals.add(1L); it }
-        .toDF("id", "payload")
-    val schema = slowSource.schema
-    val cache = java.nio.file.Files.createTempDirectory("graft-proxy").toString + "/cache"
-
-    val first = Proxy.through(spark, cache, schema, Seq("id"), nShards = 4, nBatches = 1)(slowSource)
-    assert(first.count() == 600)
-    val fills = evals.value
-    assert(fills > 0, "first access must evaluate the source")
-
-    val again = Proxy.through(spark, cache, schema, Seq("id"), nShards = 4, nBatches = 1)(
-      fail("cache hit must not construct the source"): org.apache.spark.sql.DataFrame)
-    assert(again.count() == 600)
-    assert(evals.value == fills, "cache hit re-evaluated the source")
-    assert(again.orderBy("id").collect().toSeq ==
-      first.orderBy("id").collect().toSeq)
-    // the cache is COMPRESSED (the point vs persist(DISK_ONLY))
-    val stats = graft.encode.StoreLayout.readBlocks(spark, cache).collect()
-      .flatMap(_.cols.map(c => (c.nBytes, c.cBytes)))
-    assert(stats.map(_._2).sum < stats.map(_._1).sum,
-      s"proxy cache not compressed: ${stats.map(_._2).sum} vs ${stats.map(_._1).sum}")
-  }
-
   test("zone metadata pass reads only metadata leaves") {
+    assertZonePassMetadataOnly(storeDir, "lang", "de", "de")
+    val hit = Seq(MetaIndex.zoneHitOn("lang", Some("de"), Some("de")))
     val full = bytesRead {
       TableCodec.decode(StoreLayout.readBlocks(spark, storeDir), df.schema).count()
     }
-    val meta = bytesRead {
-      graft.encode.MetaIndex.zoneMeta(spark, storeDir).count()
-    }
-    assert(meta < full / 10, s"zone pass must be metadata-only: meta=$meta full=$full")
+    val probe = bytesRead { StoreLayout.probe(Snapshots.storeDf(spark, storeDir), hit) }
+    val keys = bytesRead { MetaIndex.candidateKeys(spark, storeDir, "lang", "de", "de").count() }
+    assert(probe < full / 10, s"the probe's zone pass must be metadata-only: probe=$probe full=$full")
+    assert(keys < full / 10, s"candidateKeys must be metadata-only: keys=$keys full=$full")
   }
 }

@@ -87,11 +87,19 @@ class StoreReadSpec extends SparkTestBase {
     assert(store.filter(col("g_big.sumKey") === "").count() > cap)
   }
 
+  /** The chunk read a zone lookup of [lo, hi] on `c` runs: the probe's
+    * candidate keys through StoreLayout.readChunks.
+    */
+  private def candidateRead(dir: String, c: String, lo: String, hi: String) = {
+    val keys = StoreLayout.probe(Snapshots.storeDf(spark, dir), Seq(MetaIndex.zoneHitOn(c, Some(lo), Some(hi))),
+      needCounts = false).keys.head
+    StoreLayout.readChunks(spark, dir, MetaIndex.candidateKeys(spark, dir, c, lo, hi), keys, null)
+  }
+
   test("over-cap lookup equals the raw filter and fetches by left-semi join") {
     val got = MetaIndex.lookup(spark, wideDir, wide.schema, "s", "const", "const")
     assertSameRows(got, wide, "lookup(s = const)")
-    val plan = MetaIndex.readCandidates(spark, wideDir, "s", "const", "const")
-      .queryExecution.executedPlan.toString
+    val plan = candidateRead(wideDir, "s", "const", "const").queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), s"over-cap fetch must semi-join:\n$plan")
     assert(!plan.contains("EqualTo(chunkId"), s"over-cap fetch must not push chunk keys:\n$plan")
   }
@@ -154,8 +162,7 @@ class StoreReadSpec extends SparkTestBase {
     assert(cand == StoreLayout.MAX_PUSHDOWN_KEYS)
     val got = MetaIndex.lookup(spark, wideDir, wide.schema, "id", "0", "2047")
     assertSameRows(got, wide.filter(col("id").between(0L, 2047L)), "lookup(id in [0, 2047])")
-    val plan = MetaIndex.readCandidates(spark, wideDir, "id", "0", "2047")
-      .queryExecution.executedPlan.toString
+    val plan = candidateRead(wideDir, "id", "0", "2047").queryExecution.executedPlan.toString
     assert(plan.contains("EqualTo(chunkId") && !plan.contains("LeftSemi"), s"at the cap keys are pushed:\n$plan")
   }
 

@@ -1,91 +1,14 @@
 package graft
 
-import graft.corpus.Corpus
-import graft.encode.TableCodec
-import graft.streaming.StreamingEncode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.Files
 
-/** Structured Streaming coverage: streaming encode via foreachBatch
-  * (file source → encoded blocks, exactly-once via checkpoint) and a
-  * watermarked windowed aggregation in the events shape.
+/** Structured Streaming coverage: a watermarked windowed aggregation in
+  * the events shape.
   */
 class StreamingSpec extends SparkTestBase {
 
   import spark.implicits._
-
-  test("streaming encode ingests arriving files; restart is exactly-once") {
-    val in = Files.createTempDirectory("graft-stream-in").toString
-    val out = Files.createTempDirectory("graft-stream-out").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-
-    val all = Corpus.generate(spark, 600, 3).toDF()
-    val schema = all.schema
-    // first two "arrivals"
-    all.filter(pmod(xxhash64(col("path")), lit(3)) === 0).write.parquet(s"$in/a")
-    all.filter(pmod(xxhash64(col("path")), lit(3)) === 1).write.parquet(s"$in/b")
-
-    val q1 = StreamingEncode.start(spark, s"$in/*", out, ckpt, schema, chunkRows = 64)
-    q1.awaitTermination(120000)
-
-    val firstRows = TableCodec.decode(
-      graft.encode.StoreLayout.readBlocks(spark, out), schema).count()
-    assert(firstRows > 0 && firstRows < 600)
-
-    // a third batch arrives; restart from the same checkpoint: only the
-    // new file is processed (exactly-once lineage)
-    all.filter(pmod(xxhash64(col("path")), lit(3)) === 2).write.parquet(s"$in/c")
-    val q2 = StreamingEncode.start(spark, s"$in/*", out, ckpt, schema, chunkRows = 64)
-    q2.awaitTermination(120000)
-
-    val decoded = TableCodec.decode(
-      graft.encode.StoreLayout.readBlocks(spark, out), schema)
-    assert(decoded.count() == 600, "no dupes, no loss after restart")
-    // bit-identical content end to end
-    val a = all.select(sum(crc32(sha2(col("content"), 256)))).head().getLong(0)
-    val b = decoded.select(sum(crc32(sha2(col("content"), 256)))).head().getLong(0)
-    assert(a == b)
-  }
-
-  test("batch-partitioned streaming store: keyed ops refuse it; compact enables them") {
-    val in = Files.createTempDirectory("graft-cpt-in").toString
-    val out = Files.createTempDirectory("graft-cpt-raw").toString
-    val ckpt = Files.createTempDirectory("graft-cpt-ckpt").toString
-    val compacted = Files.createTempDirectory("graft-cpt-done").toString
-
-    val all = Corpus.generate(spark, 400, 2).toDF()
-    all.filter(pmod(xxhash64(col("path")), lit(2)) === 0).write.parquet(s"$in/a")
-    StreamingEncode.start(spark, s"$in/*", out, ckpt, all.schema, chunkRows = 64)
-      .awaitTermination(120000)
-    all.filter(pmod(xxhash64(col("path")), lit(2)) === 1).write.parquet(s"$in/b")
-    StreamingEncode.start(spark, s"$in/*", out, ckpt, all.schema, chunkRows = 64)
-      .awaitTermination(120000)
-
-    // keyed operations must refuse the batch= store loudly: (shard,
-    // partId, chunkId) is not unique across batches
-    intercept[IllegalArgumentException] {
-      graft.index.IndexStore.createFull(spark, out, all.schema, "repo")
-    }
-    intercept[IllegalArgumentException] {
-      graft.index.IndexStore.slice(spark, out, all.schema, 0L, 10L)
-    }
-
-    StreamingEncode.compact(spark, out, compacted)
-    // compacted store: identical content, keyed ops work
-    val decoded = TableCodec.decode(
-      graft.encode.StoreLayout.readBlocks(spark, compacted), all.schema)
-    assert(decoded.count() == 400)
-    val a = all.select(sum(crc32(sha2(col("content"), 256)))).head().getLong(0)
-    val b = decoded.select(sum(crc32(sha2(col("content"), 256)))).head().getLong(0)
-    assert(a == b, "compaction must copy payloads bit-identically")
-    graft.index.IndexStore.createFull(spark, compacted, all.schema, "repo")
-    val target = all.select("repo").orderBy("repo").head().getString(0)
-    val viaIndex = graft.index.IndexStore.rangeGather(
-      spark, compacted, all.schema, "repo", target, target)
-    assert(viaIndex.count() == all.filter(col("repo") === target).count())
-    assert(graft.index.IndexStore.slice(spark, compacted, all.schema, 10L, 25L).count() == 25)
-  }
 
   test("watermarked tumbling-window aggregation over a rate-like stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
