@@ -236,20 +236,30 @@ object Entropy {
     out
   }
 
+  /** Decode a body that must come out exactly `rawLen` bytes long: a
+    * damaged body throws, never leaving stale bytes in `out` (LZ4 through
+    * the bounds-checked decoder; the fast one trusts its input and a
+    * damaged body crashes the JVM in native code).
+    */
   private def decompressRangeInto(e: Byte, comp: Array[Byte], off: Int, len: Int,
-                                  out: Array[Byte], rawLen: Int): Unit = e match {
-    case ZSTD =>
-      // same no-critical JNI path as compressRange (decompress criticals
-      // are shorter but 32 decode threads still gate the GCLocker)
-      val srcB = directBuf(dSrcTl, len)
-      srcB.put(comp, off, len)
-      val dstB = directBuf(dDstTl, rawLen)
-      zd.get().decompressDirectByteBuffer(dstB, 0, rawLen, srcB, 0, len)
-      dstB.position(0)
-      dstB.get(out, 0, rawLen)
-    case LZ4 =>
-      lz4.fastDecompressor().decompress(comp, off, out, 0, rawLen)
-    case _ => throw new IllegalArgumentException(s"entropy $e")
+                                  out: Array[Byte], rawLen: Int): Unit = {
+    val n = e match {
+      case ZSTD =>
+        // same no-critical JNI path as compressRange (decompress criticals
+        // are shorter but 32 decode threads still gate the GCLocker)
+        val srcB = directBuf(dSrcTl, len)
+        srcB.put(comp, off, len)
+        val dstB = directBuf(dDstTl, rawLen)
+        val n = zd.get().decompressDirectByteBuffer(dstB, 0, rawLen, srcB, 0, len)
+        dstB.position(0)
+        dstB.get(out, 0, n)
+        n
+      case LZ4 =>
+        lz4.safeDecompressor().decompress(comp, off, len, out, 0, rawLen)
+      case _ => throw new IllegalArgumentException(s"entropy $e")
+    }
+    if (n != rawLen) throw new IllegalStateException(
+      s"corrupt ${name(e)} body: decodes to $n bytes, the header records $rawLen")
   }
 }
 

@@ -82,6 +82,10 @@ object Bytes {
       val out = java.util.Arrays.copyOfRange(buf, pos, pos + n); pos += n; out
     }
 
+    /** A varint `putVarLong` wrote: at most 10 bytes, the 10th carrying
+      * only bit 63. A longer one is corrupt input and throws (shifts
+      * wrap mod 64, so its extra bits would land in the low bits).
+      */
     def getVarLong(): Long = {
       var shift = 0; var out = 0L; var b = 0
       do {
@@ -89,6 +93,8 @@ object Bytes {
         out |= (b & 0x7fL) << shift
         shift += 7
       } while ((b & 0x80) != 0)
+      if (shift > 70 || shift == 70 && b > 1)
+        throw new IllegalArgumentException(s"varint before byte $pos overflows 64 bits")
       out
     }
 

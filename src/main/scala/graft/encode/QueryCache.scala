@@ -122,7 +122,7 @@ object QueryCache {
   private def both: Seq[java.util.Map[Key, _]] = Seq(coords, rels)
 
   /** Drop every entry (any version) of `dir` itself and of paths under
-    * `dir/` (a store's `_index`/`_offsets` relations) — never of a
+    * `dir/` (a store's `_index` relations) — never of a
     * sibling that merely shares the name prefix (`dir2`).
     */
   def invalidate(dir: String): Unit = {

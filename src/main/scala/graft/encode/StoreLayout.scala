@@ -230,7 +230,9 @@ object StoreLayout {
     * job ([[runUntil]]) with no exchange: the rows of `meta` (chunk keys
     * `shard`, `partId`, `chunkId`) are tested against each `hit` column
     * (NULL is a miss, as in a filter), unioned with the hit rows
-    * (shard, partId, chunkId, pos) of `index`. Each metadata partition
+    * (shard, partId, chunkId, pos) of `index` (FULL-index hits, or
+    * dictionary match positions); with no `hit` column and no
+    * `needCounts` only `index` is scanned. Each metadata partition
     * counts its chunks and each column's hits and ships at most
     * MAX_PUSHDOWN_KEYS+1 keys per column; each index partition ships at
     * most MAX_GATHER_ROWS+1 hits; the driver bounds every column and the
@@ -241,11 +243,11 @@ object StoreLayout {
     * past its cap. The counts are exact only with `needCounts`. A
     * failed task is rethrown, never taken for a stop.
     */
-  private[graft] def probe(meta: DataFrame, hit: Seq[Column], index: Option[DataFrame] = None,
+  private[graft] def probe(meta: DataFrame, hit: Seq[Column], index: Option[RDD[InternalRow]] = None,
                            needCounts: Boolean = true): Probe = {
     val (k, keyCap, hitCap) = (hit.size, MAX_PUSHDOWN_KEYS, MAX_GATHER_ROWS.toInt)
     val noHits = Hits.of(Iterator.empty)
-    val zone = probeRows(meta, hit)
+    val zone = if (k == 0 && !needCounts && index.isDefined) None else Some(probeRows(meta, hit)
       .queryExecution.toRdd.mapPartitions { it =>
         val cand = new Array[Long](k)
         var total = 0L
@@ -258,11 +260,11 @@ object StoreLayout {
           }
         }
         Iterator(ProbePart(cand, total, keys.map(_.result()), noHits))
-      }
-    val nZone = zone.getNumPartitions
-    val parts = index.fold(zone)(ix => zone.union(ix.queryExecution.toRdd.mapPartitions { it =>
+      })
+    val nZone = zone.fold(0)(_.getNumPartitions)
+    val parts = (zone ++ index.map(_.mapPartitions { it =>
       Iterator(ProbePart(new Array[Long](k), 0L, Array.fill(k)(Array.empty), Hits.of(it, hitCap + 1)))
-    }))
+    })).reduce(_ union _)
     val cand = new Array[Long](k)
     var total = 0L
     var zoneLeft = nZone

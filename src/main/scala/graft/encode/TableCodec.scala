@@ -65,8 +65,7 @@ object TableCodec {
     * flat schemas; dotted leaf names once structs are flattened) —
     * what StoreLayout.write needs as its `names`.
     */
-  def encodedNames(schema: StructType): Seq[String] =
-    (if (Nested.hasNested(schema)) Nested.flatSchema(schema) else schema).fieldNames.toSeq
+  def encodedNames(schema: StructType): Seq[String] = MetaIndex.flatOf(schema).fieldNames.toSeq
 
   /** Encode every column of df. `shardCol` (if set) names an int column
     * carrying the lineage shard id; it is consumed, not encoded.
@@ -240,6 +239,9 @@ object TableCodec {
 
   // ---------------------------------------------------------------- decode
 
+  /** Every row of a block: the default selection of [[decode]]. */
+  private val allRows: EncodedBlock => Array[Int] = _ => null
+
   /** Inverse of encode: rebuild the original rows (column order = the
     * order recorded in the blocks). Shuffle-free flatMap emitting
     * Catalyst InternalRows directly — string bytes become UTF8String
@@ -248,26 +250,23 @@ object TableCodec {
     * no RowEncoder re-serialization on the hot path. When
     * `shardColName` is set, the block's lineage shard id is surfaced as
     * an extra int column (used by copy-on-write delete).
+    *
+    * `select` gives each block's row indexes to emit, in order — the
+    * index-gather and dictionary-filter paths (cf. reference positional
+    * gather, python-blosc2 ctable_indexing.py gather constants); null
+    * emits every row, and an empty selection decodes no column.
     */
   def decode(blocks: Dataset[EncodedBlock], schema: StructType,
-             shardColName: Option[String] = None): DataFrame = {
-    if (Nested.hasNested(schema)) {
-      val flatDf = decodeFlat(blocks, Nested.flatSchema(schema), shardColName)
-      return Nested.reassemble(flatDf, schema, extraCols = shardColName.toSeq)
-    }
-    decodeFlat(blocks, schema, shardColName)
-  }
-
-  private def decodeFlat(blocks: Dataset[EncodedBlock], schema: StructType,
-                         shardColName: Option[String]): DataFrame = {
-    val spark = blocks.sparkSession
-    val names = schema.fieldNames
-    val dts = schema.fields.map(_.dataType)
+             shardColName: Option[String] = None,
+             select: EncodedBlock => Array[Int] = allRows): DataFrame = {
+    val flat = MetaIndex.flatOf(schema)
+    val names = flat.fieldNames
+    val dts = flat.fields.map(_.dataType)
     val outSchema = shardColName match {
-      case Some(s) => StructType(schema.fields :+ StructField(s, IntegerType, nullable = false))
-      case None => schema
+      case Some(s) => StructType(flat.fields :+ StructField(s, IntegerType, nullable = false))
+      case None => flat
     }
-    val extra = shardColName.size
+    val withShard = shardColName.nonEmpty
     val outTypes = outSchema.fields.map(_.dataType).toIndexedSeq
     val rdd = StoreLayout.blockRdd(blocks).mapPartitions { it =>
       // one mutable row per task, reused across every emitted row: the
@@ -277,29 +276,29 @@ object TableCodec {
       // removes the per-row Array[Any] + per-value box churn that made
       // decode GC-bound at the default heap.
       val row = new SpecificInternalRow(outTypes)
-      it.flatMap(block => rowsOfBlock(block, names, dts, withShard = extra == 1, reuseRow = row))
+      it.flatMap(block => rowsOfBlock(block, names, dts, withShard, row, select(block)))
     }
-    InternalRowShim.createDataFrame(spark, rdd, outSchema)
+    val df = InternalRowShim.createDataFrame(blocks.sparkSession, rdd, outSchema)
+    if (flat eq schema) df else Nested.reassemble(df, schema, extraCols = shardColName.toSeq)
   }
 
-  /** Decode one block into InternalRows. `positions` (if non-null)
-    * gathers only those row indexes, in the given order — the
-    * index-gather fast path (cf. reference positional gather,
-    * python-blosc2 ctable_indexing.py gather constants). Every decoded
-    * column must hold exactly `block.nRows` values: a mismatch is a
-    * damaged block and throws, never a dropped or out-of-range row.
+  /** Decode one block into InternalRows: the rows at `positions`, in
+    * that order, or every row when `positions` is null; no column is
+    * decoded for an empty `positions`. Every decoded column must hold
+    * exactly `block.nRows` values: a mismatch is a damaged block and
+    * throws, never a dropped or out-of-range row.
     *
     * @param reuseRow every emitted row IS this instance, mutated in
-    *                 place (valid only until the next `next()`).
-    *                 Callers must sit behind a copying consumer —
-    *                 `InternalRowShim.createDataFrame` is one: its scan
-    *                 node projects each row to unsafe before anything
+    *                 place (valid only until the next `next()`), behind
+    *                 `InternalRowShim.createDataFrame`'s scan node,
+    *                 which projects each row to unsafe before anything
     *                 buffers it. When `withShard`, the row needs
     *                 `names.length + 1` fields.
     */
-  def rowsOfBlock(block: EncodedBlock, names: Array[String], dts: Array[DataType],
-                  withShard: Boolean, reuseRow: SpecificInternalRow,
-                  positions: Array[Int] = null): Iterator[InternalRow] = {
+  private def rowsOfBlock(block: EncodedBlock, names: Array[String], dts: Array[DataType],
+                          withShard: Boolean, reuseRow: SpecificInternalRow,
+                          positions: Array[Int]): Iterator[InternalRow] = {
+    if (positions != null && positions.isEmpty) return Iterator.empty
     val byName = block.cols.map(c => c.name -> c).toMap
     val vecs = names.map { n =>
       val v = decodeColumn(byName(n))

@@ -2,10 +2,11 @@ package graft.index
 
 import graft.encode.{MetaIndex, QueryCache, Snapshots, StoreLayout, TableCodec}
 import graft.encode.StoreLayout.Hits
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.InternalRowShim
 import org.apache.spark.sql.types._
 
 /** Persistent secondary indexes over the encoded block store — the
@@ -38,7 +39,7 @@ object IndexStore {
 
   def fullPath(storeDir: String, colName: String) = s"$storeDir/_index/full/$colName"
   def bucketPath(storeDir: String, colName: String) = s"$storeDir/_index/bucket/$colName"
-  def offsetsPath(storeDir: String) = s"$storeDir/_offsets"
+  def offsetsPath(storeDir: String) = s"$storeDir/_index/offsets"
 
   final case class LongEntry(key: Long, shard: Int, partId: Int, chunkId: Long, pos: Int)
   final case class StrEntry(key: String, shard: Int, partId: Int, chunkId: Long, pos: Int)
@@ -176,8 +177,9 @@ object IndexStore {
 
   /** FULL-index hit rows (shard, partId, chunkId, pos) of [lo, hi]. */
   private[index] def hitRows(spark: SparkSession, storeDir: String, schema: StructType,
-                              colName: String, lo: String, hi: String): DataFrame =
+                              colName: String, lo: String, hi: String): RDD[InternalRow] =
     readFullRange(spark, storeDir, schema, colName, lo, hi).select("shard", "partId", "chunkId", "pos")
+      .queryExecution.toRdd
 
   /** All hits of hit frame `df` (fields ordered as [[hitRows]]): one
     * collect, executed as `Dataset.collect` would, without the Row
@@ -210,36 +212,22 @@ object IndexStore {
     TableCodec.decode(blocks, schema).filter(MetaIndex.exactEq(schema, colName, value))
   }
 
-  /** Decode the given chunks and emit only the given positions.
-    * Operates on the FLAT (encoded) schema — struct columns are
-    * gathered as dotted leaves and reassembled at the end.
-    */
+  /** Decode the given chunks and emit only the given positions. */
   def gather(spark: SparkSession, storeDir: String, schema: StructType,
              posByChunk: Map[(Int, Int, Long), Array[Int]]): DataFrame = {
-    val flat = MetaIndex.flatOf(schema)
-    val names = flat.fieldNames
-    val dts = flat.fields.map(_.dataType)
-    val blocks = StoreLayout.readBlocksByKeys(spark, storeDir, posByChunk.keys.toSeq, names.toSeq)
+    val blocks = StoreLayout.readBlocksByKeys(spark, storeDir, posByChunk.keys.toSeq, TableCodec.encodedNames(schema))
     val bc = spark.sparkContext.broadcast(posByChunk)
-    val rdd = StoreLayout.blockRdd(blocks).mapPartitions { it =>
-      // reused mutable row — safe: createDataFrame's scan copies per row
-      val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(dts.toIndexedSeq)
-      it.flatMap { b =>
-        bc.value.get((b.shard, b.partId, b.chunkId)) match {
-          case Some(positions) => TableCodec.rowsOfBlock(b, names, dts, withShard = false, positions = positions, reuseRow = row)
-          case None => Iterator.empty
-        }
-      }
-    }
-    val df = InternalRowShim.createDataFrame(spark, rdd, flat)
-    if (flat eq schema) df else graft.encode.Nested.reassemble(df, schema)
+    TableCodec.decode(blocks, schema,
+      select = b => bc.value.getOrElse((b.shard, b.partId, b.chunkId), Array.emptyIntArray))
   }
 
   /** Persist running row offsets per chunk — a tiny metadata table
-    * (shard, partId, chunkId, nRows, startOff) beside the manifest, so
-    * positional reads never collect the full chunk listing to the
-    * driver (at 100 TB that listing is ~3M rows). Built lazily on first
-    * slice, dropped by CoW mutations (Lineage.dropDerived).
+    * (shard, partId, chunkId, nRows, startOff) under `_index` beside
+    * the indexes, so positional reads never collect the full chunk
+    * listing to the driver (at 100 TB that listing is ~3M rows). Built
+    * lazily on first slice, dropped with the indexes by CoW mutations
+    * (Lineage.dropDerived). It sits one level down: Spark's file
+    * listing ignores a read path whose last name starts with `_`.
     *
     * The running sum is DISTRIBUTED: per-shard totals (one tiny agg,
     * O(nShards) rows to the driver) prefix-summed into per-shard bases,

@@ -575,11 +575,9 @@ object Lineage {
     */
   private def dropDerived(spark: SparkSession, outDir: String): Unit = {
     graft.encode.QueryCache.invalidate(outDir)
-    Seq("_index", "_offsets").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/$d")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) { fs.delete(p, true); () }
-    }
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/_index")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
   private[lineage] def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {

@@ -26,7 +26,7 @@ class AnnStoreSpec extends SparkTestBase {
       .withColumn("embedding", col("embedding").cast("array<float>"))
   }
   private lazy val storeDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann").toString
+    val dir = tmpDir("ann")
     Similarity.writeBucketedStore(df, "vec_id", "embedding", dir, nPlanes = 8)
     dir
   }

@@ -11,7 +11,7 @@ class CatalogSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshCatalog(): Catalog =
-    new Catalog(spark, java.nio.file.Files.createTempDirectory("graft-cat").toString)
+    new Catalog(spark, tmpDir("cat"))
 
   private lazy val docs = (0 until 500).map(i => (i.toLong, s"text-$i", (i % 5).toString))
     .toDF("doc_id", "text", "lang")

@@ -55,6 +55,36 @@ class CodecSpec extends SparkTestBase {
     }
   }
 
+  test("getVarLong rejects an 11th byte and a 10th byte above 0x01") {
+    for (v <- Seq(-1L, Long.MinValue, Long.MaxValue)) {
+      val w = new Bytes.Writer()
+      w.putVarLong(v)
+      assert(new Bytes.Reader(w.result()).getVarLong() == v)
+    }
+    val eleven = Array.fill(10)(0x80.toByte) :+ 0x01.toByte
+    val tenthHigh = Array.fill(9)(0xff.toByte) :+ 0x02.toByte
+    for (bad <- Seq(eleven, tenthHigh))
+      intercept[IllegalArgumentException](new Bytes.Reader(bad).getVarLong())
+  }
+
+  private val entropyRaw = Array.tabulate[Byte](4000)(i => (i % 97).toByte)
+
+  test("a zstd frame that decodes short of its recorded length throws") {
+    val comp = Entropy.compress(Entropy.ZSTD, 3, entropyRaw)
+    assert(Entropy.decompress(Entropy.ZSTD, comp, entropyRaw.length).sameElements(entropyRaw))
+    val short = Entropy.compress(Entropy.ZSTD, 3, entropyRaw.take(10))
+    intercept[IllegalStateException](Entropy.decompress(Entropy.ZSTD, short, 20))
+  }
+
+  test("a short or truncated lz4 body throws instead of crashing the JVM") {
+    val comp = Entropy.compress(Entropy.LZ4, 3, entropyRaw)
+    assert(Entropy.decompress(Entropy.LZ4, comp, entropyRaw.length).sameElements(entropyRaw))
+    val short = Entropy.compress(Entropy.LZ4, 3, entropyRaw.take(10))
+    intercept[IllegalStateException](Entropy.decompress(Entropy.LZ4, short, 20))
+    for (cut <- Seq(1, 2, comp.length / 2))
+      intercept[Exception](Entropy.decompress(Entropy.LZ4, comp.dropRight(cut), entropyRaw.length))
+  }
+
   // ------------------------------------------------------------ fixtures
 
   private def arangeLongs(n: Int) = Array.tabulate(n)(_.toLong)

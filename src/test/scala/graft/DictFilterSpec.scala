@@ -16,7 +16,7 @@ class DictFilterSpec extends SparkTestBase {
   private lazy val df = Corpus.generate(spark, 2000, 4).toDF()
     .repartition(4, col("lang")).sortWithinPartitions("lang")
   private lazy val storeDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dict").toString
+    val dir = tmpDir("dict")
     graft.encode.StoreLayout.write(
       TableCodec.encode(df, chunkRows = 100), df.schema.fieldNames.toSeq, dir)
     dir

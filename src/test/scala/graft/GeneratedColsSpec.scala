@@ -14,7 +14,7 @@ class GeneratedColsSpec extends SparkTestBase {
   test("add + read: generated values match the expression on every row") {
     val df = (0 until 2000).map(i => (i.toLong, s"user$i", (i % 97).toLong))
       .toDF("id", "name", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-gen").toString
+    val dir = tmpDir("gen")
     Lineage.encodeResumable(spark, df, dir, idCols = Seq("id"), nShards = 8, nBatches = 2)
     GeneratedCols.add(spark, dir, df.schema, "v2", "v * 2 + length(name)", Seq("id"))
 
@@ -27,7 +27,7 @@ class GeneratedColsSpec extends SparkTestBase {
   test("updateWhere flags exactly the mutated shard stale; refresh recomputes only it") {
     val df = (0 until 2000).map(i => (i.toLong, s"user$i", (i % 97).toLong))
       .toDF("id", "name", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-gen").toString
+    val dir = tmpDir("gen")
     Lineage.encodeResumable(spark, df, dir, idCols = Seq("id"), nShards = 8, nBatches = 2)
     GeneratedCols.add(spark, dir, df.schema, "v2", "v * 2 + length(name)", Seq("id"))
 
@@ -71,7 +71,7 @@ class GeneratedColsSpec extends SparkTestBase {
     // 3 distinct keys over 8 shards → several shards are empty from the
     // start; the manifest must keep one row per shard regardless
     val df = (0 until 3).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-refresh").toString
+    val dir = tmpDir("refresh")
     Lineage.encodeResumable(spark, df, dir, idCols = Seq("id"), nShards = 8, nBatches = 1)
     assert(Lineage.storeShardCount(spark, dir).contains(8),
       "the manifest dropped empty shards — upsert would hash keys with the wrong modulus")

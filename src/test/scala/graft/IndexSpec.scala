@@ -25,7 +25,7 @@ class IndexSpec extends SparkTestBase {
   }
 
   private lazy val storeDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-index").toString
+    val dir = tmpDir("index")
     graft.encode.StoreLayout.write(
       TableCodec.encode(df, chunkRows = 100), df.schema.fieldNames.toSeq, dir)
     IndexStore.createFull(spark, dir, df.schema, "row_id")
@@ -193,7 +193,7 @@ class IndexSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.struct
     val nested = df.select(col("row_id"),
       struct(col("repo"), col("lang")).as("meta"), col("content"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-nested-idx").toString
+    val dir = tmpDir("nested-idx")
     graft.encode.StoreLayout.write(
       TableCodec.encode(nested, chunkRows = 100),
       TableCodec.encodedNames(nested.schema), dir)

@@ -35,7 +35,7 @@ class IvfSpec extends SparkTestBase {
 
   private lazy val cents = Ivf.train(df, "vec_id", "embedding", c = 4, iters = 4)
   private lazy val storeDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tmpDir("ivf")
     Ivf.writeIvfStore(df, "vec_id", "embedding", dir, cents)
     dir
   }

@@ -21,7 +21,7 @@ class MetaIndexSpec extends SparkTestBase {
   }
   private lazy val blocks = TableCodec.encode(df, chunkRows = 100).cache()
   private lazy val storeDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zonemap").toString
+    val dir = tmpDir("zonemap")
     graft.encode.StoreLayout.write(blocks, df.schema.fieldNames.toSeq, dir)
     dir
   }
@@ -116,7 +116,7 @@ class MetaIndexSpec extends SparkTestBase {
     import graft.lineage.Lineage
     // fresh store so mutation does not disturb the shared fixture
     val d2 = df.limit(600)
-    val dir = java.nio.file.Files.createTempDirectory("graft-qcache").toString
+    val dir = tmpDir("qcache")
     Lineage.encodeResumable(spark, d2, dir, idCols = Seq("repo", "path", "commit"),
       nShards = 4, nBatches = 1)
     val target = d2.select("lang").orderBy("lang").head().getString(0)
@@ -170,7 +170,7 @@ class MetaIndexSpec extends SparkTestBase {
       val v = if (i == 250) Double.NaN else if (i == 260) -1e9 else math.sin(i.toDouble) * 100
       (i.toLong, v)
     }.toDF("id", "v").coalesce(1)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-metaagg").toString
+    val dir2 = tmpDir("metaagg")
     StoreLayout.write(TableCodec.encode(dd, chunkRows = 100), dd.schema.fieldNames.toSeq, dir2)
     val (mnV, mxV) = MetaAgg.minMax(spark, dir2, dd.schema, "v")
     assert(mnV.contains(-1e9), s"fallback missed the NaN-chunk min: $mnV")
@@ -251,7 +251,7 @@ class MetaIndexSpec extends SparkTestBase {
       (i.toLong, v)
     }
     val dd = vals.toDF("id", "v").coalesce(1)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-metaagg-sum").toString
+    val dir2 = tmpDir("metaagg-sum")
     StoreLayout.write(TableCodec.encode(dd, chunkRows = 100), dd.schema.fieldNames.toSeq, dir2)
 
     // the middle chunk really is sum-dead (else this test proves nothing)
@@ -274,14 +274,14 @@ class MetaIndexSpec extends SparkTestBase {
 
     // all-null column → sum is SQL NULL, never 0
     val ddNull = (0 until 50).map(i => (i.toLong, null: java.lang.Long)).toDF("id", "v").coalesce(1)
-    val dir3 = java.nio.file.Files.createTempDirectory("graft-metaagg-null").toString
+    val dir3 = tmpDir("metaagg-null")
     StoreLayout.write(TableCodec.encode(ddNull, chunkRows = 20), ddNull.schema.fieldNames.toSeq, dir3)
     assert(MetaAgg.sumLong(spark, dir3, ddNull.schema, "v").isEmpty)
     assert(MetaAgg.stats(spark, dir3, null, Nil, Seq("v")).nonNull("v") == 0L)
 
     // float sums are order-dependent — pushdown must refuse, not lie
     val ddD = Seq((1L, 0.5), (2L, 1.5)).toDF("id", "v").coalesce(1)
-    val dir4 = java.nio.file.Files.createTempDirectory("graft-metaagg-dbl").toString
+    val dir4 = tmpDir("metaagg-dbl")
     StoreLayout.write(TableCodec.encode(ddD, chunkRows = 10), ddD.schema.fieldNames.toSeq, dir4)
     intercept[IllegalArgumentException] { MetaAgg.sumLong(spark, dir4, ddD.schema, "v") }
   }

@@ -293,7 +293,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("prebuildStores fails loudly on a missing input; a retry after the fix succeeds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prebuild")
+    val dir = java.nio.file.Paths.get(tmpDir("prebuild"))
     def copyIn(name: String): Unit =
       java.nio.file.Files.copy(java.nio.file.Paths.get(sf, name), dir.resolve(name))
     copyIn("documents.parquet")
@@ -308,7 +308,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("concurrent prebuildStores calls build each store once; a failed build is not kept") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prebuild2")
+    val dir = java.nio.file.Paths.get(tmpDir("prebuild2"))
     def copyIn(name: String): Unit =
       java.nio.file.Files.copy(java.nio.file.Paths.get(sf, name), dir.resolve(name))
     copyIn("documents.parquet")
@@ -363,7 +363,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("csv interop: write + read back preserves the documents table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/docs"
+    val dir = tmpDir("csv") + "/docs"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.write.option("header", "true").option("quoteAll", "true")
       .option("escape", "\"").csv(dir)

@@ -3,7 +3,6 @@ package graft
 import graft.encode.{Snapshots, TableCodec}
 import graft.lineage.Lineage
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Reader-snapshot safety for copy-on-write mutations (the reference's
   * SWMR refresh/`.b2lock` story, schunk.py:524-543, storage.py:211-231,
@@ -12,9 +11,6 @@ import java.nio.file.Files
   * version N, complete and unmixed, while a writer commits N+1.
   */
 class SnapshotsSpec extends SparkTestBase {
-
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
 
   private def rowHash(d: org.apache.spark.sql.DataFrame): Long =
     d.select(sum(crc32(sha2(concat_ws("|", d.columns.map(col): _*), 256)))).head().getLong(0)
@@ -98,7 +94,7 @@ class SnapshotsSpec extends SparkTestBase {
 
   test("query-cache version keys off the committed snapshot, not directory mtimes") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-snapver").toString
+    val out = tmpDir("snapver")
     val input = (0 until 400).map(i => (i.toLong, (i % 5).toString)).toDF("id", "tag")
     Lineage.encodeResumable(spark, input, out, Seq("id"), nShards = 4, nBatches = 1, chunkRows = 64)
 

@@ -1,13 +1,29 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
   * getOrCreate dedups across suites).
   */
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory `graft-<tag>…` under the system temp dir,
+    * deleted with everything in it when the suite ends.
+    */
+  protected def tmpDir(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$tag").toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => { org.apache.hadoop.fs.FileUtil.fullyDelete(d); () })
+    finally super.afterAll()
 
   /** Total task inputMetrics.bytesRead across `body`'s jobs. Parquet's
     * Hadoop vectored IO reads data pages through positioned range reads

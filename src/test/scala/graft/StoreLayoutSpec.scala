@@ -29,7 +29,7 @@ class StoreLayoutSpec extends SparkTestBase {
   }
 
   private lazy val storeDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val dir = tmpDir("layout")
     // lang-clustered files: each output file's single row group carries
     // one lang, so a pushed chunk-key predicate skips non-matching row
     // groups by stats (the file-count analog of row-group pruning in a
@@ -94,7 +94,7 @@ class StoreLayoutSpec extends SparkTestBase {
   test("recluster re-orders chunks decode-free: payloads bit-identical, index stays valid") {
     import spark.implicits._
     val input = (0L until 2000L).map(i => (i, i, s"body-$i-" + "y" * 40)).toDF("id", "v", "body")
-    val out = java.nio.file.Files.createTempDirectory("graft-recluster").toString
+    val out = tmpDir("recluster")
     graft.lineage.Lineage.encodeResumable(spark, input, out, Seq("id"),
       nShards = 4, nBatches = 1, chunkRows = 64)
     IndexStore.createFull(spark, out, input.schema, "v")
@@ -132,7 +132,7 @@ class StoreLayoutSpec extends SparkTestBase {
       (0 until 64).map(j => (c.toLong * 64 + j, cx * 1000L + j, cy * 1000L + (j * 7) % 64))
     }
     val input = rows.toDF("id", "x", "y").coalesce(1)
-    val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val out = tmpDir("zorder")
     graft.lineage.Lineage.encodeResumable(spark, input, out, Seq("id"),
       nShards = 1, nBatches = 1, chunkRows = 64)
 
@@ -187,7 +187,7 @@ class StoreLayoutSpec extends SparkTestBase {
     import graft.encode.{Bundle, Snapshots}
     val input = (0L until 1200L).map(i => (i, (i % 7).toString, s"text-$i-" + "z" * 30))
       .toDF("id", "tag", "body")
-    val out = java.nio.file.Files.createTempDirectory("graft-bundle-src").toString
+    val out = tmpDir("bundle-src")
     graft.lineage.Lineage.encodeResumable(spark, input, out, Seq("id"),
       nShards = 4, nBatches = 1, chunkRows = 128)
     // a CoW delete leaves superseded ORPHAN files beside the live ones
@@ -202,13 +202,13 @@ class StoreLayoutSpec extends SparkTestBase {
     val physical = Snapshots.dataFiles(spark, out).toSet
     assert((physical -- live).nonEmpty, "fixture needs orphans to prove exclusion")
 
-    val bundleFile = java.nio.file.Files.createTempDirectory("graft-bundle").toString + "/s.b2d"
+    val bundleFile = tmpDir("bundle") + "/s.b2d"
     val (nFiles, bytes) = Bundle.pack(spark, out, bundleFile)
     assert(nFiles > 0 && bytes > 0)
     val packed = Bundle.manifest(spark, out).toSet
     assert((physical -- live).forall(o => !packed.contains(o)), "orphan file packed")
 
-    val dst = java.nio.file.Files.createTempDirectory("graft-bundle-dst").toString + "/store"
+    val dst = tmpDir("bundle-dst") + "/store"
     val (uFiles, uBytes) = Bundle.unpack(spark, bundleFile, dst)
     assert(uFiles == nFiles && uBytes == bytes)
     // the unpacked store serves the SAME rows as the live source version
@@ -227,7 +227,7 @@ class StoreLayoutSpec extends SparkTestBase {
     raw(raw.length / 2) = (raw(raw.length / 2) ^ 0x5a).toByte
     val corrupt = bundleFile + ".bad"
     java.nio.file.Files.write(java.nio.file.Paths.get(corrupt), raw)
-    val dst2 = java.nio.file.Files.createTempDirectory("graft-bundle-bad").toString + "/store"
+    val dst2 = tmpDir("bundle-bad") + "/store"
     intercept[Exception](Bundle.unpack(spark, corrupt, dst2))
   }
 

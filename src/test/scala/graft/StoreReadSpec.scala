@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.Corpus
 import graft.encode.{MetaAgg, MetaIndex, QueryCache, Snapshots, StoreLayout, TableCodec}
-import graft.index.{IndexStore, Planner}
+import graft.index.{DictFilter, IndexStore, Planner}
 import graft.lineage.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -14,9 +14,6 @@ import org.apache.spark.sql.types.DecimalType
   * driver cache's invalidation rule.
   */
 class StoreReadSpec extends SparkTestBase {
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
 
   private def writeStore(df: DataFrame, chunkRows: Int): String = {
     val dir = tmpDir("storeread")
@@ -112,6 +109,10 @@ class StoreReadSpec extends SparkTestBase {
       wide, "bucketProbe(s = const)")
   }
 
+  test("over-cap isinScan equals the raw filter through one full-width pass") {
+    assertSameRows(DictFilter.isinScan(spark, wideDir, wide.schema, "s", Seq("const")), wide, "isinScan(s = const)")
+  }
+
   test("over-cap MetaAgg fallbacks equal the raw aggregates") {
     val mm = MetaAgg.minMaxAll(spark, wideDir, wide.schema, Seq("d", "s", "big"))
     val finite = wide.filter(!isnan(col("d")))
@@ -204,7 +205,7 @@ class StoreReadSpec extends SparkTestBase {
     */
   private val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "plan" -> 1, "lookup.cold" -> 3, "lookup.warm" -> 1,
     "queryAnd" -> 3, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 2,
-    "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 6)
+    "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 6, "isin" -> 2, "wide.isin" -> 3)
 
   test("probe entry points run the pinned number of Spark jobs") {
     val schema = corpus.schema
@@ -227,6 +228,7 @@ class StoreReadSpec extends SparkTestBase {
       IndexStore.bucketProbe(spark, corpusDir, schema, "repo", repo).collect())
     counts("minMaxAll.fallback") = jobs("minmax")(
       MetaAgg.minMaxAll(spark, corpusDir, schema, Seq("repo", "content")))
+    counts("isin") = jobs("isin")(DictFilter.isinScan(spark, corpusDir, schema, "repo", Seq(repo)).collect())
     // over the cap
     counts("wide.lookup.warm") = {
       MetaIndex.lookup(spark, wideDir, wide.schema, "s", "const", "const").collect()
@@ -239,6 +241,7 @@ class StoreReadSpec extends SparkTestBase {
 
     counts("wide.minMaxAll") = jobs("wide-minmax")(
       MetaAgg.minMaxAll(spark, wideDir, wide.schema, Seq("d", "s", "big")))
+    counts("wide.isin") = jobs("wide-isin")(DictFilter.isinScan(spark, wideDir, wide.schema, "s", Seq("const")).count())
     assert(counts.toMap == pinned)
   }
 
@@ -369,9 +372,11 @@ class StoreReadSpec extends SparkTestBase {
     .select(col("id").cast("int").as("shard"), lit(0).as("partId"), col("id").as("chunkId"))
 
   /** FULL-index-shaped hit rows, 100 positions a chunk, over 8 partitions. */
-  private def hitRows(n: Long): DataFrame = spark.range(0, n, 1, 8)
+  private def hitFrame(n: Long): DataFrame = spark.range(0, n, 1, 8)
     .select(lit(1).as("shard"), lit(0).as("partId"), (col("id") / 100).cast("long").as("chunkId"),
       (col("id") % 100).cast("int").as("pos"))
+
+  private def hitRows(n: Long) = hitFrame(n).queryExecution.toRdd
 
   private def keysOf(ids: Seq[Long]) = ids.map(i => (i.toInt, 0, i))
 
@@ -398,13 +403,16 @@ class StoreReadSpec extends SparkTestBase {
     assert(StoreLayout.probe(chunkRows(10), Seq(lit(true)), Some(hitRows(gcap + 1))).hits.isEmpty)
     assert(jobs("probe-hits")(assert(StoreLayout.probe(chunkRows(10), Seq(lit(true)), Some(hitRows(gcap + 1)))
       .hits.isEmpty)) == 1)
+    // no hit column and no counts: the hits alone, the metadata never scanned
+    val alone = StoreLayout.probe(chunkRows(10), Nil, Some(hitRows(gcap)), needCounts = false)
+    assert(alone.hits.map(_.size) == Some(gcap.toInt) && alone.total == 0L)
 
     // a failing task is rethrown, on either side
     val boom = raise_error(lit("boom"))
     val errs = Seq(
       intercept[Exception](StoreLayout.probe(chunkRows(10), Seq(boom.isNull))),
       intercept[Exception](StoreLayout.probe(chunkRows(10), Seq(lit(true)),
-        Some(hitRows(10).withColumn("pos", boom.cast("int"))), needCounts = false)))
+        Some(hitFrame(10).withColumn("pos", boom.cast("int")).queryExecution.toRdd), needCounts = false)))
     errs.foreach(e => assert(e.getMessage.contains("boom"), e.getMessage))
   }
 

@@ -17,7 +17,7 @@ class UpsertJoinSpec extends SparkTestBase {
 
   private def freshStore(n: Int): String = {
     val df = (0 until n).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-upjoin").toString
+    val dir = tmpDir("upjoin")
     Lineage.encodeResumable(spark, df, dir, idCols = Seq("id"), nShards = 4, nBatches = 1)
     dir
   }
