@@ -65,15 +65,15 @@ object MetaAgg {
   private def sumFallbackE(c: String): Column =
     col(s"${fld(c)}.sumKey") === "" && col(s"${fld(c)}.nNulls") < col("nRows")
 
-  /** Decode ONLY `colName`'s column of the fallback chunks
-    * (StoreLayout.readChunks: `keys` pushed into the parquet scan, or a
-    * left-semi join on the lazy key frame `cand` when they were too
+  /** Decode ONLY `colName`'s column of the fallback chunks, those
+    * `flagged` (StoreLayout.readChunks: `keys` pushed into the parquet
+    * scan, or the store scan filtered by `flagged` when they were too
     * many to push).
     */
   private def decodeChunks(spark: SparkSession, storeDir: String, schema: StructType,
-                           colName: String, cand: => DataFrame,
+                           colName: String, flagged: Column,
                            keys: Option[Seq[(Int, Int, Long)]]): DataFrame =
-    TableCodec.decode(StoreLayout.readChunks(spark, storeDir, cand, keys, Seq(colName)),
+    TableCodec.decode(StoreLayout.readChunks(spark, storeDir, keys, Seq(colName))(_.filter(flagged)),
       StructType(Seq(MetaIndex.flatOf(schema)(colName))))
 
   /** Fallback-chunk keys per column, each bounded INDEPENDENTLY, from
@@ -81,7 +81,7 @@ object MetaAgg {
     * ([[StoreLayout.probe]]): a column with few (or zero) fallback
     * chunks keeps its pushed keys when a sibling column overflows the
     * cap. Result per column: Some(keys) (possibly empty = skip the
-    * decode branch entirely) or None (= decode via semi-join on `cond`).
+    * decode branch entirely) or None (= decode the store rows `cond` flags).
     */
   private def fallbackKeys(meta: DataFrame, conds: Seq[(String, Column)]):
       Map[String, Option[Seq[(Int, Int, Long)]]] =
@@ -154,7 +154,7 @@ object MetaAgg {
           else BigInt(row.getDecimal(1 + i * 3).toBigIntegerExact) // decimal(38,0) — no fraction
         val nFb = if (row.isNullAt(1 + i * 3 + 2)) 0L else row.getLong(1 + i * 3 + 2)
         if (nFb > 0L) {
-          val decoded = decodeChunks(spark, storeDir, schema, c, meta.filter(sumFallbackE(c)), fbKeys(c))
+          val decoded = decodeChunks(spark, storeDir, schema, c, sumFallbackE(c), fbKeys(c))
           val dt = MetaIndex.flatOf(schema)(c).dataType
           val v = dt match {
             case BooleanType => when(col(c), 1L).otherwise(0L).cast(DecimalType(38, 0))
@@ -239,7 +239,7 @@ object MetaAgg {
     val decodedParts = cols.flatMap { c =>
       val decoded =
         if (deadKeys(c).exists(_.isEmpty)) None
-        else Some(decodeChunks(spark, storeDir, schema, c, meta.filter(!aliveE(c)), deadKeys(c)))
+        else Some(decodeChunks(spark, storeDir, schema, c, !aliveE(c), deadKeys(c)))
       decoded.map { df =>
         val domain = MetaIndex.flatOf(schema)(c).dataType match {
           case BooleanType => when(col(c), "1").otherwise("0")
@@ -319,7 +319,7 @@ object MetaAgg {
       val nUnb = if (row.isNullAt(1 + i * 3 + 2)) 0L else row.getLong(1 + i * 3 + 2)
       if (nUnb == 0L) c -> (boundedMin, boundedMax)
       else {
-        val decoded = decodeChunks(spark, storeDir, schema, c, meta.filter(unboundedE(c)), fbKeys(c))
+        val decoded = decodeChunks(spark, storeDir, schema, c, unboundedE(c), fbKeys(c))
         c -> foldDecoded(decoded, c, dts(c), boundedMin, boundedMax)
       }
     }.toMap

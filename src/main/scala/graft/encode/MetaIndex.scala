@@ -1,7 +1,7 @@
 package graft.encode
 
 import graft.lineage.Lineage
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * over 100 TB reads O(chunks) tiny metadata rows. Survivor chunks are
   * then fetched with a pushable key predicate (shard is a partition
   * dir → directory pruning; partId/chunkId hit row-group stats), and
-  * only those payloads are decoded.
+  * only those payloads are decoded; past the key cap the store scan is
+  * filtered by the zone hit itself.
   *
   * Zone-key semantics (must match ColBuilder): string keys compare in
   * UTF-8 byte order (Spark string compare is UTF8String binary order);
@@ -35,26 +36,27 @@ object MetaIndex {
     "bigint", "int", "smallint", "tinyint", "boolean",
     "double", "float", "date", "timestamp", "timestamp_ntz")
 
-  /** Does zone [minKey, maxKey] intersect the range [lo, hi]? A `None`
-    * side is unbounded (one-sided predicates `x >= lo` / `x <= hi`;
-    * strict inequalities use the closed form — conservative, may admit
-    * a boundary-only chunk that the exact filter removes). An empty key
-    * is an unbounded zone side. Compare is dt-aware: numeric/temporal
-    * zones compare as doubles — rounding is monotonic, so drift near
-    * 2^53 can only ADMIT extra chunks, never wrongly prune — and
-    * string zones in UTF-8 byte order.
+  /** Does zone [minKey, maxKey] intersect the range [lo, hi] (string
+    * expressions in the zone-key domain)? A `None` side is unbounded
+    * (one-sided predicates `x >= lo` / `x <= hi`; strict inequalities
+    * use the closed form — conservative, may admit a boundary-only
+    * chunk that the exact filter removes). An empty key is an unbounded
+    * zone side. Compare is dt-aware: numeric/temporal zones compare as
+    * doubles — rounding is monotonic, so drift near 2^53 can only ADMIT
+    * extra chunks, never wrongly prune — and string zones in UTF-8 byte
+    * order.
     */
   def zoneHit(minKey: Column, maxKey: Column, dt: Column,
-              lo: Option[String], hi: Option[String]): Column = {
+              lo: Option[Column], hi: Option[Column]): Column = {
     def all(cs: Seq[Column]): Column = cs.reduceOption(_ && _).getOrElse(lit(true))
     val unbounded = minKey === "" && maxKey === ""
     val isNum = dt.isin(numericDts: _*) || dt.startsWith("decimal")
     val minD = when(minKey === "", lit(Double.NegativeInfinity)).otherwise(minKey.cast("double"))
     val maxD = when(maxKey === "", lit(Double.PositiveInfinity)).otherwise(maxKey.cast("double"))
-    val numHit = all(lo.map(l => maxD >= lit(l).cast("double")).toSeq ++
-      hi.map(h => minD <= lit(h).cast("double")))
-    val strHit = all(lo.map(l => maxKey === "" || maxKey >= lit(l)).toSeq ++
-      hi.map(h => minKey === "" || minKey <= lit(h)))
+    val numHit = all(lo.map(l => maxD >= l.cast("double")).toSeq ++
+      hi.map(h => minD <= h.cast("double")))
+    val strHit = all(lo.map(l => maxKey === "" || maxKey >= l).toSeq ++
+      hi.map(h => minKey === "" || minKey <= h))
     unbounded || when(isNum, numHit).otherwise(strHit)
   }
 
@@ -63,23 +65,18 @@ object MetaIndex {
     */
   def zoneHitOn(colName: String, lo: Option[String], hi: Option[String]): Column = {
     val f = StoreLayout.fieldName(colName)
-    zoneHit(col(s"$f.minKey"), col(s"$f.maxKey"), col(s"$f.dt"), lo, hi)
+    zoneHit(col(s"$f.minKey"), col(s"$f.maxKey"), col(s"$f.dt"), lo.map(lit), hi.map(lit))
   }
 
-  /** Chunk keys whose zone on `colName` intersects [lo, hi] — a
-    * metadata-only query.
+  /** Does the zone of `colName` hold any of `values` (zone-key domain)?
+    * One expression over a literal array, whatever the list's length:
+    * a chain of one [[zoneHitOn]] per value outgrows codegen's method
+    * limit and, at thousands of values, the stack.
     */
-  def candidateKeys(spark: SparkSession, storeDir: String, colName: String,
-                    lo: String, hi: String): DataFrame =
-    candidateKeysAnd(spark, storeDir, Seq(zoneHitOn(colName, Some(lo), Some(hi))))
-
-  /** Chunk keys (shard, partId, chunkId) passing EVERY zone hit — the
-    * multi-column candidate intersection as ONE metadata scan with a
-    * conjunctive filter (each chunk row holds all columns' zone
-    * structs): no join, no extra scan per predicate column.
-    */
-  def candidateKeysAnd(spark: SparkSession, storeDir: String, hits: Seq[Column]): DataFrame =
-    Snapshots.storeDf(spark, storeDir).filter(hits.reduce(_ && _)).select("shard", "partId", "chunkId")
+  def zoneHitAny(colName: String, values: Seq[String]): Column = {
+    val f = StoreLayout.fieldName(colName)
+    exists(lit(values.toArray), v => zoneHit(col(s"$f.minKey"), col(s"$f.maxKey"), col(s"$f.dt"), Some(v), Some(v)))
+  }
 
   /** The QueryCache key of [lo, hi] on `colName`'s candidate chunk keys
     * at the store's current version. Take it BEFORE the scan whose keys
@@ -144,13 +141,13 @@ object MetaIndex {
     lookupKeys(spark, storeDir, schema, colName, lo, hi, cachedCandidates(spark, storeDir, colName, lo, hi))
 
   /** [[lookup]] over candidate keys the caller already holds (`None`:
-    * too many to push, read by left-semi join on the candidate scan).
+    * too many to push, the store read filtered by the zone hit).
     */
   private[graft] def lookupKeys(spark: SparkSession, storeDir: String, schema: StructType, colName: String,
                                  lo: String, hi: String, keys: Option[Seq[(Int, Int, Long)]]): DataFrame =
     TableCodec.decode(
-      StoreLayout.readChunks(spark, storeDir, candidateKeys(spark, storeDir, colName, lo, hi),
-        keys, TableCodec.encodedNames(schema)), schema)
+      StoreLayout.readChunks(spark, storeDir, keys, TableCodec.encodedNames(schema))(
+        _.filter(zoneHitOn(colName, Some(lo), Some(hi)))), schema)
       .filter(exactRange(schema, colName, lo, hi))
 
   /** Pruning stats for a predicate: (candidate chunks, total chunks) —
@@ -165,29 +162,6 @@ object MetaIndex {
         coalesce(sum(zoneHitOn(colName, Some(lo), Some(hi)).cast("long")), lit(0L)).as("cand"))
       .head()
     (row.getLong(1), row.getLong(0))
-  }
-
-  /** In-memory variant retained for Dataset-level pipelines (tests,
-    * ad-hoc): prunes on the already-deserialized metadata. For stores
-    * on disk prefer the storeDir API above, which never reads payloads.
-    */
-  def candidateBlocks(blocks: Dataset[EncodedBlock], colName: String,
-                      lo: String, hi: String): Dataset[EncodedBlock] = {
-    blocks.filter { b =>
-      b.cols.find(_.name == colName).forall { c =>
-        val numeric = numericDts.contains(c.dt) || c.dt.startsWith("decimal")
-        if (c.minKey.isEmpty && c.maxKey.isEmpty) true
-        else if (numeric) {
-          val minV = if (c.minKey.isEmpty) Double.NegativeInfinity else c.minKey.toDouble
-          val maxV = if (c.maxKey.isEmpty) Double.PositiveInfinity else c.maxKey.toDouble
-          !(maxV < lo.toDouble || minV > hi.toDouble)
-        } else {
-          import java.nio.charset.StandardCharsets.UTF_8
-          def cmp(a: String, b: String) = java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
-          (c.maxKey.isEmpty || cmp(c.maxKey, lo) >= 0) && (c.minKey.isEmpty || cmp(c.minKey, hi) <= 0)
-        }
-      }
-    }
   }
 
   /** Convenience: build a store for `df` at `storeDir` (idempotent via

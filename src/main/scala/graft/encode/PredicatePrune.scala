@@ -1,9 +1,8 @@
 package graft.encode
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Conservative zone-map pruning for ARBITRARY `Column` predicates —
@@ -118,13 +117,18 @@ object PredicatePrune {
 
   /** One conjunct → a zone hit over its column's chunk-struct leaves. */
   private def zoneHit(e: Expression, flat: StructType): Option[Column] = {
-    def mk(attr: Expression, l: Literal)(lo: String => Option[String],
-                                         hi: String => Option[String]): Option[Column] =
+    def domain(attr: Expression, ls: Seq[Literal]): Option[(String, Seq[String])] =
       for {
         n <- stripAttr(attr)
         field <- flat.fields.find(_.name == n)
-        d <- domainValue(l, field.dataType)
-      } yield MetaIndex.zoneHitOn(n, lo(d), hi(d))
+        ds = ls.flatMap(domainValue(_, field.dataType))
+        // every literal must be extractable: a list only partly covered
+        // would prune unsoundly
+        if ds.size == ls.size
+      } yield (n, ds)
+    def mk(attr: Expression, l: Literal)(lo: String => Option[String],
+                                         hi: String => Option[String]): Option[Column] =
+      domain(attr, Seq(l)).map { case (n, Seq(d)) => MetaIndex.zoneHitOn(n, lo(d), hi(d)) }
     def eq(a: Expression, l: Literal) = mk(a, l)(Some(_), Some(_))
     def atLeast(a: Expression, l: Literal) = mk(a, l)(Some(_), _ => None)
     def atMost(a: Expression, l: Literal) = mk(a, l)(_ => None, Some(_))
@@ -145,25 +149,19 @@ object PredicatePrune {
       case GreaterThan(l: Literal, a) => atMost(a, l)
       case GreaterThanOrEqual(l: Literal, a) => atMost(a, l)
       case In(a, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val hits = vs.map(v => eq(a, v.asInstanceOf[Literal]))
-        // every IN value must be extractable, else the list is only
-        // partially covered and pruning on it would be unsound
-        if (hits.forall(_.isDefined)) Some(hits.flatten.reduce(_ || _)) else None
+        domain(a, vs.map(_.asInstanceOf[Literal])).map { case (n, ds) => MetaIndex.zoneHitAny(n, ds) }
       case _ => None
     }
   }
 
-  /** Chunk keys (shard, partId, chunkId) that may contain a row
-    * matching `predicate` — metadata-only (zone leaves, no payloads),
-    * one scan with every extractable conjunct's zone hit ANDed. None
-    * when nothing in the predicate is zone-extractable (caller falls
-    * back to a full pass).
+  /** The zone hit of `predicate`: every extractable conjunct's hit
+    * ANDed over the chunk-struct leaves (metadata only, no payloads).
+    * None when nothing in the predicate is zone-extractable (the caller
+    * falls back to a full pass).
     */
-  def candidateChunks(spark: SparkSession, storeDir: String,
-                      schema: StructType, predicate: Column): Option[DataFrame] = {
+  private[graft] def zoneHitOf(spark: SparkSession, schema: StructType, predicate: Column): Option[Column] = {
     val flat = MetaIndex.flatOf(schema)
-    val hits = conjuncts(resolve(spark, schema, predicate)).flatMap(zoneHit(_, flat))
-    if (hits.isEmpty) None else Some(MetaIndex.candidateKeysAnd(spark, storeDir, hits))
+    conjuncts(resolve(spark, schema, predicate)).flatMap(zoneHit(_, flat)).reduceOption(_ && _)
   }
 
   /** Top-level column names the predicate references, iff ALL of them
@@ -178,16 +176,18 @@ object PredicatePrune {
     if (refs.nonEmpty && refs.forall(top.contains)) Some(refs) else None
   }
 
-  /** Blocks that may contain a predicate-matching row: candidate chunks
-    * when the predicate is zone-extractable (StoreLayout.readChunks:
-    * few → pushed chunk keys, many → left-semi join), the whole store
-    * otherwise. `names` restricts the columns read.
+  /** Blocks that may contain a predicate-matching row: the chunks its
+    * zone hit names when the predicate is zone-extractable (one probe
+    * job, then StoreLayout.readChunks: few → pushed chunk keys, many →
+    * the store scan filtered by the hit), the whole store otherwise.
+    * `names` restricts the columns read.
     */
   def candidateBlocks(spark: SparkSession, storeDir: String, schema: StructType,
                       predicate: Column, names: Seq[String]): Dataset[EncodedBlock] =
-    candidateChunks(spark, storeDir, schema, predicate) match {
+    zoneHitOf(spark, schema, predicate) match {
       case None => StoreLayout.readBlocks(spark, storeDir, names)
-      case Some(cand) => StoreLayout.readChunks(spark, storeDir, cand,
-        StoreLayout.probe(cand, Seq(lit(true)), needCounts = false).keys.head, names)
+      case Some(hit) =>
+        val keys = StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(hit), needCounts = false).keys.head
+        StoreLayout.readChunks(spark, storeDir, keys, names)(_.filter(hit))
     }
 }

@@ -170,7 +170,7 @@ object StoreLayout {
 
   /** How many candidate chunk keys a read pushes into the parquet scan
     * as an OR-of-ANDs predicate. Above this the read is not selective,
-    * and the honest plan is a store scan + left-semi join.
+    * and the honest plan is a filtered store scan ([[readChunks]]).
     */
   val MAX_PUSHDOWN_KEYS = 1024
 
@@ -293,23 +293,22 @@ object StoreLayout {
     assemble(filtered, fieldsOf(df.schema, names))
   }
 
-  /** Read the chunks candidate frame `cand` names, carrying only
-    * `names`' columns (null = all): `keys` (from a [[probe]])
-    * pushed into the parquet scan when there are at most
-    * MAX_PUSHDOWN_KEYS of them, else — `None` or more keys — a
-    * left-semi join of the store on `cand` (the read touches most of
-    * the store anyway). `cand` is only built for the join.
+  /** Read the candidate chunks of a [[probe]], carrying only `names`'
+    * columns (null = all): `keys` pushed into the parquet scan when
+    * there are at most MAX_PUSHDOWN_KEYS of them, else — `None` or more
+    * keys — the store rows `overCap` keeps: a zone read filters by its
+    * own zone hit, a read whose candidates are not store rows
+    * semi-joins them ([[semiJoin]]).
     */
-  def readChunks(spark: SparkSession, storeDir: String, cand: => DataFrame,
-                 keys: Option[Seq[(Int, Int, Long)]], names: Seq[String]): Dataset[EncodedBlock] = {
+  def readChunks(spark: SparkSession, storeDir: String, keys: Option[Seq[(Int, Int, Long)]],
+                 names: Seq[String])(overCap: DataFrame => DataFrame): Dataset[EncodedBlock] = {
     val df = Snapshots.storeDf(spark, storeDir)
-    keys match {
-      case Some(ks) if ks.size <= MAX_PUSHDOWN_KEYS => assemble(pushKeys(df, ks), fieldsOf(df.schema, names))
-      case _ =>
-        val keyCols = Seq("shard", "partId", "chunkId")
-        assemble(df.join(cand.select(keyCols.map(col): _*), keyCols, "left_semi"), fieldsOf(df.schema, names))
-    }
+    assemble(keys.filter(_.size <= MAX_PUSHDOWN_KEYS).fold(overCap(df))(pushKeys(df, _)), fieldsOf(df.schema, names))
   }
+
+  /** Store rows `df` whose chunk key is in `cand`, built only when read. */
+  private[graft] def semiJoin(cand: => DataFrame)(df: DataFrame): DataFrame =
+    df.join(cand.select("shard", "partId", "chunkId"), Seq("shard", "partId", "chunkId"), "left_semi")
 
   /** Store rows `df` filtered to `keys` with the key predicate pushed
     * into the parquet scan (shard → partition-dir pruning, partId/
@@ -334,8 +333,7 @@ object StoreLayout {
     */
   def readBlocksByKeys(spark: SparkSession, storeDir: String, keys: Seq[(Int, Int, Long)],
                        names: Seq[String] = null): Dataset[EncodedBlock] =
-    readChunks(spark, storeDir, spark.createDataFrame(keys).toDF("shard", "partId", "chunkId"),
-      Some(keys), names)
+    readChunks(spark, storeDir, Some(keys), names)(semiJoin(spark.createDataFrame(keys).toDF("shard", "partId", "chunkId")))
 
   /** Decode-free physical recluster — the reference's `reorder_offsets`
     * (python-blosc2 schunk.py:1055: permute chunks WITHOUT

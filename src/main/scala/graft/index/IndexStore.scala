@@ -3,7 +3,7 @@ package graft.index
 import graft.encode.{MetaIndex, QueryCache, Snapshots, StoreLayout, TableCodec}
 import graft.encode.StoreLayout.Hits
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,7 +208,8 @@ object IndexStore {
     val cand = QueryCache.relation(spark, bp)(spark.read.parquet(bp))
       .filter(col("bucket") === bk) // pushed → row-group skip
     val keys = StoreLayout.probe(cand, Seq(lit(true)), needCounts = false).keys.head
-    val blocks = StoreLayout.readChunks(spark, storeDir, cand, keys, TableCodec.encodedNames(schema))
+    val blocks = StoreLayout.readChunks(spark, storeDir, keys, TableCodec.encodedNames(schema))(
+      StoreLayout.semiJoin(cand))
     TableCodec.decode(blocks, schema).filter(MetaIndex.exactEq(schema, colName, value))
   }
 
@@ -468,23 +469,14 @@ object Planner {
     (df, choice)
   }
 
-  /** Metadata-only intersection of zone candidate sets across the
-    * predicates' columns (each set is a narrow chunk-key frame; the
-    * joins never touch a payload leaf).
-    */
-  def candidatesAnd(spark: SparkSession, storeDir: String, preds: Seq[Pred]): DataFrame =
-    MetaIndex.candidateKeysAnd(spark, storeDir, preds.map(zoneHit))
-
-  private def zoneHit(p: Pred): Column = MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))
-
   /** Execute an AND-of-range-predicates query over the encoded store:
     * ONE probe job takes the chunks passing every predicate's zone hit
     * and the hits of the first predicate with a FULL index; the hits
     * inside those chunks are gathered by position, and every predicate
     * is exact-filtered on the decoded rows. Falls back to a
-    * candidate-chunk scan when there is no index, or the chunks or the
-    * hits are too many for pushed keys or a gather. One Spark job
-    * before the read.
+    * candidate-chunk read when there is no index, or the chunks or the
+    * hits are too many for a gather (past the key cap, the store scan
+    * filtered by the zone hit). One Spark job before the read.
     */
   def queryAnd(spark: SparkSession, storeDir: String, schema: StructType,
                preds: Seq[Pred]): DataFrame = {
@@ -492,15 +484,15 @@ object Planner {
     val exactAll = preds.map(p => MetaIndex.exactRange(schema, p.colName, p.lo, p.hi)).reduce(_ && _)
     val index = preds.find(p => IndexStore.hasFull(spark, storeDir, p.colName))
       .map(ip => IndexStore.hitRows(spark, storeDir, schema, ip.colName, ip.lo, ip.hi))
-    val p = StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(preds.map(zoneHit).reduce(_ && _)), index,
-      needCounts = false)
+    val hit = preds.map(p => MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi))).reduce(_ && _)
+    val p = StoreLayout.probe(Snapshots.storeDf(spark, storeDir), Seq(hit), index, needCounts = false)
     (p.keys.head, p.hits) match {
       case (Some(keys), Some(hits)) =>
         val keySet = keys.toSet
         IndexStore.gather(spark, storeDir, schema, hits.byChunk.filter { case (c, _) => keySet(c) }).filter(exactAll)
       case (keys, _) =>
-        TableCodec.decode(StoreLayout.readChunks(spark, storeDir, candidatesAnd(spark, storeDir, preds), keys,
-          TableCodec.encodedNames(schema)), schema).filter(exactAll)
+        TableCodec.decode(StoreLayout.readChunks(spark, storeDir, keys, TableCodec.encodedNames(schema))(
+          _.filter(hit)), schema).filter(exactAll)
     }
   }
 }

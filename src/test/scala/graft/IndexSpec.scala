@@ -177,8 +177,9 @@ class IndexSpec extends SparkTestBase {
     // row_id 350-1049 → chunks 3-10; grp=1 ⇔ row_id 700-1399 → chunks
     // 7-13; the intersection (7-10) is strictly smaller than both
     val preds = Seq(Planner.Pred("row_id", "350", "1049"), Planner.Pred("grp", "1", "1"))
-    val andChunks = Planner.candidatesAnd(spark, storeDir, preds).count()
-    val singles = preds.map(p => graft.encode.MetaIndex.candidateKeys(spark, storeDir, p.colName, p.lo, p.hi).count())
+    val Seq(p1, p2) = preds.map(p => graft.encode.MetaIndex.zoneHitOn(p.colName, Some(p.lo), Some(p.hi)))
+    val andChunks +: singles = graft.encode.StoreLayout.probe(
+      graft.encode.Snapshots.storeDf(spark, storeDir), Seq(p1 && p2, p1, p2)).cand
     assert(singles.size == 2 && singles.forall(andChunks < _), s"and=$andChunks singles=$singles")
     val res = Planner.queryAnd(spark, storeDir, df.schema, preds)
     val expect = df.filter(col("row_id").between(350, 1049) && col("grp") === 1)

@@ -48,8 +48,8 @@ class MetaIndexSpec extends SparkTestBase {
     val keys = StoreLayout.probe(Snapshots.storeDf(spark, storeDir),
       Seq(MetaIndex.zoneHitOn("repo", Some(target), Some(target))), needCounts = false).keys.head
     assert(keys.exists(_.nonEmpty), s"a selective range must have pushable keys: $keys")
-    val cand = StoreLayout.readChunks(spark, storeDir,
-      MetaIndex.candidateKeys(spark, storeDir, "repo", target, target), keys, null)
+    val cand = StoreLayout.readChunks(spark, storeDir, keys, null)(
+      _.filter(MetaIndex.zoneHitOn("repo", Some(target), Some(target))))
     val fetchPlan = cand.queryExecution.executedPlan.toString
     assert(fetchPlan.contains("PushedFilters: [") && fetchPlan.contains("chunkId"),
       s"candidate fetch must push chunk keys:\n$fetchPlan")
@@ -63,9 +63,9 @@ class MetaIndexSpec extends SparkTestBase {
     val viaNum = MetaIndex.lookup(spark, storeDir, df.schema, "row_id", "100", "199")
     val expNum = df.filter(col("row_id").between(100, 199)).count()
     assert(viaNum.count() == expNum)
-    // in-memory Dataset variant still prunes identically
+    // the in-memory reference on the typed blocks prunes identically
     val target = df.select("repo").orderBy("repo").head().getString(0)
-    val memCand = MetaIndex.candidateBlocks(blocks, "repo", target, target).count()
+    val memCand = SparkTestBase.zoneCandidates(blocks, "repo", target, target).count()
     val (storeCand, _) = MetaIndex.pruningStats(spark, storeDir, "repo", target, target)
     assert(memCand == storeCand)
   }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.encode.EncodedBlock
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,21 +70,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     }).groupMapReduce(_._1)(_._2)(_ ++ _)
   }
 
-  /** The zone pass of [lo, hi] on `colName` maps zone leaves only, in
-    * both scans that run it: `MetaIndex.candidateKeys` and the rows of
-    * the `StoreLayout.probe` a lookup runs.
+  /** The zone pass of [lo, hi] on `colName` maps zone leaves only: the
+    * rows of the `StoreLayout.probe` a lookup runs.
     */
   protected def assertZonePassMetadataOnly(storeDir: String, colName: String, lo: String, hi: String): Unit = {
     import graft.encode.{MetaIndex, Snapshots, StoreLayout}
-    val probeRows = StoreLayout.probeRows(Snapshots.storeDf(spark, storeDir),
-      Seq(MetaIndex.zoneHitOn(colName, Some(lo), Some(hi))))
-    for (pass <- Seq(MetaIndex.candidateKeys(spark, storeDir, colName, lo, hi), probeRows)) {
-      val leaves = scanStructLeaves(pass)
-      assert(leaves.nonEmpty, s"no chunk structs in the zone pass of $colName")
-      leaves.foreach { case (n, fields) =>
-        assert(fields.subsetOf(Set("name", "dt", "minKey", "maxKey")),
-          s"zone pass must not read payload/sha of $n, got $fields")
-      }
+    val leaves = scanStructLeaves(StoreLayout.probeRows(Snapshots.storeDf(spark, storeDir),
+      Seq(MetaIndex.zoneHitOn(colName, Some(lo), Some(hi)))))
+    assert(leaves.nonEmpty, s"no chunk structs in the zone pass of $colName")
+    leaves.foreach { case (n, fields) =>
+      assert(fields.subsetOf(Set("name", "dt", "minKey", "maxKey")),
+        s"zone pass must not read payload/sha of $n, got $fields")
     }
   }
 
@@ -110,4 +107,29 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val numericDts = Set("bigint", "int", "smallint", "tinyint", "boolean",
+    "double", "float", "date", "timestamp", "timestamp_ntz")
+
+  /** Blocks whose zone on `colName` may intersect [lo, hi], decided
+    * on the typed blocks: `MetaIndex.zoneHit`'s rule restated in plain
+    * Scala, a reference for the store-side pruning.
+    */
+  def zoneCandidates(blocks: Dataset[EncodedBlock], colName: String,
+                     lo: String, hi: String): Dataset[EncodedBlock] =
+    blocks.filter { b =>
+      b.cols.find(_.name == colName).forall { c =>
+        val numeric = numericDts.contains(c.dt) || c.dt.startsWith("decimal")
+        if (c.minKey.isEmpty && c.maxKey.isEmpty) true
+        else if (numeric) {
+          val minV = if (c.minKey.isEmpty) Double.NegativeInfinity else c.minKey.toDouble
+          val maxV = if (c.maxKey.isEmpty) Double.PositiveInfinity else c.maxKey.toDouble
+          !(maxV < lo.toDouble || minV > hi.toDouble)
+        } else {
+          import java.nio.charset.StandardCharsets.UTF_8
+          def cmp(a: String, b: String) = java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+          (c.maxKey.isEmpty || cmp(c.maxKey, lo) >= 0) && (c.minKey.isEmpty || cmp(c.minKey, hi) <= 0)
+        }
+      }
+    }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** The store-read path: reads whose candidate set exceeds the pushdown
-  * cap (left-semi join instead of pushed chunk keys), the Spark job
-  * count of every probe entry point, the zone-hit expression and the
-  * driver cache's invalidation rule.
+  * cap (the store scan filtered by the zone hit, or a left-semi join for
+  * key lists, instead of pushed chunk keys), the Spark job count of
+  * every probe entry point, the zone-hit expression and the driver
+  * cache's invalidation rule.
   */
 class StoreReadSpec extends SparkTestBase {
 
@@ -85,19 +86,20 @@ class StoreReadSpec extends SparkTestBase {
   }
 
   /** The chunk read a zone lookup of [lo, hi] on `c` runs: the probe's
-    * candidate keys through StoreLayout.readChunks.
+    * candidate keys through StoreLayout.readChunks, the store scan
+    * filtered by the zone hit past the cap.
     */
   private def candidateRead(dir: String, c: String, lo: String, hi: String) = {
-    val keys = StoreLayout.probe(Snapshots.storeDf(spark, dir), Seq(MetaIndex.zoneHitOn(c, Some(lo), Some(hi))),
-      needCounts = false).keys.head
-    StoreLayout.readChunks(spark, dir, MetaIndex.candidateKeys(spark, dir, c, lo, hi), keys, null)
+    val hit = MetaIndex.zoneHitOn(c, Some(lo), Some(hi))
+    val keys = StoreLayout.probe(Snapshots.storeDf(spark, dir), Seq(hit), needCounts = false).keys.head
+    StoreLayout.readChunks(spark, dir, keys, null)(_.filter(hit))
   }
 
-  test("over-cap lookup equals the raw filter and fetches by left-semi join") {
+  test("over-cap lookup equals the raw filter and fetches by its zone filter") {
     val got = MetaIndex.lookup(spark, wideDir, wide.schema, "s", "const", "const")
     assertSameRows(got, wide, "lookup(s = const)")
     val plan = candidateRead(wideDir, "s", "const", "const").queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), s"over-cap fetch must semi-join:\n$plan")
+    assert(!plan.contains("LeftSemi"), s"over-cap zone fetch must not join:\n$plan")
     assert(!plan.contains("EqualTo(chunkId"), s"over-cap fetch must not push chunk keys:\n$plan")
   }
 
@@ -139,7 +141,7 @@ class StoreReadSpec extends SparkTestBase {
     var mm: MetaAgg.MinMaxAll = null
     val n = jobs("minmax-split") { mm = MetaAgg.minMaxAll(spark, dir, df.schema, Seq("d", "f")) }
     // the aggregate, ONE probe for both columns' keys, two one-column decodes
-    assert(n <= 8, s"minMaxAll(d, f) ran $n jobs, pinned at most 8")
+    assert(n <= 7, s"minMaxAll(d, f) ran $n jobs, pinned at most 7")
     val raw = df.agg(min(when(!isnan(col("d")), col("d"))), max(when(!isnan(col("d")), col("d"))),
       min(when(!isnan(col("f")), col("f"))), max(when(!isnan(col("f")), col("f")))).head()
     assert(mm.nRows == 2600L)
@@ -204,8 +206,8 @@ class StoreReadSpec extends SparkTestBase {
     * every store-read decision is one probe job, never incremental takes.
     */
   private val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "plan" -> 1, "lookup.cold" -> 3, "lookup.warm" -> 1,
-    "queryAnd" -> 3, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 2,
-    "wide.queryAnd" -> 3, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 6, "isin" -> 2, "wide.isin" -> 3)
+    "queryAnd" -> 3, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 1,
+    "wide.queryAnd" -> 2, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 5, "isin" -> 2, "wide.isin" -> 3)
 
   test("probe entry points run the pinned number of Spark jobs") {
     val schema = corpus.schema
@@ -298,7 +300,7 @@ class StoreReadSpec extends SparkTestBase {
   test("Planner.query over the caps: zone candidates past the pushdown cap") {
     val dir = copyStore(wideDir)
     IndexStore.createFull(spark, dir, wide.schema, "id")
-    // 1,300 zone candidates: the scan path reads by left-semi join
+    // 1,300 zone candidates: the scan path reads the store filtered by the zone hit
     checkQuery(dir, wide, "id", "0", "2599", "zone-scan", col("id").between(0L, 2599L))
     checkQuery(dir, wide, "id", "10", "11", "index-gather", col("id").between(10L, 11L))
   }
@@ -470,7 +472,7 @@ class StoreReadSpec extends SparkTestBase {
     assertSameBlocks(StoreLayout.blockRdd(narrow).collect().toSeq, narrow.rdd.collect().toSeq, "two columns")
     val some = StoreLayout.readBlocksByKeys(spark, wideDir, all.take(5).map(b => (b.shard, b.partId, b.chunkId)))
     assertSameBlocks(StoreLayout.blockRdd(some).collect().toSeq, some.rdd.collect().toSeq, "pushed keys")
-    val typed = MetaIndex.candidateBlocks(blocks, "id", "0", "99")
+    val typed = SparkTestBase.zoneCandidates(blocks, "id", "0", "99")
     assertSameBlocks(StoreLayout.blockRdd(typed).collect().toSeq, typed.rdd.collect().toSeq, "typed filter")
     val encoded = TableCodec.encode(wide.limit(40), chunkRows = 8)
     assertSameBlocks(StoreLayout.blockRdd(encoded).collect().toSeq, encoded.rdd.collect().toSeq, "encode output")
@@ -548,11 +550,11 @@ class StoreReadSpec extends SparkTestBase {
       val cases: Seq[(String, Column, Column)] =
         pairs.map { case (lo, hi) =>
           (s"[$lo, $hi]", Replaced.intersectsExprOn(mn, mx, dt, lo, hi),
-            MetaIndex.zoneHit(mn, mx, dt, Some(lo), Some(hi)))
+            MetaIndex.zoneHit(mn, mx, dt, Some(lit(lo)), Some(lit(hi))))
         } ++ probes.map(lo =>
-          (s"[$lo, +inf)", Replaced.intersectsLoExpr(lo), MetaIndex.zoneHit(mn, mx, dt, Some(lo), None))
+          (s"[$lo, +inf)", Replaced.intersectsLoExpr(lo), MetaIndex.zoneHit(mn, mx, dt, Some(lit(lo)), None))
         ) ++ probes.map(hi =>
-          (s"(-inf, $hi]", Replaced.intersectsHiExpr(hi), MetaIndex.zoneHit(mn, mx, dt, None, Some(hi))))
+          (s"(-inf, $hi]", Replaced.intersectsHiExpr(hi), MetaIndex.zoneHit(mn, mx, dt, None, Some(lit(hi)))))
       val aggs = cases.zipWithIndex.flatMap { case ((_, before, after), i) =>
         Seq(sum(when(before <=> after, 0L).otherwise(1L)).as(s"diff$i"),
           sum(when(after, 1L).otherwise(0L)).as(s"hits$i"))

@@ -9,7 +9,8 @@ skipped: the compiler or a supertype calls them. Symbolic names are
 skipped too.
 
 Report only: prints `path:line  kind name` per entry, sorted, then a
-count, and always exits 0.
+count and the main-code size (every line of every `.scala` file under
+src/main), and always exits 0.
 
     python3 tools/no_caller.py            # from the repository root
 """
@@ -82,6 +83,12 @@ def sources():
 
 
 def main():
+    main_lines = 0
+    for d, _, files in os.walk("src/main"):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(d, f), encoding="utf-8") as fh:
+                    main_lines += sum(1 for _ in fh)
     code = dict(sources())
     uses = {}
     for text in code.values():
@@ -102,6 +109,7 @@ def main():
     for p, lineno, kind, name in sorted(unused):
         print(f"{p}:{lineno}  {kind} {name}")
     print(f"{len(unused)} of {len(defs)} defs/objects have no reference", file=sys.stderr)
+    print(f"main code: {main_lines} lines", file=sys.stderr)
     return 0
 
 
