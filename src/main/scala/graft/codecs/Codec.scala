@@ -407,16 +407,14 @@ object ChunkCodec {
     }
   }
 
-  /** Bytes of an encoded block after its header (the entropy-stage
-    * output, or the raw method body when stored uncompressed).
-    */
-  def payloadLen(block: Array[Byte]): Int = {
-    val r = new Bytes.Reader(block, 6)
-    r.getVarInt(); r.getVarInt(); r.getVarInt()
-    block.length - r.pos
-  }
+  /** An encoded block's header, read by every reader of a block. */
+  private final case class Header(colType: Byte, method: Byte, entropy: Byte, n: Int, nulls: Int,
+                                  rawLen: Int, bodyPos: Int)
 
-  def decode(block: Array[Byte]): ColVec = {
+  /** Parse and bound `block`'s header once; a damaged field throws an
+    * IllegalStateException that names it.
+    */
+  private def header(block: Array[Byte]): Header = {
     val r = new Bytes.Reader(block)
     require(r.getByte() == MAGIC, "bad magic")
     require(r.getByte() == VERSION, "bad version")
@@ -427,19 +425,48 @@ object ChunkCodec {
     val n = r.getVarInt()
     val nulls = r.getVarInt()
     val rawLen = r.getVarInt()
-    // body reader: uncompressed payloads are read IN PLACE from the
-    // block; compressed ones land in the per-thread scratch (safe: every
-    // kernel's read API copies what it keeps — nothing aliases the
-    // reader's buffer past this call)
-    val body =
-      if (entropy == Entropy.NONE) new Bytes.Reader(block, r.pos)
+    def damaged(what: String) = throw new IllegalStateException(s"damaged chunk header: $what")
+    if (n < 0) damaged(s"n = $n is negative")
+    if (nulls < 0 || nulls > n) damaged(s"nulls = $nulls is outside [0, n = $n]")
+    if (entropy == Entropy.NONE && rawLen != block.length - r.pos)
+      damaged(s"rawLen = $rawLen, but ${block.length - r.pos} uncompressed body bytes follow the header")
+    Header(colType, method, entropy, n, nulls, rawLen, r.pos)
+  }
+
+  /** The body reader and validity (null: no nulls) of the block `h`
+    * heads. Uncompressed payloads are read IN PLACE from the block;
+    * compressed ones land in the per-thread scratch (safe: every
+    * kernel's read API copies what it keeps — nothing aliases the
+    * reader's buffer past this call). A bitmap whose null count is not
+    * the header's `nulls` throws.
+    */
+  private def body(block: Array[Byte], h: Header): (Bytes.Reader, Array[Boolean]) = {
+    val r =
+      if (h.entropy == Entropy.NONE) new Bytes.Reader(block, h.bodyPos)
       else new Bytes.Reader(
-        Entropy.decompressScratch(entropy, block, r.pos, block.length - r.pos, rawLen))
-    val validity = if (nulls > 0) readValidity(body, n) else null
-    colType match {
-      case ColType.LONG => LongVec(LongKernels.decode(method, body, n, validity), validity)
-      case ColType.DOUBLE => DoubleVec(DoubleKernels.decode(method, body, n, validity), validity)
-      case ColType.BIN => BinVec(BinKernels.decode(method, body, n, validity), validity)
+        Entropy.decompressScratch(h.entropy, block, h.bodyPos, block.length - h.bodyPos, h.rawLen))
+    val validity = if (h.nulls > 0) readValidity(r, h.n) else null
+    if (validity != null) {
+      var nulls, i = 0
+      while (i < h.n) { if (!validity(i)) nulls += 1; i += 1 }
+      if (nulls != h.nulls) throw new IllegalStateException(
+        s"damaged chunk header: nulls = ${h.nulls}, but the validity bitmap holds $nulls")
+    }
+    (r, validity)
+  }
+
+  /** Bytes of an encoded block after its header (the entropy-stage
+    * output, or the raw method body when stored uncompressed).
+    */
+  def payloadLen(block: Array[Byte]): Int = block.length - header(block).bodyPos
+
+  def decode(block: Array[Byte]): ColVec = {
+    val h = header(block)
+    val (r, validity) = body(block, h)
+    h.colType match {
+      case ColType.LONG => LongVec(LongKernels.decode(h.method, r, h.n, validity), validity)
+      case ColType.DOUBLE => DoubleVec(DoubleKernels.decode(h.method, r, h.n, validity), validity)
+      case ColType.BIN => BinVec(BinKernels.decode(h.method, r, h.n, validity), validity)
       case t => throw new IllegalArgumentException(s"colType $t")
     }
   }
@@ -454,29 +481,17 @@ object ChunkCodec {
     * CONST chunks are served by a single compare (all-or-nothing).
     */
   def dictEqualityPositions(block: Array[Byte], targets: Array[Array[Byte]]): Option[Array[Int]] = {
-    val r = new Bytes.Reader(block)
-    require(r.getByte() == MAGIC, "bad magic")
-    require(r.getByte() == VERSION, "bad version")
-    val colType = r.getByte().toByte
-    val method = r.getByte().toByte
-    val entropy = r.getByte().toByte
-    r.getByte() // level
-    if (colType != ColType.BIN || (method != Method.DICT && method != Method.CONST)) return None
-    val n = r.getVarInt()
-    val nulls = r.getVarInt()
-    val rawLen = r.getVarInt()
-    val body =
-      if (entropy == Entropy.NONE) new Bytes.Reader(block, r.pos)
-      else new Bytes.Reader(
-        Entropy.decompressScratch(entropy, block, r.pos, block.length - r.pos, rawLen))
-    val validity = if (nulls > 0) readValidity(body, n) else null
-    if (method == Method.CONST) {
+    val h = header(block)
+    if (h.colType != ColType.BIN || (h.method != Method.DICT && h.method != Method.CONST)) return None
+    val (r, validity) = body(block, h)
+    val n = h.n
+    if (h.method == Method.CONST) {
       if (n == 0) return Some(Array.emptyIntArray)
-      val v = body.getBytes(body.getVarInt())
+      val v = r.getBytes(r.getVarInt())
       val hit = targets.exists(t => java.util.Arrays.equals(t, v))
       if (!hit) Some(Array.emptyIntArray)
       else Some(Array.range(0, n).filter(i => validity == null || validity(i)))
-    } else Some(BinKernels.dictEqualityPositions(body, n, validity, targets))
+    } else Some(BinKernels.dictEqualityPositions(r, n, validity, targets))
   }
 
   private def writeValidity(validity: Array[Boolean], w: Bytes.Writer): Unit = {

@@ -162,13 +162,13 @@ object GraftFunctions {
     * partial+final safe as a grouped aggregate too.
     */
   object ProdAgg extends Aggregator[java.lang.Double, Double, Double] {
-    def zero: Double = 1.0
-    def reduce(b: Double, a: java.lang.Double): Double = if (a == null) b else b * a
-    def merge(x: Double, y: Double): Double = x * y
-    def finish(r: Double): Double = r
-    def bufferEncoder: org.apache.spark.sql.Encoder[Double] =
+    override def zero: Double = 1.0
+    override def reduce(b: Double, a: java.lang.Double): Double = if (a == null) b else b * a
+    override def merge(x: Double, y: Double): Double = x * y
+    override def finish(r: Double): Double = r
+    override def bufferEncoder: org.apache.spark.sql.Encoder[Double] =
       org.apache.spark.sql.Encoders.scalaDouble
-    def outputEncoder: org.apache.spark.sql.Encoder[Double] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[Double] =
       org.apache.spark.sql.Encoders.scalaDouble
   }
 
@@ -182,13 +182,13 @@ object GraftFunctions {
     * pairs — partial+final mergeable, registrable as a UDAF.
     */
   object RatioAgg extends Aggregator[(Long, Long), (Long, Long), Double] {
-    def zero: (Long, Long) = (0L, 0L)
-    def reduce(b: (Long, Long), a: (Long, Long)): (Long, Long) = (b._1 + a._1, b._2 + a._2)
-    def merge(x: (Long, Long), y: (Long, Long)): (Long, Long) = (x._1 + y._1, x._2 + y._2)
-    def finish(r: (Long, Long)): Double = if (r._2 == 0) 0.0 else r._1.toDouble / r._2
-    def bufferEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
+    override def zero: (Long, Long) = (0L, 0L)
+    override def reduce(b: (Long, Long), a: (Long, Long)): (Long, Long) = (b._1 + a._1, b._2 + a._2)
+    override def merge(x: (Long, Long), y: (Long, Long)): (Long, Long) = (x._1 + y._1, x._2 + y._2)
+    override def finish(r: (Long, Long)): Double = if (r._2 == 0) 0.0 else r._1.toDouble / r._2
+    override def bufferEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
       org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    def outputEncoder: org.apache.spark.sql.Encoder[Double] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[Double] =
       org.apache.spark.sql.Encoders.scalaDouble
   }
 }

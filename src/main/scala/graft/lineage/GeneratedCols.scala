@@ -80,7 +80,7 @@ object GeneratedCols {
     */
   def staleShards(spark: SparkSession, storeDir: String, name: String): Seq[Int] = {
     val cur = fingerprints(spark, storeDir)
-    val saved = spark.read.parquet(statePath(storeDir, name))
+    val saved = spark.read.parquet(Lineage.dataFiles(spark, statePath(storeDir, name)): _*)
       .withColumnRenamed("fingerprint", "saved")
     cur.join(saved, Seq("shard"), "left")
       .filter(col("saved").isNull || col("saved") =!= col("fingerprint"))

@@ -95,15 +95,24 @@ object Lineage {
     * encodeResumable delete and re-encode every shard.
     */
   def completedShards(spark: SparkSession, outDir: String): Set[Int] = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (!committed) Set.empty
-    else spark.read.schema(Encoders.product[ShardManifest].schema).parquet(p.toString)
+    val files = dataFiles(spark, manifestPath(outDir))
+    if (files.isEmpty) Set.empty
+    else spark.read.schema(Encoders.product[ShardManifest].schema).parquet(files: _*)
       .select("shard").collect().map(_.getInt(0)).toSet
+  }
+
+  /** The entries of `dir` whose names do not start with `_` or `.`
+    * (none when `dir` is absent). A side table kept under a hidden path
+    * (`_manifest`, a generated column's `_state`) is read through these:
+    * given the hidden directory itself, Spark ignores it with a warning.
+    */
+  private[lineage] def dataFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).map(_.getPath).filter { f =>
+      !f.getName.startsWith("_") && !f.getName.startsWith(".")
+    }.map(_.toString).toSeq
   }
 
   /** The store's lineage shard count, from the manifest (one row per

@@ -551,4 +551,31 @@ class CodecSpec extends SparkTestBase {
       assert(java.util.Arrays.equals(sha(outB), sha(bigText)), s"B m=$mA e=$e")
     }
   }
+  test("a damaged header field is an IllegalStateException naming it, on decode and dictionary equality") {
+    // 40 DICT strings, every 7th null (6 nulls), stored uncompressed
+    val vals = Array.tabulate(40)(i => s"v${i % 3}".getBytes(UTF_8))
+    val validity = Array.tabulate(40)(_ % 7 != 0)
+    val block = ChunkCodec.encode(BinVec(vals, validity), Plan(Method.DICT, Entropy.NONE))
+    val r = new Bytes.Reader(block, 6)
+    val (n, nulls, rawLen) = (r.getVarInt(), r.getVarInt(), r.getVarInt())
+    assert(n == 40 && nulls == 6 && rawLen == block.length - r.pos)
+    def reheader(n2: Int, nulls2: Int, rawLen2: Int): Array[Byte] = {
+      val w = new Bytes.Writer(32)
+      w.putBytes(block, 0, 6); w.putVarInt(n2); w.putVarInt(nulls2); w.putVarInt(rawLen2)
+      java.util.Arrays.copyOf(w.rawBuffer, w.size) ++ block.drop(r.pos)
+    }
+    assert(ChunkCodec.dictEqualityPositions(reheader(n, nulls, rawLen), Array("v1".getBytes(UTF_8)))
+      .exists(_.toSeq == (0 until 40).filter(i => i % 3 == 1 && i % 7 != 0)))
+    val damaged = Seq(
+      "n = -1" -> reheader(-1, nulls, rawLen),
+      "nulls = 41" -> reheader(n, n + 1, rawLen),
+      "nulls = -1" -> reheader(n, -1, rawLen),
+      "validity bitmap holds 6" -> reheader(n, nulls - 1, rawLen),
+      s"rawLen = ${rawLen + 1}" -> reheader(n, nulls, rawLen + 1))
+    for ((field, b) <- damaged) {
+      val e1 = intercept[IllegalStateException](ChunkCodec.decode(b))
+      val e2 = intercept[IllegalStateException](ChunkCodec.dictEqualityPositions(b, Array("v1".getBytes(UTF_8))))
+      for (e <- Seq(e1, e2)) assert(e.getMessage.contains(field), s"$field: ${e.getMessage}")
+    }
+  }
 }

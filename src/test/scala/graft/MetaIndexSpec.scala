@@ -220,7 +220,7 @@ class MetaIndexSpec extends SparkTestBase {
 
     // corpus store: no nulls, no overflow → sums/counts are pure metadata
     val expSum = df.agg(sum("row_id")).head().getLong(0)
-    assert(MetaAgg.sumLong(spark, storeDir, df.schema, "row_id").contains(expSum))
+    assert(MetaAgg.stats(spark, storeDir, df.schema, Seq("row_id"), Nil).sums("row_id").contains(expSum))
     assert(MetaAgg.stats(spark, storeDir, null, Nil, Seq("repo")).nonNull("repo") == 2000L)
 
     // group-by on a low-cardinality column: histograms alive in every
@@ -261,7 +261,7 @@ class MetaIndexSpec extends SparkTestBase {
 
     val expExact = dd.agg(sum(col("v").cast(DecimalType(38, 0)))).head()
       .getDecimal(0).toBigIntegerExact.longValueExact()
-    assert(MetaAgg.sumLong(spark, dir2, dd.schema, "v").contains(expExact))
+    assert(MetaAgg.stats(spark, dir2, dd.schema, Seq("v"), Nil).sums("v").contains(expExact))
     val expNN = dd.filter(col("v").isNotNull).count()
     assert(MetaAgg.stats(spark, dir2, null, Nil, Seq("v")).nonNull("v") == expNN)
 
@@ -276,14 +276,14 @@ class MetaIndexSpec extends SparkTestBase {
     val ddNull = (0 until 50).map(i => (i.toLong, null: java.lang.Long)).toDF("id", "v").coalesce(1)
     val dir3 = tmpDir("metaagg-null")
     StoreLayout.write(TableCodec.encode(ddNull, chunkRows = 20), ddNull.schema.fieldNames.toSeq, dir3)
-    assert(MetaAgg.sumLong(spark, dir3, ddNull.schema, "v").isEmpty)
+    assert(MetaAgg.stats(spark, dir3, ddNull.schema, Seq("v"), Nil).sums("v").isEmpty)
     assert(MetaAgg.stats(spark, dir3, null, Nil, Seq("v")).nonNull("v") == 0L)
 
     // float sums are order-dependent — pushdown must refuse, not lie
     val ddD = Seq((1L, 0.5), (2L, 1.5)).toDF("id", "v").coalesce(1)
     val dir4 = tmpDir("metaagg-dbl")
     StoreLayout.write(TableCodec.encode(ddD, chunkRows = 10), ddD.schema.fieldNames.toSeq, dir4)
-    intercept[IllegalArgumentException] { MetaAgg.sumLong(spark, dir4, ddD.schema, "v") }
+    intercept[IllegalArgumentException] { MetaAgg.stats(spark, dir4, ddD.schema, Seq("v"), Nil) }
   }
 }
 

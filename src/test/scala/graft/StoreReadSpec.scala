@@ -140,8 +140,8 @@ class StoreReadSpec extends SparkTestBase {
     assert(unbounded("d") > StoreLayout.MAX_PUSHDOWN_KEYS && unbounded("f") == 5L)
     var mm: MetaAgg.MinMaxAll = null
     val n = jobs("minmax-split") { mm = MetaAgg.minMaxAll(spark, dir, df.schema, Seq("d", "f")) }
-    // the aggregate, ONE probe for both columns' keys, two one-column decodes
-    assert(n <= 7, s"minMaxAll(d, f) ran $n jobs, pinned at most 7")
+    // the aggregate, ONE probe for both columns' keys, ONE aggregate over both columns' decodes
+    assert(n <= 5, s"minMaxAll(d, f) ran $n jobs, pinned at most 5")
     val raw = df.agg(min(when(!isnan(col("d")), col("d"))), max(when(!isnan(col("d")), col("d"))),
       min(when(!isnan(col("f")), col("f"))), max(when(!isnan(col("f")), col("f")))).head()
     assert(mm.nRows == 2600L)
@@ -207,7 +207,8 @@ class StoreReadSpec extends SparkTestBase {
     */
   private val pinned = Map("query.gather" -> 2, "query.scan" -> 2, "plan" -> 1, "lookup.cold" -> 3, "lookup.warm" -> 1,
     "queryAnd" -> 3, "bucketProbe" -> 3, "minMaxAll.fallback" -> 5, "wide.lookup.warm" -> 1,
-    "wide.queryAnd" -> 2, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 5, "isin" -> 2, "wide.isin" -> 3)
+    "wide.queryAnd" -> 2, "wide.bucketProbe" -> 4, "wide.minMaxAll" -> 5, "wide.stats" -> 5,
+    "wide.groupCountAll" -> 3, "isin" -> 2, "wide.isin" -> 3)
 
   test("probe entry points run the pinned number of Spark jobs") {
     val schema = corpus.schema
@@ -243,6 +244,9 @@ class StoreReadSpec extends SparkTestBase {
 
     counts("wide.minMaxAll") = jobs("wide-minmax")(
       MetaAgg.minMaxAll(spark, wideDir, wide.schema, Seq("d", "s", "big")))
+    counts("wide.stats") = jobs("wide-stats")(MetaAgg.stats(spark, wideDir, wide.schema, Seq("big", "grp"), Nil))
+    counts("wide.groupCountAll") = jobs("wide-groupCount")(
+      MetaAgg.groupCountAll(spark, wideDir, wide.schema, Seq("s", "grp", "big")).collect())
     counts("wide.isin") = jobs("wide-isin")(DictFilter.isinScan(spark, wideDir, wide.schema, "s", Seq("const")).count())
     assert(counts.toMap == pinned)
   }

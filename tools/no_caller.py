@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """List every `def` and `object` under src/main that nothing references.
 
-A name counts as referenced when it appears, outside comments, anywhere
-in src/main, perfbench/src or tools other than at its own definition.
+A name counts as referenced when it appears, outside comments and
+string literals, anywhere in src/main, perfbench/src or tools other than
+at its own definition (the `$name` / `${...}` splices of an interpolated
+Scala string are code, so they count).
 Matching is by name only, so an overloaded or shared name is referenced
 when any use of that name exists. `implicit` and `override` members are
 skipped: the compiler or a supertype calls them. Symbolic names are
@@ -23,24 +25,62 @@ DEF = re.compile(r"\b(def|object)\s+([A-Za-z_][A-Za-z0-9_]*)")
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
+def splice_end(text, i):
+    """Index just past the `}` closing the `${` that starts at `i`."""
+    depth, j = 1, i + 2
+    while j < len(text) and depth:
+        depth += {"{": 1, "}": -1}.get(text[j], 0)
+        j += 1
+    return j
+
+
+def blank_string(lit, interpolated):
+    """String literal `lit` (quotes included) with its text blanked
+    (newlines kept). An interpolated literal keeps its `$name` and
+    `${...}` splices, themselves stripped: they are code."""
+    out, i, n = [], 0, len(lit)
+    while i < n:
+        if interpolated and lit.startswith("${", i):
+            j = splice_end(lit, i)
+            out.append(strip_scala(lit[i:j]))
+            i = j
+            continue
+        m = re.match(r"\$[A-Za-z_][A-Za-z0-9_]*", lit[i:]) if interpolated else None
+        if m:
+            out.append(m.group(0))
+            i += len(m.group(0))
+            continue
+        out.append(lit[i] if lit[i] in '"\n' else " ")
+        i += 1
+    return "".join(out)
+
+
 def strip_scala(text):
-    """`text` with comments blanked out (newlines kept, so line numbers
-    hold); string and character literals are kept."""
+    """`text` with comments blanked out and string literals blanked
+    except for the `$name` / `${...}` splices of interpolated ones
+    (newlines kept, so line numbers hold); character literals are
+    kept."""
     out, i, n = [], 0, len(text)
     while i < n:
         c = text[i]
+        interpolated = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
         if text.startswith('"""', i):
-            j = text.find('"""', i + 3)
-            j = n if j < 0 else j + 3
+            j = i + 3
+            while j < n and not text.startswith('"""', j):
+                j = splice_end(text, j) if interpolated and text.startswith("${", j) else j + 1
+            j = n if j >= n else j + 3
             while j < n and text[j] == '"':  # """...""""" closes on the last quote
                 j += 1
-            out.append(text[i:j])
+            out.append(blank_string(text[i:j], interpolated))
             i = j
         elif c == '"':
             j = i + 1
             while j < n and text[j] not in '"\n':
-                j += 2 if text[j] == "\\" else 1
-            out.append(text[i:j + 1])
+                if interpolated and text.startswith("${", j):
+                    j = splice_end(text, j)
+                else:
+                    j += 2 if text[j] == "\\" else 1
+            out.append(blank_string(text[i:j + 1], interpolated))
             i = j + 1
         elif c == "'" and re.match(r"'(\\.|[^\\'\n])'", text[i:i + 8]):
             j = text.index("'", i + 2 if text[i + 1] != "\\" else i + 3)
